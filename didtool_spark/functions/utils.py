@@ -37,6 +37,27 @@ def bounded_sample_pandas(proj: DataFrame, sample_limit: int, seed: int = 0):
     return proj.toPandas()
 
 
+def bounded_pull(df: DataFrame, cap: int):
+    """``df`` as pandas when it has at most ``cap`` rows, else ``None``
+    (the caller runs its distributed fallback).  Floats come back masked
+    (``Float64``), so NULL stays apart from NaN, and
+    ``createDataFrame(pdf, schema=<from the Spark input>)`` round-trips
+    both, empty or not.  Count-then-pull: on ``local[2]``, 3M-row join
+    stream, warm, count + pull ~0.9 s vs ``limit(cap + 1).count()``
+    1.15 s and a ``limit(cap + 1)`` pull 1.8-2.0 s (GlobalLimit funnels
+    every row through one task; ``binning.collect_capped`` keeps the
+    limit for <= 100k rows).  Known cost: above the cap the count is an
+    extra pass over an un-materialized ``df``; materializing it measured
+    slower at sf1.0 (checkpoint + collect 23 s, count + collect 16 s)."""
+    if df.count() > cap:
+        return None
+    import pandas as pd
+    import pyarrow as pa
+
+    masked = {pa.float64(): pd.Float64Dtype(), pa.float32(): pd.Float32Dtype()}
+    return df.toArrow().to_pandas(types_mapper=masked.get)
+
+
 class Logger:
     """Reference didtool/logger.py:12-26: tee stdout writes to a log
     file, flushing per write (assign to sys.stdout like the reference's

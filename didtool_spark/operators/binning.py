@@ -55,7 +55,9 @@ def collect_capped(agg_df: DataFrame, max_distinct: int | None) -> list | None:
     limit also lets Spark stop the final stage early — the common
     small-vocabulary case costs exactly the one aggregation it always
     did. Only ``None`` means uncapped; a zero/negative cap is a caller
-    bug, not an implicit "collect everything"."""
+    bug, not an implicit "collect everything".  (Multi-million-row
+    pulls use ``functions.utils.bounded_pull``'s count gate instead; at
+    this cap a count would run the groupBy twice.)"""
     if max_distinct is None:
         return agg_df.collect()
     if max_distinct <= 0:

@@ -30,6 +30,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.utils import bounded_pull
 from .text import tokens_expr, window_concat_expr
 
 
@@ -725,22 +726,25 @@ def _driver_union_find(edges: list[tuple[int, int]]):
 
 
 def _numpy_union_find(u, v):
-    """Vectorized exact components over int64 edge arrays: min-label
+    """Vectorized exact components over two id columns: min-label
     propagation with pointer jumping — every pass is a handful of O(E)
     numpy kernels, so millions of edges resolve in well under a second
     where the dict-based union-find above spends seconds in the
-    interpreter.  Returns (node_ids, component_min_id) arrays with the
-    SAME labels as ``_driver_union_find`` (component = min node id):
-    labels only ever decrease, a fixpoint is constant on every edge, and
-    since labels always index nodes INSIDE the component the constant
-    can only be the component's min index (parity asserted in
+    interpreter.  Returns (node_ids, component_min_id) with the SAME
+    labels as ``_driver_union_find`` (component = min node id): labels
+    only ever decrease, a fixpoint is constant on every edge, and since
+    labels always index nodes INSIDE the component (ids factorized in
+    sorted order; a masked-float NaN sorts last, as in Spark) the
+    constant can only be the component's min index (parity asserted in
     tests/test_pipeline_ops.py)."""
     import numpy as np
 
-    ids = np.unique(np.concatenate([u, v]))
-    iu = ids.searchsorted(u)
-    iv = ids.searchsorted(v)
-    lbl = np.arange(ids.shape[0], dtype=np.int64)
+    m = len(u)
+    codes, ids = pd.factorize(
+        pd.concat([pd.Series(u), pd.Series(v)], ignore_index=True), sort=True
+    )
+    iu, iv = codes[:m], codes[m:]
+    lbl = np.arange(len(ids), dtype=np.int64)
     while True:
         prev = lbl
         mn = np.minimum(lbl[iu], lbl[iv])
@@ -755,29 +759,28 @@ def _numpy_union_find(u, v):
     return ids, ids[lbl]
 
 
+# driver union-find cap: 30M raw edges is ~480 MB of longs on the driver
+# and about a second of numpy; a near-dup pair graph only exceeds it at
+# corpus scales where the iterative path is the point
+_DRIVER_EDGES = 30_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 50,
-    max_driver_edges: int | None = 30_000_000,
 ) -> DataFrame:
     """Resolve a candidate-pair graph into components: (id, component)
     with ``component`` = the MIN node id of each connected component.
     Nodes appearing in no pair are absent (callers coalesce to self —
-    see ``dedup_clusters``).
+    see ``dedup_clusters``).  Edges with a NULL id never match and are
+    dropped.
 
-    Small graphs short-circuit: when the distinct edge set has at most
-    ``max_driver_edges`` rows (one cheap count on the materialized
-    edges) it is pulled over Arrow and resolved by the exact vectorized
-    union-find (``_numpy_union_find``) — the same
-    capped-collect-with-distributed-fallback pattern as the binning
-    fits (binning.py collect_capped). 30M edges is ~480 MB of longs on
-    the driver (well inside the session's driver memory) and resolves
-    in about a second of numpy; a near-dup pair graph only exceeds
-    that at corpus scales where the iterative path below is the point.
-    Pass ``max_driver_edges=None`` (or 0) to force the distributed
-    path.
+    Graphs of at most ``_DRIVER_EDGES`` raw edges resolve on the driver
+    by the exact vectorized union-find (``_numpy_union_find``) over one
+    ``functions.utils.bounded_pull``; larger ones take the distributed
+    path below.
 
     Algorithm (distributed path): alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -804,40 +807,25 @@ def connected_components(
       checksum — one tiny aggregate per round, no expensive
       ``exceptAll`` diff.
     """
-    # Materialize the input edges ONCE before iterating: every round
-    # references `e` several times (the und self-union, the m join), so
-    # an un-checkpointed pair lineage — e.g. the whole MinHash candidate
-    # pipeline — would re-execute per reference in round 1. After this,
-    # each round starts from a materialized edge table.  The driver
-    # short-circuit skips the `.distinct()` shuffle entirely (r6):
-    # union-find is idempotent under duplicate/reversed edges, so the
-    # raw pair stream feeds it directly and only the iterative path
-    # pays for dedup (where it bounds the per-round edge table).
+    # Materialize the input edges ONCE: every round references `e`
+    # several times, so an un-checkpointed pair lineage (e.g. the whole
+    # MinHash candidate pipeline) would re-execute per reference; the
+    # driver pull's count runs on this table too.  Union-find is
+    # idempotent under duplicate/reversed edges, so only the iterative
+    # path pays for the `.distinct()` shuffle.
     e_raw = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .localCheckpoint(eager=True)
     )
-    if max_driver_edges:
-        # one count on the already-materialized edge table, then either
-        # a single bounded collect or the iterative path — never an
-        # unbounded collect (raw row count >= distinct count, so the
-        # bound stays conservative)
-        n_edges = e_raw.count()
-        if n_edges <= max_driver_edges:
-            # Arrow collect (toPandas) + vectorized union-find: the
-            # r5 version collected pickled Row objects and looped a
-            # dict union-find in the interpreter — at millions of
-            # edges that serial driver loop WAS the query's tail
-            spark = pairs.sparkSession
-            pdf = e_raw.toPandas()
-            if pdf.empty:
-                return spark.createDataFrame([], "id long, component long")
-            ids, comp = _numpy_union_find(
-                pdf["u"].to_numpy(), pdf["v"].to_numpy()
-            )
-            out = pd.DataFrame({"id": ids, "component": comp})
-            return spark.createDataFrame(out, "id long, component long")
+    pdf = bounded_pull(e_raw, _DRIVER_EDGES)
+    if pdf is not None:
+        ids, comp = _numpy_union_find(pdf["u"], pdf["v"])
+        t = e_raw.schema["u"].dataType.simpleString()
+        return pairs.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "component": comp}),
+            schema=f"id {t}, component {t}",
+        )
     e = e_raw.distinct().localCheckpoint(eager=True)
     prev = None
     for _ in range(max_rounds):

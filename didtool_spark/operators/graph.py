@@ -36,52 +36,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.utils import bounded_pull
+
 __all__ = ["pagerank"]
+
+# driver power-iteration cap: 30M edges is ~480 MB of longs
+_DRIVER_EDGES = 30_000_000
 
 
 def _driver_pagerank(
-    e_raw: DataFrame,
+    pdf,
     damping: float,
     iterations: int,
     checkpoint_every: int,
     tol: float | None,
     dedupe: bool,
-) -> DataFrame:
-    """Driver path for graphs whose edge list fits the bounded pull
-    (the connected_components ``_numpy_union_find`` pattern): one Arrow
-    collect of the materialized (src, dst) pairs, then the identical
-    power iteration as vectorized numpy kernels — bincount fan-in
-    instead of a per-round broadcast join.  The update expression tree
-    mirrors the distributed plan term for term (``tele + d * (contrib
-    + mass / n)``; zero-in-degree nodes get contrib == +0.0, which is
-    bit-transparent in the sum), and the tol early-stop runs on the
-    same ``checkpoint_every`` cadence, so both paths land on identical
-    ranks (asserted in tests/test_graph.py on dangling/zero-in
-    graphs)."""
+):
+    """``pagerank``'s power iteration as numpy kernels over the pulled
+    (src, dst) frame: bincount fan-in for the per-round join, the same
+    ``tele + d * (contrib + mass / n)`` update term for term and the
+    same tol cadence, so both paths land on identical ranks."""
     import numpy as np
     import pandas as pd
 
-    spark = e_raw.sparkSession
-    pdf = e_raw.toPandas()
-    if pdf.empty:
-        # same empty contract as the distributed path: zero rows,
-        # (node, rank) schema with the input's id dtype
-        return (
-            e_raw.select(F.col("src").alias("node"))
-            .limit(0)
-            .withColumn("rank", F.lit(0.0))
-        )
-    u = pdf["src"].to_numpy()
-    v = pdf["dst"].to_numpy()
     # hash-based factorize (no 2E-element sort); codes index the node
-    # side arrays below
-    codes, uniques = pd.factorize(np.concatenate([u, v]))
+    # side arrays below.  Masked-float NaN ids are nodes, as in Spark.
+    codes, uniques = pd.factorize(
+        pd.concat([pdf["src"], pdf["dst"]], ignore_index=True)
+    )
     n = len(uniques)
-    m = len(u)
+    if n == 0:
+        return pd.DataFrame({"node": uniques, "rank": np.empty(0)})
+    m = len(pdf)
     si = codes[:m]
     di = codes[m:]
     if dedupe:
-        # distinct edges via packed codes: n <= 2 * max_driver_edges
+        # distinct edges via packed codes: n <= 2 * _DRIVER_EDGES
         # (60M), so si * n + di < n^2 ~ 3.6e15 stays well inside int64
         packed = pd.unique(si * n + di)
         si, di = np.divmod(packed, n)
@@ -106,8 +96,7 @@ def _driver_pagerank(
             prev_ck = rank
             if delta < tol:
                 break
-    out = pd.DataFrame({"node": uniques, "rank": rank})
-    return spark.createDataFrame(out)
+    return pd.DataFrame({"node": uniques, "rank": rank})
 
 
 def pagerank(
@@ -119,7 +108,6 @@ def pagerank(
     checkpoint_every: int = 3,
     tol: float | None = 1e-6,
     broadcast_nodes: int = 8_000_000,
-    max_driver_edges: int | None = 30_000_000,
     dedupe: bool = False,
 ) -> DataFrame:
     """One row per node with its PageRank (uniform 1/N start, uniform
@@ -145,26 +133,23 @@ def pagerank(
     default 8M nodes).  Above the bound the original co-partitioned
     shuffle plan runs unchanged — at 10^9+ nodes a broadcast would not
     fit, which is exactly the regime the shuffle plan is for."""
-    e_in = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # Bounded driver short-circuit (the connected_components pattern,
-    # dedup.py): materialize the pair stream once, ONE cheap count on
-    # the checkpointed table, and when it fits ``max_driver_edges``
-    # (~480 MB of longs) the whole power iteration runs as numpy
-    # kernels on the driver — no edge cache fill, no per-round
-    # broadcast build.  Above the bound (the 100 TB regime) the
-    # materialized table feeds the distributed plan below unchanged.
-    # ``dedupe=True`` declares the input a MULTISET whose duplicates
-    # must not count (driver: vectorized unique; distributed:
-    # .distinct()) — callers that already deduplicate keep the
-    # default and both paths use their rows as-is.
-    if max_driver_edges and e_in.count() <= max_driver_edges:
-        # two passes over the pair stream (count gate, then the Arrow
-        # collect) beat materializing it: checkpointing tens of
-        # millions of rows through the block manager costs more than
-        # re-running a map-side pair build (measured at sf1.0:
-        # checkpoint+collect 23s vs count+collect ~16s)
-        return _driver_pagerank(
-            e_in, damping, iterations, checkpoint_every, tol, dedupe
+    # a NULL id matches no join below, so a NULL-id edge carries no
+    # rank; drop it before either path instead of leaving a NULL node
+    e_in = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    # Graphs of at most _DRIVER_EDGES edges run as numpy on the driver
+    # (functions.utils.bounded_pull).  ``dedupe=True`` declares the
+    # input a MULTISET whose duplicates must not count (driver:
+    # vectorized unique; distributed: .distinct()).
+    pdf = bounded_pull(e_in, _DRIVER_EDGES)
+    if pdf is not None:
+        out = _driver_pagerank(
+            pdf, damping, iterations, checkpoint_every, tol, dedupe
+        )
+        t = e_in.schema["src"].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(
+            out, schema=f"node {t}, rank double"
         )
     if dedupe:
         e_in = e_in.distinct()

@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["normalize_name", "fuzzy_pairs"]
 
+# longest string the Arrow kernel scores (bounds its per-batch padding);
+# sf0.01 customer names normalize to at most 18 code points
+_ARROW_MAX_LEN = 64
+
 
 def normalize_name(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -62,6 +66,8 @@ def _levenshtein_arrow_udf():
         lb = np.fromiter((len(s) for s in bv), np.int64, n)
         La = int(la.max()) if n else 0
         Lb = int(lb.max()) if n else 0
+        if max(La, Lb) > _ARROW_MAX_LEN:
+            raise ValueError(f"string longer than {_ARROW_MAX_LEN}")
         # code-point matrices, padded with -1 (never matches)
         am = np.full((n, La), -1, dtype=np.int32)
         bm = np.full((n, Lb), -1, dtype=np.int32)
@@ -202,8 +208,14 @@ def fuzzy_pairs(
     # O(n·k) DP, -1 above the bound) — the parity sibling the tests
     # assert against, and the zero-Python-boundary fallback.
     if compute == "arrow":
+        # the kernel pads a batch to its longest string: longer pairs
+        # pass it NULLs and are scored by the JVM form
+        long = F.greatest(F.length("__na"), F.length("__nb")) > _ARROW_MAX_LEN
+        na, nb = (F.when(~long, F.col(c)) for c in ("__na", "__nb"))
         scored = out.withColumn(
-            "dist", _levenshtein_arrow_udf()(F.col("__na"), F.col("__nb"))
+            "dist",
+            F.when(long, F.levenshtein("__na", "__nb", max_dist))
+            .otherwise(_levenshtein_arrow_udf()(na, nb)),
         )
     elif compute == "expr":
         scored = out.withColumn(

@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.utils import bounded_pull
+
 __all__ = [
     "fit_scaler",
     "apply_scaler",
@@ -43,6 +45,10 @@ __all__ = [
 ]
 
 _METHODS = ("standard", "minmax", "robust")
+
+# driver percentile cap: 16M (value, count) rows is ~256 MB over Arrow
+# against the session's 8g driver
+_DRIVER_ROWS = 16_000_000
 
 
 def _cols(cols: Sequence[str] | str) -> list[str]:
@@ -76,7 +82,6 @@ def _interp_percentile(position: float, lo: int, hi: int, lv: float, hv: float):
 def exact_percentiles(
     melted: DataFrame,
     probs: Sequence[float],
-    max_driver_rows: int = 16_000_000,
 ) -> dict[str, list[float]]:
     """Exact percentiles over the melted ``(__feat, __val)`` stream as
     a DISTRIBUTED value-counts histogram + ordinal lookup, replacing
@@ -91,10 +96,9 @@ def exact_percentiles(
     the order statistics from the (value, count) table, which is
     smaller than the input by the duplication factor:
 
-    - table fits ``max_driver_rows`` (the capped-collect-with-
-      distributed-fallback pattern the binning fits use; 16M rows is
-      ~256 MB over Arrow against the session's 8g driver): ONE Arrow
-      ``toPandas`` + numpy argsort/cumsum/searchsorted — sub-second.
+    - a table of at most ``_DRIVER_ROWS`` rows is read on the driver
+      (``functions.utils.bounded_pull``) and searched with numpy
+      argsort/cumsum/searchsorted — sub-second.
     - larger: a per-feature window over the counts table computes
       cumulative ordinals and only the <= 2·|probs| straddle rows per
       feature reach the driver.  (Slower — the window sorts one
@@ -115,16 +119,15 @@ def exact_percentiles(
         .persist()
     )
     try:
-        # materialize the cache with a direct action FIRST (it doubles
-        # as the size guard): an aggregation planned ON TOP of the
-        # un-materialized InMemoryRelation does not reliably populate
-        # it under AQE (measured: the dependent job re-ran the full
-        # counts aggregation, 12s instead of 0.6s)
-        n_rows = cnts.count()
-        if n_rows <= max_driver_rows:
+        # the pull's count materializes the cache with a direct action
+        # FIRST: an aggregation planned ON TOP of the un-materialized
+        # InMemoryRelation does not reliably populate it under AQE
+        # (measured: the dependent job re-ran the full counts
+        # aggregation, 12s instead of 0.6s)
+        pdf = bounded_pull(cnts, _DRIVER_ROWS)
+        if pdf is not None:
             import numpy as np
 
-            pdf = cnts.toPandas()
             out: dict[str, list[float]] = {}
             for f_, g in pdf.groupby("__feat", sort=False):
                 vals = g["__val"].to_numpy(dtype=np.float64)

@@ -33,45 +33,43 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.binexpr import bin_expr
+from ..functions.utils import bounded_pull
 
 __all__ = ["rfm_segments", "pareto_curve"]
+
+# driver rank cap: a per-ENTITY table fits it far beyond the raw stream
+# scale that motivates the bucketed machinery
+_DRIVER_ROWS = 8_000_000
 
 
 def _lit_map(d: dict, cast_t: str):
     pairs = []
     for kk, vv in d.items():
         pairs += [F.lit(int(kk)), F.lit(vv).cast(cast_t)]
-    return F.create_map(*pairs) if pairs else F.create_map()
+    # typed even when empty, so rank/cum keep their long/double type
+    return F.create_map(*pairs).cast(f"map<int,{cast_t}>")
 
 
 def _driver_ranks(
     per: DataFrame,
+    pdf,
     specs: Sequence[tuple[str, bool, str]],
     tiebreak: Sequence[str],
     sum_col: str | None,
     cum_name: str,
-    total: int,
 ) -> DataFrame:
-    """Bounded driver path for ``_global_ranks``: one Arrow collect of
-    the per-entity table, exact ranks via numpy lexsort — replaces the
-    percentile fit + bucket-stat collect + per-bucket windows (three
-    jobs over the cached table) with one pull and one createDataFrame.
-    Ordering mirrors the bucketed plan exactly: transformed value
-    ascending (callers pre-negate for DESC), NULL/NaN values LAST
-    ordered by the tiebreak alone, ranks 1..total as int64 (the
-    bucketed path's long offsets + row_number).  The running
-    ``cum_name`` is a sequential cumsum down the ranking — same
-    6-decimal-rounded values as the bucketed offset+window
-    decomposition (both already differ from a single sequential window
-    only in float association; parity asserted bit-exact in
-    tests/test_segments_driver.py)."""
+    """``_global_ranks`` over the pulled table by numpy lexsort: the
+    bucketed plan's order, int64 ranks and running ``cum_name`` (NULL
+    until the first non-NULL ``sum_col``), up to float association."""
     import numpy as np
+    import pandas as pd
 
-    spark = per.sparkSession
-    pdf = per.toPandas()
     n_rows = len(pdf)
+    vs = [f"__v{i}" for i in range(len(specs))]
+    fields = [f for f in per.schema.fields if f.name not in vs]
     for i, (_c, _desc, name) in enumerate(specs):
         v = pdf[f"__v{i}"].to_numpy(dtype=np.float64, na_value=np.nan)
         nullf = np.isnan(v)
@@ -81,14 +79,18 @@ def _driver_ranks(
         rk = np.empty(n_rows, dtype=np.int64)
         rk[order] = np.arange(1, n_rows + 1)
         pdf[name] = rk
+        fields.append(StructField(name, LongType()))
         if sum_col is not None and i == 0:
-            sv = pdf[sum_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            sv = np.where(np.isnan(sv), 0.0, sv)
+            sv = pdf[sum_col]
+            seen = np.empty(n_rows, dtype=bool)
+            seen[order] = np.logical_or.accumulate(sv.notna().to_numpy()[order])
+            sv = sv.to_numpy(dtype=np.float64, na_value=0.0)
             cum = np.empty(n_rows, dtype=np.float64)
             cum[order] = np.cumsum(sv[order])
-            pdf[cum_name] = cum
-    pdf = pdf.drop(columns=[f"__v{i}" for i in range(len(specs))])
-    return spark.createDataFrame(pdf)
+            pdf[cum_name] = pd.arrays.FloatingArray(cum, ~seen)
+            fields.append(StructField(cum_name, DoubleType()))
+    pdf = pdf.drop(columns=vs)
+    return per.sparkSession.createDataFrame(pdf, schema=StructType(fields))
 
 
 def _global_ranks(
@@ -99,47 +101,37 @@ def _global_ranks(
     approx: bool = False,
     sum_col: str | None = None,
     cum_name: str = "__cum",
-    max_driver_rows: int | None = 8_000_000,
 ) -> tuple[DataFrame, int]:
     """Dense global ranks (one per spec ``(value_col, descending,
-    rank_name)``) over one table in TWO driver actions total: one
-    combined percentile fit, one combined bucket-stat collect via a
-    metric-exploded groupBy.  NULL/NaN values rank LAST in either
-    direction (both engines' SQL default): they take a dedicated
-    bucket after every value bucket, ordered by the tiebreak alone.
+    rank_name)``) over one table.  NULL/NaN values rank LAST in either
+    direction, ordered by the tiebreak alone.  ``sum_col`` (single-spec
+    callers like pareto_curve) additionally emits ``cum_name`` = the
+    SQL running ``SUM(sum_col)`` down the first spec's ranking.
 
-    ``approx=True`` swaps the exact ``percentile`` fit for
-    ``percentile_approx`` — the 100 TB path: exact percentile buffers
-    every distinct value in the aggregation state, approx is
-    fixed-memory; edges only PLACE the buckets (ranks are re-based by
+    Up to ``_DRIVER_ROWS`` rows rank on the driver (``_driver_ranks``
+    over ``functions.utils.bounded_pull``); above, in TWO driver actions
+    (one combined percentile fit, one combined bucket-stat collect via a
+    metric-exploded groupBy).  ``approx=True`` swaps the exact
+    ``percentile`` fit for the fixed-memory ``percentile_approx`` (the
+    100 TB path): edges only PLACE the buckets (ranks are re-based by
     real per-bucket counts), so approximation costs balance, never
-    correctness.  ``sum_col`` (single-spec callers like pareto_curve)
-    additionally emits ``cum_name`` = the running sum down the first
-    spec's ranking.
+    correctness.
     """
     if sum_col is not None and len(specs) != 1:
         raise ValueError("sum_col requires exactly one spec")
     vs = []
     for i, (col, desc, _name) in enumerate(specs):
-        v = F.col(col).cast("double")
+        # NaN ranks as NULL (last, by tiebreak) on both paths
+        v = F.nanvl(F.col(col).cast("double"), F.lit(None).cast("double"))
         per = per.withColumn(f"__v{i}", (-v) if desc else v)
         vs.append(f"__v{i}")
 
-    if max_driver_rows:
-        # one count on the (caller-persisted) per-entity table gates
-        # the bounded pull — the capped-collect-with-distributed-
-        # fallback pattern (binning fits, connected_components,
-        # pagerank).  A per-ENTITY table fits the cap far beyond the
-        # raw stream scale that motivates the bucketed machinery.
-        total = per.count()
-        # 0 rows falls through: the empty frame keeps its Spark schema
-        # on the bucketed path, while an empty pandas round-trip would
-        # have to re-infer dtypes
-        if 0 < total <= max_driver_rows:
-            return (
-                _driver_ranks(per, specs, tiebreak, sum_col, cum_name, total),
-                total,
-            )
+    pdf = bounded_pull(per, _DRIVER_ROWS)
+    if pdf is not None:
+        return (
+            _driver_ranks(per, pdf, specs, tiebreak, sum_col, cum_name),
+            len(pdf),
+        )
 
     probs = ", ".join(str(i / n_buckets) for i in range(1, n_buckets))
     fit_fn = "percentile_approx" if approx else "percentile"
@@ -166,11 +158,7 @@ def _global_ranks(
             ),
         )
 
-    sval = (
-        F.coalesce(F.col(sum_col).cast("double"), F.lit(0.0))
-        if sum_col is not None
-        else F.lit(0.0)
-    )
+    sval = F.col(sum_col).cast("double") if sum_col is not None else F.lit(0.0)
     stats = (
         per.select(
             F.explode(
@@ -193,13 +181,15 @@ def _global_ranks(
     soffs: dict[int, float] = {}
     for i in range(len(specs)):
         rows = sorted((r for r in stats if r["m"] == i), key=lambda r: r["bk"])
-        c, cs = 0, 0.0
+        c, cs = 0, None
         for r in rows:
             offs[i][r["bk"]] = c
             c += r["n"]
             if sum_col is not None and i == 0:
+                # SUM over the preceding buckets: NULL until a non-NULL
                 soffs[r["bk"]] = cs
-                cs += r["sv"]
+                if r["sv"] is not None:
+                    cs = r["sv"] if cs is None else cs + r["sv"]
 
     for i, (_col, _desc, name) in enumerate(specs):
         w = Window.partitionBy(f"__bk{i}").orderBy(f"__v{i}", *tiebreak)
@@ -209,15 +199,11 @@ def _global_ranks(
             + F.row_number().over(w),
         )
         if sum_col is not None and i == 0:
-            per = per.withColumn(
-                cum_name,
-                F.element_at(_lit_map(soffs, "double"), F.col("__bk0"))
-                + F.sum(sum_col).over(
-                    w.rowsBetween(
-                        Window.unboundedPreceding, Window.currentRow
-                    )
-                ),
+            off = F.element_at(_lit_map(soffs, "double"), F.col("__bk0"))
+            run = F.sum(sum_col).over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
             )
+            per = per.withColumn(cum_name, F.coalesce(off + run, off, run))
     return per.drop(*vs, *[f"__bk{i}" for i in range(len(specs))]), total
 
 

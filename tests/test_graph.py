@@ -101,7 +101,7 @@ def test_pagerank_empty_edges(spark):
     assert list(out.columns) == ["node", "rank"]
 
 
-def test_pagerank_driver_matches_distributed(spark):
+def test_pagerank_driver_matches_distributed(spark, force_distributed):
     # r6: the bounded driver path (numpy bincount power iteration) must
     # land on the same ranks as the distributed join plan, on a graph
     # with dangling AND zero-in-degree nodes, incl. the rounding the
@@ -113,25 +113,26 @@ def test_pagerank_driver_matches_distributed(spark):
     edges = [(a, b) for a, b in edges if a != b]
     df = _df(spark, edges)
     drv = pagerank(df, iterations=6, tol=None).toPandas()
-    dst = pagerank(df, iterations=6, tol=None, max_driver_edges=0).toPandas()
+    with force_distributed():
+        dst = pagerank(df, iterations=6, tol=None).toPandas()
     d1 = dict(zip(drv.node, np.round(drv["rank"] * 1e6, 6)))
     d2 = dict(zip(dst.node, np.round(dst["rank"] * 1e6, 6)))
     assert d1 == d2
 
 
-def test_pagerank_dedupe_matches_prededuped(spark):
+def test_pagerank_dedupe_matches_prededuped(spark, force_distributed):
     # dedupe=True on a multiset input == caller-side .distinct(), on
     # both the driver and the distributed path
     edges = [(1, 2), (1, 2), (2, 3), (3, 1), (2, 3), (4, 1), (1, 2)]
     df = _df(spark, edges)
     base = pagerank(df.distinct(), iterations=6, tol=None).toPandas()
-    for mde in (30_000_000, 0):
-        got = pagerank(
-            df, iterations=6, tol=None, dedupe=True, max_driver_edges=mde
-        ).toPandas()
-        b = dict(zip(base.node, np.round(base["rank"] * 1e6, 6)))
+    drv = pagerank(df, iterations=6, tol=None, dedupe=True).toPandas()
+    with force_distributed():
+        dst = pagerank(df, iterations=6, tol=None, dedupe=True).toPandas()
+    b = dict(zip(base.node, np.round(base["rank"] * 1e6, 6)))
+    for got in (drv, dst):
         g = dict(zip(got.node, np.round(got["rank"] * 1e6, 6)))
-        assert b == g, mde
+        assert b == g
 
 
 def test_pagerank_driver_early_stop_cadence(spark):

@@ -185,3 +185,30 @@ def test_fuzzy_pairs_arrow_matches_expr(spark):
     a = a.sort_values(key).reset_index(drop=True)
     e = e.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, e)
+
+
+def test_fuzzy_pairs_long_outlier_string(spark):
+    # one outlier far above the Arrow kernel's length bound shares a
+    # block (and so a batch) with short names: its pairs go to the JVM
+    # form instead of padding every row of the batch to 2000+ code
+    # points (a length^2 = 4M-step recurrence), and the pair set still
+    # equals compute='expr'
+    import pandas as pd
+
+    from didtool_spark.operators.linkage import _ARROW_MAX_LEN, fuzzy_pairs
+
+    long_a = "acme " + "x" * 2000
+    long_b = "acme " + "x" * 1999 + "y"
+    assert len(long_a) > _ARROW_MAX_LEN
+    names = [(0, "acme corp"), (1, "acme corq"), (2, long_a), (3, long_b),
+             (4, "acme co")]
+    df = spark.createDataFrame(pd.DataFrame(names, columns=["id", "name"]))
+    kw = dict(max_dist=2, prefix_len=4, length_bucket=None)
+    a = fuzzy_pairs(df, "id", "name", compute="arrow", **kw).toPandas()
+    e = fuzzy_pairs(df, "id", "name", compute="expr", **kw).toPandas()
+    key = ["id_a", "id_b"]
+    a = a.sort_values(key).reset_index(drop=True)
+    e = e.sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, e)
+    got = set(zip(a["id_a"], a["id_b"], a["dist"]))
+    assert {(0, 1, 1), (2, 3, 1), (0, 4, 2)} <= got

@@ -682,7 +682,9 @@ def test_remove_duplicated_substrings_broadcast_equals_shuffle(spark):
     assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
 
 
-def test_connected_components_driver_path_matches_distributed(spark):
+def test_connected_components_driver_path_matches_distributed(
+    spark, force_distributed
+):
     """The capped-collect union-find short-circuit must label exactly
     like the iterative large-star/small-star fixpoint — chain graphs
     (worst case for label propagation) and a star, with singleton ids
@@ -697,7 +699,8 @@ def test_connected_components_driver_path_matches_distributed(spark):
     )
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
     fast = connected_components(pairs).toPandas()
-    slow = connected_components(pairs, max_driver_edges=None).toPandas()
+    with force_distributed():
+        slow = connected_components(pairs).toPandas()
     f = dict(zip(fast["id"], fast["component"]))
     s = dict(zip(slow["id"], slow["component"]))
     assert f == s

@@ -306,7 +306,7 @@ def test_feature_bank_plan_shapes(spark):
     assert n == 1 and "partial_avg" in p, p[:2500]
 
 
-def test_session8_plan_shapes(spark):
+def test_session8_plan_shapes(spark, force_distributed):
     """Scale contracts of the session-8 operators: snapshot compaction
     aggregates without sorting, SCD2 never collapses to a single
     partition, and the segment ranks run under per-bucket hash
@@ -350,23 +350,10 @@ def test_session8_plan_shapes(spark):
     # scalar.  eager_release=False: the default eagerly checkpoints
     # the result (cache hygiene, ADVICE r4), which truncates the
     # inspectable plan to a Scan ExistingRDD — inspect the lazy plan
-    import functools
-
-    import didtool_spark.operators.segments as seg
-
-    real = seg._global_ranks
-
-    def forced(*args, **kw):
-        kw["max_driver_rows"] = 0
-        return real(*args, **kw)
-
-    seg._global_ranks = functools.wraps(real)(forced)
-    try:
+    with force_distributed():
         p = plan_str(
             pareto_curve(
                 orders, "o_custkey", "o_totalprice", eager_release=False
             )
         )
-    finally:
-        seg._global_ranks = real
     assert "hashpartitioning(__bk" in p, p[:2500]

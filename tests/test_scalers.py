@@ -103,7 +103,7 @@ def test_winsorize_train_serve_split_is_pure_expr(spark):
     assert not re.findall(r"\(\d+\) Exchange", plan_str(out))
 
 
-def test_exact_percentiles_bit_identical_to_spark_percentile(spark):
+def test_exact_percentiles_bit_identical_to_spark_percentile(spark, force_distributed):
     """The r6 histogram percentile (exact_percentiles) must reproduce
     F.percentile BIT-exactly: same ordinals, same two-sided
     interpolation, same equal-key short-circuits — over duplicates,
@@ -136,11 +136,12 @@ def test_exact_percentiles_bit_identical_to_spark_percentile(spark):
     dfn = spark.createDataFrame([(None,), (None,)], "a double")
     assert exact_percentiles(_melt_num(dfn, ["a"]), [0.5]) == {}
 
-    # the window-based distributed fallback (forced with
-    # max_driver_rows=0) must agree with the numpy path exactly
+    # the window-based distributed fallback must agree with the numpy
+    # path exactly
     vals = [rng.uniform(-100, 100) for _ in range(40)] + [3.5] * 5
     df = spark.createDataFrame([(v,) for v in vals], "a double")
     m = _melt_num(df, ["a"])
     fast = exact_percentiles(m, probs)
-    slow = exact_percentiles(m, probs, max_driver_rows=0)
+    with force_distributed():
+        slow = exact_percentiles(m, probs)
     assert fast == slow

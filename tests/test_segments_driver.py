@@ -29,42 +29,41 @@ def _per_table(spark, with_nulls=False):
     return spark.createDataFrame(pdf)
 
 
-def _ranks_both(spark, df, desc, sum_col=None):
-    outs = []
-    for cap in (8_000_000, 0):  # driver path, then bucketed
+def _ranks_both(force_distributed, df, desc, sum_col=None):
+    def run():
         got, total = _global_ranks(
             df,
             [("v", desc, "rk")],
             tiebreak=["key"],
             sum_col=sum_col,
-            max_driver_rows=cap,
         )
         cols = ["key", "rk"] + (["__cum"] if sum_col else [])
-        outs.append(
-            got.select(*cols).toPandas().sort_values("key").reset_index(
-                drop=True
-            )
+        return got.select(*cols).toPandas().sort_values("key").reset_index(
+            drop=True
         )
-    return outs
+
+    drv = run()
+    with force_distributed():  # bucketed path
+        return drv, run()
 
 
-def test_driver_ranks_match_bucketed_asc_desc(spark):
+def test_driver_ranks_match_bucketed_asc_desc(spark, force_distributed):
     df = _per_table(spark)
     for desc in (False, True):
-        a, b = _ranks_both(spark, df, desc)
+        a, b = _ranks_both(force_distributed, df, desc)
         pd.testing.assert_frame_equal(a, b)
 
 
-def test_driver_ranks_nulls_last_match(spark):
+def test_driver_ranks_nulls_last_match(spark, force_distributed):
     df = _per_table(spark, with_nulls=True)
     for desc in (False, True):
-        a, b = _ranks_both(spark, df, desc)
+        a, b = _ranks_both(force_distributed, df, desc)
         pd.testing.assert_frame_equal(a, b)
 
 
-def test_driver_cum_matches_bucketed_rounded(spark):
+def test_driver_cum_matches_bucketed_rounded(spark, force_distributed):
     df = _per_table(spark)
-    a, b = _ranks_both(spark, df, True, sum_col="amount")
+    a, b = _ranks_both(force_distributed, df, True, sum_col="amount")
     pd.testing.assert_frame_equal(
         a[["key", "rk"]], b[["key", "rk"]]
     )
@@ -84,48 +83,22 @@ def _orders(spark):
     }))
 
 
-def test_rfm_driver_vs_bucketed_bitexact(spark):
+def test_rfm_driver_vs_bucketed_bitexact(spark, force_distributed):
     orders = _orders(spark)
-    import didtool_spark.operators.segments as seg
-
     a = rfm_segments(orders).toPandas()
-    # force the bucketed path by pinning the cap to 0 via monkeypatch
-    import functools
-    real = seg._global_ranks
-
-    def forced(*args, **kw):
-        kw["max_driver_rows"] = 0
-        return real(*args, **kw)
-
-    seg._global_ranks = functools.wraps(real)(forced)
-    try:
+    with force_distributed():
         b = rfm_segments(orders).toPandas()
-    finally:
-        seg._global_ranks = real
     key = ["key"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_pareto_driver_vs_bucketed_rounded(spark):
+def test_pareto_driver_vs_bucketed_rounded(spark, force_distributed):
     orders = _orders(spark)
-    import functools
-
-    import didtool_spark.operators.segments as seg
-
     a = pareto_curve(orders, "o_custkey", "o_totalprice").toPandas()
-    real = seg._global_ranks
-
-    def forced(*args, **kw):
-        kw["max_driver_rows"] = 0
-        return real(*args, **kw)
-
-    seg._global_ranks = functools.wraps(real)(forced)
-    try:
+    with force_distributed():
         b = pareto_curve(orders, "o_custkey", "o_totalprice").toPandas()
-    finally:
-        seg._global_ranks = real
     a = a.sort_values("key").reset_index(drop=True)
     b = b.sort_values("key").reset_index(drop=True)
     pd.testing.assert_frame_equal(a[["key", "amount", "rank"]],
