@@ -16,13 +16,10 @@ point-in-time training-set build over event streams requires.
 Scale design: the window strategy is one shuffle on ``keys`` with a
 rangeBetween frame on unix seconds (each key = one task — fine for
 conversation-sized keys).  ``strategy="bucketed"`` bounds task size by
-time bucket instead of key size for hot keys: every row is also emitted
-as context into the PREVIOUS bucket (the forward mirror of
-with_rolling's time mode), the bucket width is >= the horizon so a
-(lower, horizon] forward frame never reaches past the next bucket, and
-context rows are dropped after the per-(key, bucket) window runs.
-Results are exactly equal to the window strategy; the cost is 2x shuffle
-volume on the label payload column only.
+time bucket for hot keys: temporal._range_frame with ``forward=True``
+copies every row as context into the PREVIOUS bucket (width >= the
+horizon), so the forward frame is complete inside each bucket.  Results
+are exactly equal to the window strategy.
 """
 
 from __future__ import annotations
@@ -32,26 +29,9 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .temporal import _AGG, epoch_seconds
+from .temporal import _AGG, _range_frame, epoch_seconds
 
 __all__ = ["with_future_label", "with_time_to_event"]
-
-
-def _apply_specs(
-    df: DataFrame,
-    specs_l: list[tuple[str, str, int]],
-    base: Window,
-    lower: int,
-    fill,
-) -> DataFrame:
-    out = df
-    for col, agg, h in specs_l:
-        w = base.rangeBetween(lower, int(h))
-        expr: Column = _AGG[agg](col).over(w)
-        if fill is not None:
-            expr = F.coalesce(expr, F.lit(fill))
-        out = out.withColumn(f"{col}_{agg}_next{h}s", expr)
-    return out
 
 
 def with_future_label(
@@ -82,29 +62,21 @@ def with_future_label(
     if not specs_l:
         return df
 
-    if strategy == "window":
-        out = df.withColumn("__ts_long", epoch_seconds(ts_col))
-        base = Window.partitionBy(*keys_l).orderBy("__ts_long")
-        return _apply_specs(out, specs_l, base, lower, fill).drop("__ts_long")
-
-    if strategy != "bucketed":
+    if strategy not in ("window", "bucketed"):
         raise ValueError(f"unknown with_future_label strategy {strategy!r}")
 
-    # bucketed: forward mirror of with_rolling's time mode — context
-    # rows are duplicated into the PREVIOUS bucket so a forward frame of
-    # up to max(h) seconds is complete inside every (key, bucket) task.
-    bw = max(int(bucket_seconds), max(h for _, _, h in specs_l))
-    base_b = df.withColumn("__ts_long", epoch_seconds(ts_col))
-    own = base_b.withColumn(
-        "__bucket", F.floor(F.col("__ts_long") / F.lit(bw))
-    ).withColumn("__ctx", F.lit(False))
-    ctx = base_b.withColumn(
-        "__bucket", F.floor(F.col("__ts_long") / F.lit(bw)) - 1
-    ).withColumn("__ctx", F.lit(True))
-    u = own.unionByName(ctx)
-    wbase = Window.partitionBy(*keys_l, "__bucket").orderBy("__ts_long")
-    u = _apply_specs(u, specs_l, wbase, lower, fill)
-    return u.where(~F.col("__ctx")).drop("__ts_long", "__bucket", "__ctx")
+    def add(frame: DataFrame, base: Window) -> DataFrame:
+        for col, agg, h in specs_l:
+            expr: Column = _AGG[agg](col).over(base.rangeBetween(lower, h))
+            if fill is not None:
+                expr = F.coalesce(expr, F.lit(fill))
+            frame = frame.withColumn(f"{col}_{agg}_next{h}s", expr)
+        return frame
+
+    return _range_frame(
+        df, keys_l, epoch_seconds(ts_col), max(h for _, _, h in specs_l),
+        bucket_seconds if strategy == "bucketed" else None, add, forward=True,
+    )
 
 
 def with_time_to_event(
@@ -131,40 +103,22 @@ def with_time_to_event(
     is a LABEL column: keep it out of the feature set the zero-leakage
     audit covers.
 
-    Scale design matches with_future_label: one shuffle on ``keys``
-    with a conditional-min rangeBetween frame; ``strategy="bucketed"``
-    mirrors rows into the PREVIOUS time bucket (width >= horizon) so a
-    hot key's task is bounded by bucket, with identical output.
+    Scale design matches with_future_label: a conditional-min
+    rangeBetween frame, per key or (``strategy="bucketed"``) per time
+    bucket, with identical output.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     h = int(horizon_s)
-
-    def attach(frame: DataFrame, base: Window) -> DataFrame:
-        w = base.rangeBetween(1, h)
-        first_ev = F.min(
-            F.when(event, F.col("__ts_long"))
-        ).over(w)
-        return frame.withColumn(
-            f"{name}_s", (first_ev - F.col("__ts_long")).cast("long")
-        ).withColumn(f"{name}_observed", first_ev.isNotNull())
-
-    if strategy == "window":
-        out = df.withColumn("__ts_long", epoch_seconds(ts_col))
-        base = Window.partitionBy(*keys_l).orderBy("__ts_long")
-        return attach(out, base).drop("__ts_long")
-
-    if strategy != "bucketed":
+    if strategy not in ("window", "bucketed"):
         raise ValueError(f"unknown with_time_to_event strategy {strategy!r}")
 
-    bw = max(int(bucket_seconds), h)
-    base_b = df.withColumn("__ts_long", epoch_seconds(ts_col))
-    own = base_b.withColumn(
-        "__bucket", F.floor(F.col("__ts_long") / F.lit(bw))
-    ).withColumn("__ctx", F.lit(False))
-    ctx = base_b.withColumn(
-        "__bucket", F.floor(F.col("__ts_long") / F.lit(bw)) - 1
-    ).withColumn("__ctx", F.lit(True))
-    u = own.unionByName(ctx)
-    wbase = Window.partitionBy(*keys_l, "__bucket").orderBy("__ts_long")
-    u = attach(u, wbase)
-    return u.where(~F.col("__ctx")).drop("__ts_long", "__bucket", "__ctx")
+    def attach(frame: DataFrame, base: Window) -> DataFrame:
+        first_ev = F.min(F.when(event, F.col("__t"))).over(base.rangeBetween(1, h))
+        return frame.withColumn(
+            f"{name}_s", (first_ev - F.col("__t")).cast("long")
+        ).withColumn(f"{name}_observed", first_ev.isNotNull())
+
+    return _range_frame(
+        df, keys_l, epoch_seconds(ts_col), h,
+        bucket_seconds if strategy == "bucketed" else None, attach, forward=True,
+    )

@@ -21,12 +21,10 @@ Scale design: ``scd2_compress(strategy="window")`` costs one hash
 exchange on ``keys``; rows within a run are contiguous in the sorted
 partition, so the groupBy's partial aggregation collapses them before
 the second (tiny) shuffle.  A key whose history is too hot for one
-task takes ``strategy="bucketed"``: change flags come from a
-carry-one-row-per-bucket lag, and the global run numbering is
-re-based per bucket by a cumulative count over the (key, bucket)
-flag-sum table — the same carry-in decomposition as
-temporal.with_lags.  Output is strategy-independent (equivalence
-units + fuzz in tests/test_scd.py).
+task takes ``strategy="bucketed"``: change flags come from the
+bucketed lag (temporal._bucketed_shift) and run ids are re-based per
+bucket by a temporal._carry_in of flag counts.  Output is
+strategy-independent (equivalence units + fuzz in tests/test_scd.py).
 
 Reference parity: didtool has no dimension builder (its pandas frames
 are point-in-time by construction); this generalizes its
@@ -134,10 +132,11 @@ def _bucketed_flags(
     carry prefix stitched across the previous NON-EMPTY buckets — so
     empty buckets cannot orphan a run start), with a lagged constant
     as the is-first-row marker.  Global run numbering is the in-bucket
-    cumulative flag count re-based by an exclusive running offset over
-    the tiny per-(key, bucket) flag-sum table.
+    cumulative flag count re-based by the flags of earlier buckets.
     """
-    from .temporal import _bucketed_shift, _bucketize
+    from .temporal import (
+        _bucketed_shift, _bucketize, _carry_in, _sum_before, epoch_seconds,
+    )
 
     shifted = _bucketed_shift(
         df.withColumn("__one", F.lit(1)),
@@ -154,11 +153,11 @@ def _bucketed_flags(
     def lag_of(c):
         return F.col("__one_lag1") if c is None else F.col(f"{c}_lag1")
 
-    flagged = _bucketize(
-        shifted.withColumn("__chg", _change_flag(vals_l, lag_of).cast("int")),
-        ts_col,
-        bw,
-    ).drop("__one", "__one_lag1", *[f"{c}_lag1" for c in vals_l])
+    flagged = (
+        shifted.withColumn("__chg", _change_flag(vals_l, lag_of).cast("int"))
+        .withColumn("__bucket", _bucketize(epoch_seconds(ts_col), bw))
+        .drop("__one", "__one_lag1", *[f"{c}_lag1" for c in vals_l])
+    )
     wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
     flagged = flagged.withColumn(
         "__local",
@@ -166,23 +165,12 @@ def _bucketed_flags(
             wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    # per-(key, bucket) flag totals -> exclusive running offset; the
-    # window is over the AGGREGATED table (#non-empty buckets per key)
-    per_bucket = flagged.groupBy(*keys_l, "__bucket").agg(
-        F.sum("__chg").alias("__nb")
+    flagged = _carry_in(
+        flagged, keys_l, [F.sum("__chg").alias("__nb")],
+        lambda w: [_sum_before("__nb", w).alias("__off")],
     )
-    woff = (
-        Window.partitionBy(*keys_l)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = per_bucket.withColumn(
-        "__off", F.sum("__nb").over(woff) - F.col("__nb")
-    ).select(*keys_l, "__bucket", "__off")
-    return (
-        flagged.join(offsets, keys_l + ["__bucket"])
-        .withColumn("__run", F.col("__off") + F.col("__local"))
-        .drop("__bucket", "__local", "__off")
+    return flagged.withColumn("__run", F.col("__off") + F.col("__local")).drop(
+        "__bucket", "__local", "__off"
     )
 
 

@@ -14,11 +14,20 @@ Scale notes:
 - Hot entities (a conversation with millions of turns) break a naive
   ``Window.partitionBy(conv_id)``: EVERY operator here accepts
   ``strategy="bucketed"``, which range-splits time into buckets per key
-  and stitches bucket boundaries with a tiny carry table (sessionize,
-  forward_fill, asof_join), a ≤K-row carry prefix (with_lags,
-  with_rolling rows mode), or next-bucket context duplication
-  (with_rolling time mode) — so no single task ever sees a whole hot
-  key. Output is identical to the window strategy.
+  (``_bucketize``) so no single task ever sees a whole hot key, and
+  stitches bucket boundaries with one of three shared helpers:
+
+  - ``_carry_in``: a per-(key, bucket) summary, a window over buckets
+    on that small table, joined back (sessionize, forward_fill,
+    asof_join; also cusum, transcript carries and scd run offsets);
+  - ``_tail_prefix``: the ≤K rows preceding each bucket (with_lags,
+    with_rolling rows mode);
+  - ``_range_frame``: a time-range frame whose rows are also copied
+    into the adjacent bucket as context (with_rolling time mode, and
+    the rolling-distinct and future-label operators).
+
+  Output is identical to the window strategy; NULL keys group together
+  on both (the stitch joins are null-safe).
 """
 
 from __future__ import annotations
@@ -79,89 +88,129 @@ def sessionize(
     indicators over the per-key ordered window (0-based). One shuffle on
     ``keys``; each key is one task — fine until a key is hot.
 
-    strategy="bucketed": the carry-in trick for hot keys (a conversation
-    with millions of turns). Time is range-split into ``bucket_seconds``
-    buckets; the boundary indicator needs only the LAST event of the
-    previous bucket (a tiny per-(key, bucket) table), the cumulative sum
-    runs per (key, bucket) plus a prefix-sum of per-bucket session
-    counts over the small carry table — no task ever scans a whole hot
-    key. Identical output to the window strategy.
+    strategy="bucketed" (hot keys — a conversation with millions of
+    turns): the cumulative sum runs per (key, ``bucket_seconds`` bucket);
+    one ``_carry_in`` of each bucket's first/last event and in-bucket
+    break count gives every bucket its predecessor event and its offset
+    of earlier sessions. Identical output to the window strategy.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     order_l = [order] if isinstance(order, str) else list(order)
 
+    def breaks(t: Column, prev: Column) -> Column:
+        return prev.isNull() | (
+            epoch_seconds(t) - epoch_seconds(prev) > F.lit(gap_seconds)
+        )
+
     if strategy == "window":
         w = ordered_window(keys_l, order_l)
-        prev_ts = F.lag(F.col(ts_col)).over(w)
-        is_new = (
-            prev_ts.isNull()
-            | (epoch_seconds(ts_col) - epoch_seconds(prev_ts) > F.lit(gap_seconds))
-        ).cast("int")
-        cum = Window.partitionBy(*keys_l).orderBy(*order_l).rowsBetween(
-            Window.unboundedPreceding, 0
-        )
+        is_new = breaks(F.col(ts_col), F.lag(F.col(ts_col)).over(w)).cast("int")
+        cum = w.rowsBetween(Window.unboundedPreceding, 0)
         return df.withColumn(out_col, F.sum(is_new).over(cum) - F.lit(1))
 
     if strategy != "bucketed":
         raise ValueError(f"unknown sessionize strategy {strategy!r}")
 
-    b = df.withColumn(
-        "__bucket", F.floor(epoch_seconds(ts_col) / F.lit(int(bucket_seconds)))
-    )
-    # per-(key, bucket): ordered indicator with NULL prev inside bucket
+    b = df.withColumn("__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds))
     wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
-    prev_in_bucket = F.lag(F.col(ts_col)).over(wb)
-    # last event per (key, bucket) -> carry table (small: keys x buckets)
-    carry = b.groupBy(*keys_l, "__bucket").agg(
-        F.max(F.struct(*[F.col(c) for c in order_l], F.col(ts_col).alias("__t")))[
-            "__t"
-        ].alias("__last_ts"),
-        F.lit(0).alias("__dummy"),
-    ).drop("__dummy")
-    wc = Window.partitionBy(*keys_l).orderBy("__bucket")
-    carry = carry.select(
-        *keys_l,
-        "__bucket",
-        F.lag("__last_ts").over(wc).alias("__prev_bucket_last_ts"),
+    # in-bucket gap flags; NULL on each bucket's first row, whose
+    # predecessor is the previous bucket's last event
+    prev = F.lag(ts_col).over(wb)
+    b = b.withColumn("__gap", F.when(prev.isNotNull(), breaks(F.col(ts_col), prev)))
+    ends = F.struct(*order_l, F.col(ts_col).alias("__t"))
+    b = _carry_in(
+        b,
+        keys_l,
+        [
+            F.min(ends)["__t"].alias("__first"),
+            F.max(ends)["__t"].alias("__last"),
+            F.count(F.when(F.col("__gap"), 1)).alias("__n"),
+        ],
+        lambda w: ["__first", "__n", F.lag("__last").over(w).alias("__prev_ts")],
+        # sessions started in earlier buckets offset the in-bucket count
+        lambda w: [
+            "__prev_ts",
+            _sum_before(
+                F.col("__n") + breaks(F.col("__first"), F.col("__prev_ts")).cast("long"), w
+            ).alias("__offset"),
+        ],
     )
-    b = b.join(carry, [*keys_l, "__bucket"], "left")
-    first_prev = F.coalesce(prev_in_bucket, F.col("__prev_bucket_last_ts"))
-    is_new = (
-        first_prev.isNull()
-        | (epoch_seconds(ts_col) - epoch_seconds(first_prev) > F.lit(gap_seconds))
-    ).cast("long")
-    cum_in_bucket = F.sum(is_new).over(
-        Window.partitionBy(*keys_l, "__bucket")
-        .orderBy(*order_l)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    b = b.withColumn("__new_in_bucket_cum", cum_in_bucket)
-    # per-bucket totals -> exclusive prefix sum over buckets (tiny table)
-    totals = b.groupBy(*keys_l, "__bucket").agg(
-        F.max("__new_in_bucket_cum").alias("__bucket_total")
-    )
-    wt = (
-        Window.partitionBy(*keys_l)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    totals = totals.select(
-        *keys_l,
-        "__bucket",
-        F.coalesce(F.sum("__bucket_total").over(wt), F.lit(0)).alias("__offset"),
-    )
-    out = b.join(totals, [*keys_l, "__bucket"], "left").withColumn(
-        out_col, (F.col("__offset") + F.col("__new_in_bucket_cum") - 1).cast("long")
-    )
-    return out.drop(
-        "__bucket", "__prev_bucket_last_ts", "__new_in_bucket_cum", "__offset"
+    is_new = F.coalesce(F.col("__gap"), breaks(F.col(ts_col), F.col("__prev_ts")))
+    cum = F.sum(is_new.cast("long")).over(wb.rowsBetween(Window.unboundedPreceding, 0))
+    out = b.withColumn(out_col, (F.col("__offset") + cum - 1).cast("long"))
+    return out.drop("__bucket", "__gap", "__prev_ts", "__offset")
+
+
+def _bucketize(t: Column, width: int) -> Column:
+    """Bucket id of ``t`` (epoch seconds, micros or an order value) for
+    buckets ``width`` units wide."""
+    return F.floor(t / F.lit(int(width)))
+
+
+def _keyed(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Add ``__kk`` = struct(keys): never NULL, and equal whenever the
+    keys are equal null-safely, so grouping and joining on it treats
+    NULL keys as one key — as the window strategy does. A plain
+    equi-join on it keeps the planner's distinct-key size estimate,
+    which an ``eqNullSafe`` join loses."""
+    return df.withColumn("__kk", F.struct(*keys))
+
+
+def _carry_in(
+    b: DataFrame,
+    keys: list[str],
+    per_bucket: list[Column],
+    *across,
+) -> DataFrame:
+    """The bucketed strategies' boundary stitch: group ``b`` by (keys,
+    ``__bucket``) with the ``per_bucket`` aggregates, run each ``across``
+    pass — ``w -> [Column]`` over ``w`` = the per-key window in bucket
+    order — as one select on that small table (keys x buckets rows),
+    and left-join the last pass's columns back onto ``b``. Keys are
+    matched null-safely (``_keyed``)."""
+    b = _keyed(b, keys)
+    w = Window.partitionBy("__kk").orderBy("__bucket")
+    carry = b.groupBy("__kk", "__bucket").agg(*per_bucket)
+    for cols in across:
+        carry = carry.select("__kk", "__bucket", *cols(w))
+    return b.join(carry, ["__kk", "__bucket"], "left").drop("__kk")
+
+
+def _sum_before(col: Column | str, w: WindowSpec) -> Column:
+    """Exclusive prefix sum over the buckets before this one (0 first)."""
+    return F.coalesce(
+        F.sum(col).over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)
     )
 
 
-def _bucketize(df: DataFrame, ts_col: str, bucket_seconds: int) -> DataFrame:
-    return df.withColumn(
-        "__bucket", F.floor(epoch_seconds(ts_col) / F.lit(int(bucket_seconds)))
-    )
+def _range_frame(
+    df: DataFrame,
+    keys: list[str],
+    t: Column,
+    reach: int,
+    bucket_width: int | None,
+    add,
+    forward: bool = False,
+) -> DataFrame:
+    """A time-range frame for both strategies: ``add(frame, w)`` attaches
+    the caller's aggregates over ``w``, a per-key window ordered by
+    ``__t`` (= ``t``), whose range frame spans at most ``reach`` units
+    back (ahead when ``forward``).
+
+    ``bucket_width=None`` is the window strategy. Otherwise ``w`` is
+    partitioned by (keys, bucket) with buckets >= ``reach`` wide, and
+    every row is also copied as context into the next bucket (the
+    previous one when ``forward``), so each frame is complete inside its
+    own bucket; the context rows are dropped afterwards."""
+    frame = df.withColumn("__t", t)
+    if bucket_width is None:
+        return add(frame, Window.partitionBy(*keys).orderBy("__t")).drop("__t")
+    own = _bucketize(F.col("__t"), max(int(bucket_width), int(reach)))
+    u = frame.withColumn("__bucket", own).withColumn("__ctx", F.lit(False))
+    ctx = frame.withColumn("__bucket", own + (-1 if forward else 1))
+    u = u.unionByName(ctx.withColumn("__ctx", F.lit(True)))
+    u = add(u, Window.partitionBy(*keys, "__bucket").orderBy("__t"))
+    return u.where(~F.col("__ctx")).drop("__t", "__bucket", "__ctx")
 
 
 def _tail_prefix(
@@ -236,9 +285,11 @@ def _bucketed_shift(
     carry prefix instead (``__prefix[rn - k - 1]``, negative = from the
     end). No task ever scans a whole hot key."""
     K = max(ks)
-    b = _bucketize(df, ts_col, bucket_seconds)
-    prefix = _tail_prefix(b, keys_l, order_l, cols, K, descending)
-    joined = b.join(prefix, [*keys_l, "__bucket"], "left")
+    b = _keyed(df, keys_l).withColumn(
+        "__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds)
+    )
+    prefix = _tail_prefix(b, ["__kk"], order_l, cols, K, descending)
+    joined = b.join(prefix, ["__kk", "__bucket"], "left").drop("__kk")
     ord_cols = [
         F.col(c).desc() if descending else F.col(c).asc() for c in order_l
     ]
@@ -374,59 +425,45 @@ def with_rolling(
       stddev recombine from (count, sum, sum-of-squares). Exact for
       sum/count/min/max/avg; stddev recombination is algebraically exact
       but may differ from the window form in the last float ulps.
-    - time mode: overlapping-bucket context duplication — every row is
-      also emitted into the *next* bucket tagged as context (bucket
-      width >= max window k, so a trailing k-second frame never reaches
-      further back than one bucket); the range window runs per (key,
-      bucket) over own+context rows and context rows are dropped. Exact
-      same results, 2x shuffle volume on the value columns.
+    - time mode: ``_range_frame`` — each row is also copied into the
+      next bucket (width >= max k) as context. Exact, at 2x shuffle
+      volume on the value columns.
     """
     upper = 0 if include_current else -1
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     order_l = [order] if isinstance(order, str) else list(order)
     specs_l = [(c, a, int(k)) for c, a, k in specs]
-    out = df
+    if strategy not in ("window", "bucketed"):
+        raise ValueError(f"unknown with_rolling strategy {strategy!r}")
 
-    if strategy == "window":
-        if ts_col is not None:
-            out = out.withColumn("__ts_long", epoch_seconds(ts_col))
-            base = Window.partitionBy(*keys_l).orderBy("__ts_long")
+    if ts_col is not None:
+        def add(frame: DataFrame, base: WindowSpec) -> DataFrame:
             for col, agg, k in specs_l:
-                w = base.rangeBetween(-int(k), upper)
-                out = out.withColumn(f"{col}_{agg}_{k}s", _AGG[agg](col).over(w))
-            return out.drop("__ts_long")
+                w = base.rangeBetween(-k, upper)
+                frame = frame.withColumn(f"{col}_{agg}_{k}s", _AGG[agg](col).over(w))
+            return frame
+
+        return _range_frame(
+            df, keys_l, epoch_seconds(ts_col), max((k for _, _, k in specs_l), default=0),
+            bucket_seconds if strategy == "bucketed" else None, add,
+        )
+
+    out = df
+    if strategy == "window":
         base = Window.partitionBy(*keys_l).orderBy(*order_l)
         for col, agg, k in specs_l:
             w = base.rowsBetween(-int(k), upper)
             out = out.withColumn(f"{col}_{agg}_last{k}", _AGG[agg](col).over(w))
         return out
 
-    if strategy != "bucketed":
-        raise ValueError(f"unknown with_rolling strategy {strategy!r}")
-
-    if ts_col is not None:
-        # time mode: context duplication into the next bucket
-        bw = max(int(bucket_seconds), max(k for _, _, k in specs_l))
-        base_b = out.withColumn("__ts_long", epoch_seconds(ts_col))
-        own = base_b.withColumn(
-            "__bucket", F.floor(F.col("__ts_long") / F.lit(bw))
-        ).withColumn("__ctx", F.lit(False))
-        ctx = base_b.withColumn(
-            "__bucket", F.floor(F.col("__ts_long") / F.lit(bw)) + 1
-        ).withColumn("__ctx", F.lit(True))
-        u = own.unionByName(ctx)
-        wbase = Window.partitionBy(*keys_l, "__bucket").orderBy("__ts_long")
-        for col, agg, k in specs_l:
-            w = wbase.rangeBetween(-int(k), upper)
-            u = u.withColumn(f"{col}_{agg}_{k}s", _AGG[agg](col).over(w))
-        return u.where(~F.col("__ctx")).drop("__ts_long", "__bucket", "__ctx")
-
     # rows mode: in-bucket window + carry-prefix recombination
     K = max(k for _, _, k in specs_l)
     payload = sorted({c for c, _, _ in specs_l})
-    b = _bucketize(out, bucket_ts_col, bucket_seconds)
-    prefix = _tail_prefix(b, keys_l, order_l, payload, K, descending=False)
-    j = b.join(prefix, [*keys_l, "__bucket"], "left")
+    b = _keyed(out, keys_l).withColumn(
+        "__bucket", _bucketize(epoch_seconds(bucket_ts_col), bucket_seconds)
+    )
+    prefix = _tail_prefix(b, ["__kk"], order_l, payload, K, descending=False)
+    j = b.join(prefix, ["__kk", "__bucket"], "left").drop("__kk")
     wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
     j = j.withColumn("__rn", F.row_number().over(wb))
     drop_cols = ["__bucket", "__prefix", "__rn"]
@@ -519,10 +556,9 @@ def forward_fill(
     Only reads the past — point-in-time correct by construction.
 
     strategy="window": one shuffle on ``keys``; each key is one task.
-    strategy="bucketed": the sessionize-style carry trick for hot keys —
-    the fill runs per (key, ``ts_col``-bucket); a tiny per-(key, bucket)
-    carry table (last non-null value per bucket, forward-filled across
-    buckets over strictly earlier buckets) seeds rows whose bucket has no
+    strategy="bucketed": the fill runs per (key, ``ts_col``-bucket); a
+    ``_carry_in`` of each bucket's last non-null value, filled forward
+    over strictly earlier buckets, seeds rows whose bucket has no
     earlier non-null. Identical output, task size bounded by bucket.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
@@ -543,16 +579,14 @@ def forward_fill(
     if strategy != "bucketed":
         raise ValueError(f"unknown forward_fill strategy {strategy!r}")
 
-    b = _bucketize(df, ts_col, bucket_seconds)
-    wb = (
-        Window.partitionBy(*keys_l, "__bucket")
-        .orderBy(*order_l)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # carry: last non-null value per (key, bucket) = max over (order, v)
-    # structs restricted to non-null v (lexicographic max = latest row)
-    carry = b.groupBy(*keys_l, "__bucket").agg(
-        *[
+    b = df.withColumn("__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds))
+    # carry: the latest non-null value per (key, bucket) = max over
+    # (order, v) structs restricted to non-null v, filled forward over
+    # strictly earlier buckets
+    b = _carry_in(
+        b,
+        keys_l,
+        [
             F.max(
                 F.when(
                     F.col(c).isNotNull(),
@@ -563,28 +597,25 @@ def forward_fill(
                 )
             )["__v"].alias(f"__c_{c}")
             for c in cols_l
-        ]
-    )
-    wc = (
-        Window.partitionBy(*keys_l)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = carry.select(
-        *keys_l,
-        "__bucket",
-        *[
-            F.last(f"__c_{c}", ignorenulls=True).over(wc).alias(f"__prev_{c}")
+        ],
+        lambda w: [
+            F.last(f"__c_{c}", ignorenulls=True)
+            .over(w.rowsBetween(Window.unboundedPreceding, -1))
+            .alias(f"__p_{c}")
             for c in cols_l
         ],
     )
-    out = b.join(carry, [*keys_l, "__bucket"], "left")
+    wb = (
+        Window.partitionBy(*keys_l, "__bucket")
+        .orderBy(*order_l)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     for c in cols_l:
-        out = out.withColumn(
+        b = b.withColumn(
             f"{c}{suffix}",
-            F.coalesce(F.last(c, ignorenulls=True).over(wb), F.col(f"__prev_{c}")),
+            F.coalesce(F.last(c, ignorenulls=True).over(wb), F.col(f"__p_{c}")),
         )
-    return out.drop("__bucket", *[f"__prev_{c}" for c in cols_l])
+    return b.drop("__bucket", *[f"__p_{c}" for c in cols_l])
 
 
 def _tag_union(
@@ -655,28 +686,28 @@ def asof_join(
     strategy="window" (default): union-tag + one ordered window pass —
     a sort-merge as-of realized as shuffle-on-keys + in-partition sort;
     Catalyst/Tungsten handle spilling. Right for keys whose per-key row
-    count fits a task. ``direction="backward"`` with no tolerance is a
-    plain per-column ``last(ignorenulls)``; the general form fills
+    count fits a task. ``direction="backward"`` with no tolerance is
+    :func:`forward_fill` over the tagged union; the general form fills
     (ts, value) structs so the match distance is known — forward adds a
     second in-partition sort (same exchange, tag order reversed).
 
-    strategy="bucketed": salted-key skew splitting for hot keys. Time is
-    range-split into buckets (fixed ``bucket_seconds`` width, else the
-    observed span / ``n_buckets``); the window pass runs per (key,
-    bucket) so no task sees a whole hot key; a tiny per-(key, bucket)
-    carry table (last feature value at each bucket end, forward-filled
-    across buckets) stitches the boundaries via an equi-join that AQE
-    can broadcast. Exact same semantics, bounded task size. Backward
-    only: get forward by negating the timestamp on both inputs (the
-    order-reversal identity); nearest needs both passes — use "window".
+    strategy="bucketed": skew splitting for hot keys — the backward fill
+    is :func:`forward_fill`'s bucketed form over the tagged union. Time
+    is range-split into buckets (fixed ``bucket_seconds`` width, else
+    the observed span / ``n_buckets``), so no task sees a whole hot key.
+    Exact same semantics, bounded task size. Backward only: get forward
+    by negating the timestamp on both inputs (the order-reversal
+    identity); nearest needs both passes — use "window".
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown asof direction {direction!r}")
+    if strategy not in ("window", "bucketed"):
+        raise ValueError(f"unknown asof strategy {strategy!r}")
     if strategy == "bucketed" and (direction != "backward" or tolerance is not None):
         raise ValueError(
             "strategy='bucketed' supports direction='backward' without "
             "tolerance only (negate the timestamp for a forward as-of, "
-            "or use strategy='window'/'pandas')"
+            "or use strategy='window')"
         )
     keys = [keys] if isinstance(keys, str) else list(keys)
     if value_cols is None:
@@ -694,234 +725,82 @@ def asof_join(
 
     final_cols = (
         [*keys, F.col("__ts").alias(ts_col), *anchor_cols]
-        + [F.col(f"__f_{c}").alias(out_names[c]) for c in value_cols]
+        + [F.col(f"__v_{c}_f").alias(out_names[c]) for c in value_cols]
     )
-
-    if strategy == "window":
-        if direction == "backward" and tolerance is None:
-            w = (
-                Window.partitionBy(*keys)
-                .orderBy("__ts", "__src")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            filled = unioned.select(
-                "*",
-                *[
-                    F.last(f"__v_{c}", ignorenulls=True).over(w).alias(f"__f_{c}")
-                    for c in value_cols
-                ],
-            )
-            return filled.where(F.col("__src") == a_tag).select(*final_cols)
-
-        # general form: fill (ts, value) structs so the match distance
-        # is known per column.  Tag ordering already encodes strict vs
-        # inclusive (features sort after anchors at equal ts when
-        # strict); the forward window reverses ONLY the tag order, which
-        # flips that rule's mirror image (anchors-first when inclusive).
-        # Both windows share one hash exchange on the keys.
-        tnum = F.col("__ts").cast("timestamp").cast("double")
-        unioned = unioned.withColumn("__tnum", tnum)
-        w_back = (
-            Window.partitionBy(*keys)
-            .orderBy("__ts", "__src")
-            .rowsBetween(Window.unboundedPreceding, 0)
+    if direction == "backward" and tolerance is None:
+        if strategy == "bucketed" and bucket_seconds is None:
+            tsl = epoch_seconds(F.col("__ts"))
+            lo, hi = unioned.select(
+                F.min(tsl).alias("lo"), F.max(tsl).alias("hi")
+            ).first()
+            bucket_seconds = max(1, ((hi or 0) - (lo or 0)) // max(1, n_buckets) + 1)
+        filled = forward_fill(
+            unioned, [f"__v_{c}" for c in value_cols], keys=keys,
+            order=("__ts", "__src"), suffix="_f", strategy=strategy,
+            ts_col="__ts", bucket_seconds=bucket_seconds,
         )
-        w_fwd = (
-            Window.partitionBy(*keys)
-            .orderBy(F.col("__ts").asc(), F.col("__src").desc())
-            .rowsBetween(0, Window.unboundedFollowing)
-        )
-        fills = []
-        for c in value_cols:
-            cand = F.when(
-                F.col(f"__v_{c}").isNotNull(),
-                F.struct(
-                    F.col("__tnum").alias("t"), F.col(f"__v_{c}").alias("v")
-                ),
-            )
-            if direction in ("backward", "nearest"):
-                fills.append(
-                    F.last(cand, ignorenulls=True).over(w_back).alias(f"__b_{c}")
-                )
-            if direction in ("forward", "nearest"):
-                fills.append(
-                    F.first(cand, ignorenulls=True).over(w_fwd).alias(f"__w_{c}")
-                )
-        filled = unioned.select("*", *fills)
-
-        picked = []
-        for c in value_cols:
-            b = F.col(f"__b_{c}") if direction != "forward" else None
-            f_ = F.col(f"__w_{c}") if direction != "backward" else None
-            if direction == "backward":
-                m = b
-            elif direction == "forward":
-                m = f_
-            else:  # nearest: min |delta|, equidistant tie -> backward
-                m = (
-                    F.when(b.isNull(), f_)
-                    .when(f_.isNull(), b)
-                    .when(
-                        F.col("__tnum") - b["t"] <= f_["t"] - F.col("__tnum"), b
-                    )
-                    .otherwise(f_)
-                )
-            if tolerance is not None:
-                m = F.when(
-                    F.abs(F.col("__tnum") - m["t"]) <= F.lit(float(tolerance)), m
-                )
-            picked.append(m["v"].alias(f"__f_{c}"))
-        filled = filled.select("*", *picked)
         return filled.where(F.col("__src") == a_tag).select(*final_cols)
 
-    if strategy == "pandas":
-        # Arrow-batched per-key merge_asof: right when the feature side
-        # vastly outnumbers anchors and the window union would carry
-        # mostly-null anchor columns through the sort. Grouped by key,
-        # so subject to the same hot-key bound as the window strategy.
-        import pandas as pd
-
-        out_schema = ", ".join(
-            [f"`{k}` {anchors.schema[k].dataType.simpleString()}" for k in keys]
-            + [f"`{ts_col}` {anchors.schema[ts_col].dataType.simpleString()}"]
-            + [
-                f"`{c}` {anchors.schema[c].dataType.simpleString()}"
-                for c in anchor_cols
-            ]
-            + [
-                f"`{out_names[c]}` {features.schema[c].dataType.simpleString()}"
-                for c in value_cols
-            ]
-        )
-        a_tagged = anchors.select(*keys, ts_col, *anchor_cols)
-        f_tagged = features.select(*keys, ts_col, *value_cols)
-
-        def merge(a_pd, f_pd):
-            a_pd = a_pd.sort_values(ts_col, kind="mergesort")
-            f_pd = f_pd.sort_values(ts_col, kind="mergesort")
-            tol = None
-            if tolerance is not None:
-                tol = (
-                    pd.Timedelta(seconds=float(tolerance))
-                    if str(a_pd[ts_col].dtype).startswith("datetime")
-                    else float(tolerance)
-                )
-            res = pd.merge_asof(
-                a_pd,
-                f_pd.drop(columns=[k for k in keys]),
-                on=ts_col,
-                direction=direction,
-                allow_exact_matches=not strict,
-                tolerance=tol,
-            )
-            return res.rename(columns={c: out_names[c] for c in value_cols})
-
-        return a_tagged.groupBy(*keys).cogroup(f_tagged.groupBy(*keys)).applyInPandas(
-            merge, schema=out_schema
-        )
-
-    if strategy != "bucketed":
-        raise ValueError(f"unknown asof strategy {strategy!r}")
-
-    # ---- bucketed (skew-splitting) path ----
-    tsl = epoch_seconds(F.col("__ts"))
-    if bucket_seconds is None:
-        lo, hi = unioned.select(
-            F.min(tsl).alias("lo"), F.max(tsl).alias("hi")
-        ).first()
-        bucket_seconds = max(1, ((hi or 0) - (lo or 0)) // max(1, n_buckets) + 1)
-    b = unioned.withColumn("__bucket", F.floor(tsl / F.lit(int(bucket_seconds))))
-
-    # pass 1: within-(key,bucket) forward fill
-    wb = (
-        Window.partitionBy(*keys, "__bucket")
+    # general form: fill (ts, value) structs so the match distance
+    # is known per column.  Tag ordering already encodes strict vs
+    # inclusive (features sort after anchors at equal ts when
+    # strict); the forward window reverses ONLY the tag order, which
+    # flips that rule's mirror image (anchors-first when inclusive).
+    # Both windows share one hash exchange on the keys.
+    tnum = F.col("__ts").cast("timestamp").cast("double")
+    unioned = unioned.withColumn("__tnum", tnum)
+    w_back = (
+        Window.partitionBy(*keys)
         .orderBy("__ts", "__src")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    filled = b.select(
-        "*",
-        *[
-            F.last(f"__v_{c}", ignorenulls=True).over(wb).alias(f"__w_{c}")
-            for c in value_cols
-        ],
-    )
-
-    # carry table: last feature value per (key, bucket), forward-filled
-    # across buckets — rows = keys x buckets, tiny vs the data.
-    carry = (
-        b.where(F.col("__src") == f_tag)
-        .groupBy(*keys, "__bucket")
-        .agg(
-            # last *non-null* value in the bucket: max over (ts, src, v)
-            # structs restricted to non-null v (lexicographic max = latest row)
-            *[
-                F.max(
-                    F.when(
-                        F.col(f"__v_{c}").isNotNull(),
-                        F.struct(
-                            F.col("__ts").alias("t"),
-                            F.col("__src").alias("s"),
-                            F.col(f"__v_{c}").alias("v"),
-                        ),
-                    )
-                )["v"].alias(f"__c_{c}")
-                for c in value_cols
-            ]
-        )
-    )
-    wc = (
+    w_fwd = (
         Window.partitionBy(*keys)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, 0)
+        .orderBy(F.col("__ts").asc(), F.col("__src").desc())
+        .rowsBetween(0, Window.unboundedFollowing)
     )
-    carry = carry.select(
-        *keys,
-        (F.col("__bucket") + 1).alias("__next_bucket"),
-        *[
-            F.last(f"__c_{c}", ignorenulls=True).over(wc).alias(f"__c_{c}")
-            for c in value_cols
-        ],
-    )
-    # densify: an anchor in bucket b needs the carry from the latest
-    # feature bucket <= b-1; carry rows only exist at feature buckets, so
-    # join on an as-of over buckets — realized as equi-join after
-    # expanding carry to every bucket present on the anchor side.
-    anchor_buckets = (
-        filled.where(F.col("__src") == a_tag).select(*keys, "__bucket").distinct()
-    )
-    carry_dense = (
-        anchor_buckets.join(
-            carry,
-            on=[*[anchor_buckets[k] == carry[k] for k in keys]]
-            + [carry["__next_bucket"] <= anchor_buckets["__bucket"]],
-            how="left",
+    fills = []
+    for c in value_cols:
+        cand = F.when(
+            F.col(f"__v_{c}").isNotNull(),
+            F.struct(
+                F.col("__tnum").alias("t"), F.col(f"__v_{c}").alias("v")
+            ),
         )
-        .groupBy(*[anchor_buckets[k] for k in keys], anchor_buckets["__bucket"])
-        .agg(
-            *[
-                F.max_by(f"__c_{c}", "__next_bucket").alias(f"__c_{c}")
-                for c in value_cols
-            ]
-        )
-        .select(
-            *[anchor_buckets[k].alias(k) for k in keys],
-            F.col("__bucket"),
-            *[F.col(f"__c_{c}") for c in value_cols],
-        )
-    )
+        if direction in ("backward", "nearest"):
+            fills.append(
+                F.last(cand, ignorenulls=True).over(w_back).alias(f"__b_{c}")
+            )
+        if direction in ("forward", "nearest"):
+            fills.append(
+                F.first(cand, ignorenulls=True).over(w_fwd).alias(f"__w_{c}")
+            )
+    filled = unioned.select("*", *fills)
 
-    res = (
-        filled.where(F.col("__src") == a_tag)
-        .join(carry_dense, on=[*keys, "__bucket"], how="left")
-        .select(
-            "*",
-            *[
-                F.coalesce(f"__w_{c}", f"__c_{c}").alias(f"__f_{c}")
-                for c in value_cols
-            ],
-        )
-    )
-    return res.select(*final_cols)
+    picked = []
+    for c in value_cols:
+        b = F.col(f"__b_{c}") if direction != "forward" else None
+        f_ = F.col(f"__w_{c}") if direction != "backward" else None
+        if direction == "backward":
+            m = b
+        elif direction == "forward":
+            m = f_
+        else:  # nearest: min |delta|, equidistant tie -> backward
+            m = (
+                F.when(b.isNull(), f_)
+                .when(f_.isNull(), b)
+                .when(
+                    F.col("__tnum") - b["t"] <= f_["t"] - F.col("__tnum"), b
+                )
+                .otherwise(f_)
+            )
+        if tolerance is not None:
+            m = F.when(
+                F.abs(F.col("__tnum") - m["t"]) <= F.lit(float(tolerance)), m
+            )
+        picked.append(m["v"].alias(f"__v_{c}_f"))
+    filled = filled.select("*", *picked)
+    return filled.where(F.col("__src") == a_tag).select(*final_cols)
 
 
 class FeatureTable:
@@ -1083,9 +962,9 @@ def interval_join(
     )
     b = int(bucket_seconds)
 
-    ps = points.withColumn("__pb", F.floor(epoch_seconds(point_ts) / F.lit(b)))
-    lo = F.floor(epoch_seconds(start_col) / F.lit(b))
-    hi = F.floor(epoch_seconds(end_col) / F.lit(b))
+    ps = points.withColumn("__pb", _bucketize(epoch_seconds(point_ts), b))
+    lo = _bucketize(epoch_seconds(start_col), b)
+    hi = _bucketize(epoch_seconds(end_col), b)
     guard = F.when(
         hi - lo < F.lit(int(max_buckets_per_interval)), hi
     ).otherwise(

@@ -17,13 +17,12 @@ later steps add Sorts, never Exchanges.
 Hot keys: a full-conversation window serializes one task per
 conversation, so a 10^9-turn conversation stalls the stage.
 ``loop_stats``, ``role_stats``, ``attach_outcome`` and
-``truncate_conversations`` all take ``strategy="bucketed"`` — the
-sessionize-style carry decomposition over (conv, order-bucket): local
-windows are bounded by ``bucket_size`` rows, cross-bucket state rides
-tiny per-(conv, bucket) summary tables (run boundaries, role
-boundaries, row-count carries) merged with small-table windows or a
-pure-expression fold, and everything else is map-side-combined
-aggregation. Output-equivalence with the window strategy is
+``truncate_conversations`` all take ``strategy="bucketed"``: local
+windows run per (conv, order-bucket) of ``bucket_size`` turns and the
+cross-bucket state rides small per-(conv, bucket) tables
+(temporal._carry_in for the row-count and token carries; a
+small-table window or a pure-expression fold for run and role
+boundaries). Output-equivalence with the window strategy is
 unit-tested per operator (test_transcript_ops.py), including a
 randomized differential fixture.
 """
@@ -32,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from .temporal import _bucketize, _carry_in, _sum_before
 
 
 def _norm_hash(text: str | Column) -> Column:
@@ -151,6 +152,9 @@ def _loop_stats_bucketed(
 ) -> DataFrame:
     """Hot-key-safe loop_stats core over (__conv, __ord, __h) rows —
     see loop_stats' docstring for the decomposition."""
+    # a struct key groups and joins NULL conversations as one (see
+    # temporal._keyed)
+    base = base.withColumn("__conv", F.struct("__conv"))
     # repeats without any window: n_repeat = n_turns - distinct hashes
     per_hash = base.groupBy("__conv", "__h").agg(F.count(F.lit(1)).alias("__c"))
     rep = per_hash.groupBy("__conv").agg(
@@ -159,7 +163,7 @@ def _loop_stats_bucketed(
     )
 
     # bucket-local runs (window bounded by bucket_size rows)
-    b = base.withColumn("__bucket", F.floor(F.col("__ord") / F.lit(int(bucket_size))))
+    b = base.withColumn("__bucket", _bucketize(F.col("__ord"), bucket_size))
     wloc = Window.partitionBy("__conv", "__bucket").orderBy("__ord")
     imm = F.coalesce(
         (F.lag("__h").over(wloc) == F.col("__h")).cast("int"), F.lit(0)
@@ -225,7 +229,7 @@ def _loop_stats_bucketed(
     )
 
     out = rep.join(runs, "__conv").select(
-        F.col("__conv").alias(conv_col),
+        F.col("__conv.__conv").alias(conv_col),
         "n_turns",
         "n_repeat_turns",
         F.round(F.col("n_repeat_turns") / F.col("n_turns"), 6).alias("loop_frac"),
@@ -313,17 +317,13 @@ def truncate_conversations(
     conversation key — same single hash-exchange contract as
     ``loop_stats``; a 10^9-turn conversation serializes its task.
 
-    strategy="bucketed": the sessionize-style carry trick for hot
-    keys — requires a NUMERIC ``order_col``. Turns are bucketed on
-    ``floor(order / bucket_size)``; a tiny per-(conv, bucket) total
-    table gives each bucket its carry-in (exclusive prefix over
-    earlier buckets), the running sum is computed per (conv, bucket)
-    task, and — because cum_tokens is monotone — every bucket whose
-    carry-in already exceeds ``budget`` is dropped BEFORE its window
-    runs: a 10^9-turn conversation only ever materializes the few
-    leading buckets that can still fit the budget. The bucket-total
-    aggregation is map-side combined, so no task scans a whole hot
-    conversation.
+    strategy="bucketed" (hot keys, NUMERIC ``order_col``): the running
+    sum runs per (conv, ``floor(order / bucket_size)``) on top of a
+    token carry-in from earlier buckets (temporal._carry_in); because
+    cum_tokens is monotone, every bucket whose carry-in already exceeds
+    ``budget`` is dropped BEFORE its window runs, so a 10^9-turn
+    conversation only materializes the few leading buckets that can
+    still fit.
 
     A turn with NULL tokens counts 0; ``token_col`` is cast to long
     PER TURN (token counts are integral — the per-row cast keeps the
@@ -336,23 +336,15 @@ def truncate_conversations(
     if strategy == "bucketed":
         # sign-flip makes "tail" the ascending case too
         o = F.col(order_col) if keep == "head" else -F.col(order_col)
-        b = turns.withColumn("__ord", o).withColumn(
-            "__bucket", F.floor(F.col("__ord") / F.lit(int(bucket_size)))
-        )
-        wb = (
-            Window.partitionBy(conv_col)
-            .orderBy("__bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        carry = (
-            b.groupBy(conv_col, "__bucket")
-            .agg(F.sum(tok).alias("__t"))
-            .withColumn("__carry", F.coalesce(F.sum("__t").over(wb), F.lit(0)))
-            .drop("__t")
+        b = turns.withColumn("__ord", o)
+        b = b.withColumn("__bucket", _bucketize(F.col("__ord"), bucket_size))
+        b = _carry_in(
+            b, [conv_col], [F.sum(tok).alias("__t")],
+            lambda w: [_sum_before("__t", w).alias("__carry")],
         )
         # monotone cumsum: a bucket whose carry-in busts the budget can
         # never contribute a kept row — prune it before the window
-        b = b.join(carry, [conv_col, "__bucket"]).where(F.col("__carry") <= budget)
+        b = b.where(F.col("__carry") <= budget)
         wl = (
             Window.partitionBy(conv_col, "__bucket")
             .orderBy("__ord")
@@ -419,9 +411,10 @@ def role_stats(
         F.col(role_col).cast("string").alias("__role"),
     )
     if strategy == "bucketed":
-        b = base.withColumn(
-            "__bucket", F.floor(F.col("__ord") / F.lit(int(bucket_size)))
-        )
+        # a struct key groups and joins NULL conversations as one (see
+        # temporal._keyed)
+        base = base.withColumn("__conv", F.struct("__conv"))
+        b = base.withColumn("__bucket", _bucketize(F.col("__ord"), bucket_size))
         wloc = Window.partitionBy("__conv", "__bucket").orderBy("__ord")
         same = F.coalesce(
             (F.lag("__role").over(wloc) == F.col("__role")).cast("int"), F.lit(0)
@@ -465,7 +458,7 @@ def role_stats(
         # left join: an all-NULL-role conversation still rolls up
         # (n_distinct_roles 0), like countDistinct
         out = counts.join(distinct, "__conv", "left").select(
-            F.col("__conv").alias(conv_col),
+            F.col("__conv.__conv").alias(conv_col),
             "n_turns",
             F.coalesce("n_distinct_roles", F.lit(0)).cast("long").alias(
                 "n_distinct_roles"
@@ -521,50 +514,40 @@ def attach_outcome(
     ``turns_remaining`` a count over the same frame — no second sort,
     no join. Hot-key caveat as with_lags.
 
-    strategy="bucketed" (hot-key safe, NUMERIC ``order_col``): the
-    final-turn columns come from a map-side-combined
-    groupBy(conv).agg(max_by(col, order)) joined back (an equi-join AQE
-    can broadcast or skew-split — a window cannot be); the position for
-    ``turns_remaining`` is a per-(conv, bucket) row_number bounded by
-    ``bucket_size`` plus a row-count carry from the tiny per-bucket
-    table, exactly truncate_conversations' carry trick.
+    strategy="bucketed" (hot-key safe, NUMERIC ``order_col``): one
+    temporal._carry_in over (conv, ``floor(order / bucket_size)``)
+    carries the row counts of earlier buckets, the conversation total
+    and the last bucket's final-turn values (per-bucket ``max_by``);
+    ``turns_remaining`` adds a per-(conv, bucket) row_number.
     """
     if strategy not in ("window", "bucketed"):
         raise ValueError(f"unknown strategy {strategy!r}")
     if strategy == "bucketed":
-        finals = turns.groupBy(conv_col).agg(
-            *[F.max_by(c, order_col).alias(prefix + c) for c in outcome_cols],
-            F.count(F.lit(1)).alias("__tot"),
-        )
-        b = turns.withColumn(
-            "__bucket", F.floor(F.col(order_col) / F.lit(int(bucket_size)))
-        )
-        carry = (
-            b.groupBy(conv_col, "__bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .withColumn(
-                "__carry",
-                F.coalesce(
-                    F.sum("__bn").over(
-                        Window.partitionBy(conv_col)
-                        .orderBy("__bucket")
-                        .rowsBetween(Window.unboundedPreceding, -1)
-                    ),
-                    F.lit(0),
-                ),
-            )
-            .drop("__bn")
+        b = turns.withColumn("__bucket", _bucketize(F.col(order_col), bucket_size))
+        b = _carry_in(
+            b,
+            [conv_col],
+            [
+                F.count(F.lit(1)).alias("__n"),
+                *[F.max_by(c, order_col).alias(f"__last_{c}") for c in outcome_cols],
+            ],
+            lambda w: [
+                _sum_before("__n", w).alias("__carry"),
+                F.sum("__n")
+                .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+                .alias("__tot"),
+                *[
+                    F.last(f"__last_{c}")
+                    .over(w.rowsBetween(Window.currentRow, Window.unboundedFollowing))
+                    .alias(prefix + c)
+                    for c in outcome_cols
+                ],
+            ],
         )
         wloc = Window.partitionBy(conv_col, "__bucket").orderBy(order_col)
-        out = (
-            b.join(carry, [conv_col, "__bucket"])
-            .withColumn("__rn", F.row_number().over(wloc))
-            .join(finals, conv_col)
-            .withColumn(
-                "turns_remaining",
-                (F.col("__tot") - F.col("__carry") - F.col("__rn")).cast("long"),
-            )
-            .drop("__bucket", "__carry", "__rn", "__tot")
+        out = b.withColumn(
+            "turns_remaining",
+            (F.col("__tot") - F.col("__carry") - F.row_number().over(wloc)).cast("long"),
         )
         # restore the window strategy's column order (input cols, then
         # final_*, then turns_remaining)

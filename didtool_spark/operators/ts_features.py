@@ -26,8 +26,8 @@ Scale design:
   integer microseconds (exact — no float drift in the gate hash).
 - ``with_rolling_distinct``: size(array_distinct(collect_list)) over
   the bounded frame — per-row state is the frame, which is k-bounded by
-  construction; time mode gets the with_rolling context-duplication
-  bucketed strategy for hot keys.
+  construction; time mode gets the bucketed strategy for hot keys
+  (temporal._range_frame).
 - ``with_trend``: closed-form OLS slope from five running sums; x is
   rebased to per-key seconds so ``n*sxx - sx^2`` stays far from the
   double cancellation cliff (epoch^2 ~ 3e18 would eat 2/3 of the
@@ -44,7 +44,15 @@ from math import log
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .temporal import with_rolling
+from .temporal import (
+    _bucketize,
+    _carry_in,
+    _keyed,
+    _range_frame,
+    _sum_before,
+    epoch_seconds,
+    with_rolling,
+)
 
 __all__ = [
     "with_decayed",
@@ -182,7 +190,7 @@ def with_decayed(
         return out.drop("__us", "__t0us")
 
     bw_us = bw * 1_000_000
-    out = out.withColumn("__b", F.floor(F.col("__us") / F.lit(bw_us)))
+    out = out.withColumn("__b", _bucketize(F.col("__us"), bw_us))
     x = (F.col("__us") - F.col("__b") * F.lit(bw_us)).cast("double") / F.lit(1e6)
     wb = (
         Window.partitionBy(*keys_l, "__b")
@@ -210,7 +218,8 @@ def with_decayed(
 
     # per-key bucket summaries -> sequential carry fold (tiny per-key
     # array: one element per occupied bucket, NOT per row)
-    g = out.groupBy(*keys_l, "__b").agg(
+    out = _keyed(out, keys_l)
+    g = out.groupBy("__kk", "__b").agg(
         *[F.first(f"__tot_{t}").alias(f"s_{t}") for t in carry_cols],
         *[contrib[t].alias(f"n_{t}") for t in carry_cols],
     )
@@ -220,7 +229,7 @@ def with_decayed(
         F.lit(0).cast("long").alias("cnt"),
         F.array().cast("array<struct<b:long,carry:double,pcnt:long>>").alias("out"),
     )
-    folded = g.groupBy(*keys_l).agg(
+    folded = g.groupBy("__kk").agg(
         F.array_sort(
             F.collect_list(
                 F.struct(
@@ -244,18 +253,18 @@ def with_decayed(
         res = F.aggregate(arr, init, _fold_step(lam_bw), lambda a: a["out"])
         folded = folded.withColumn(f"__c_{tag}", res)
     carries = folded.select(
-        *keys_l,
+        "__kk",
         F.explode(
             F.arrays_zip(*[F.col(f"__c_{t}").alias(t) for t in carry_cols])
         ).alias("__z"),
     ).select(
-        *keys_l,
+        "__kk",
         F.col(f"__z.{carry_cols[0]}.b").alias("__b"),
         *[F.col(f"__z.{t}.carry").alias(f"__carry_{t}") for t in carry_cols],
         *[F.col(f"__z.{t}.pcnt").alias(f"__pcnt_{t}") for t in carry_cols],
     )
-    j = out.join(carries, [*keys_l, "__b"], "left")
-    drop = ["__us", "__b"]
+    j = out.join(carries, ["__kk", "__b"], "left")
+    drop = ["__us", "__b", "__kk"]
     for col, agg in specs_l:
         tag = f"{col}_{agg}"
         name = f"{col}_dec{agg}_{hl_tag}s"
@@ -330,9 +339,8 @@ def with_rolling_distinct(
 
     Column: ``{col}_nunique_last{k}`` / ``{col}_nunique_{s}s``.
     Per-row state is the frame's values (k-bounded / range-bounded).
-    Time mode supports strategy="bucketed" — the with_rolling
-    context-duplication trick (rows also emitted into the next bucket
-    as context) so one hot key never becomes one giant task.
+    Time mode supports strategy="bucketed" (temporal._range_frame), so
+    one hot key never becomes one giant task.
     """
     if (k is None) == (seconds is None):
         raise ValueError("pass exactly one of k= or seconds=")
@@ -352,35 +360,14 @@ def with_rolling_distinct(
         )
         return df.withColumn(f"{col}_nunique_last{k}", dcount(w))
 
-    name = f"{col}_nunique_{int(seconds)}s"
-    if strategy == "window":
-        out = df.withColumn("__us", _micros(ts_col))
-        w = (
-            Window.partitionBy(*keys_l)
-            .orderBy("__us")
-            .rangeBetween(-int(seconds) * 1_000_000, upper)
-        )
-        return out.withColumn(name, dcount(w)).drop("__us")
-    if strategy != "bucketed":
+    if strategy not in ("window", "bucketed"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    bw_us = max(int(bucket_seconds), int(seconds)) * 1_000_000
-    base = df.withColumn("__us", _micros(ts_col))
-    own = base.withColumn("__bk", F.floor(F.col("__us") / F.lit(bw_us))).withColumn(
-        "__ctx", F.lit(False)
-    )
-    ctx = base.withColumn(
-        "__bk", F.floor(F.col("__us") / F.lit(bw_us)) + 1
-    ).withColumn("__ctx", F.lit(True))
-    u = own.unionByName(ctx)
-    w = (
-        Window.partitionBy(*keys_l, "__bk")
-        .orderBy("__us")
-        .rangeBetween(-int(seconds) * 1_000_000, upper)
-    )
-    return (
-        u.withColumn(name, dcount(w))
-        .where(~F.col("__ctx"))
-        .drop("__us", "__bk", "__ctx")
+    name = f"{col}_nunique_{int(seconds)}s"
+    reach = int(seconds) * 1_000_000
+    return _range_frame(
+        df, keys_l, _micros(ts_col), reach,
+        int(bucket_seconds) * 1_000_000 if strategy == "bucketed" else None,
+        lambda u, w: u.withColumn(name, dcount(w.rangeBetween(-reach, upper))),
     )
 
 
@@ -491,14 +478,11 @@ def with_cusum(
     no iteration, exactly SQL-replayable.  NULL values leave the state
     unchanged (their increment is 0 on both sides).
 
-    ``strategy="bucketed"`` (hot-key safe): rows bucket on
-    ``floor(epoch(ts_col) / bucket_seconds)``; prefix sums AND prefix
-    minima both compose across buckets (global running min =
-    min(carry_min, carry_sum + local running min)), so each
-    (key, bucket) task only sorts its own bucket and the carries come
-    from a tiny per-bucket totals table.  Output equals the window
-    strategy up to float-addition regrouping (~1e-9; the equivalence
-    unit and fuzz suite pin it).
+    ``strategy="bucketed"`` (hot-key safe, temporal._carry_in): prefix
+    sums AND prefix minima compose across ``bucket_seconds`` buckets
+    (global running min = min(carry_min, carry_sum + local running
+    min)).  Output equals the window strategy up to float-addition
+    regrouping (~1e-9; the equivalence unit and fuzz suite pin it).
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     order_l = [order] if isinstance(order, str) else list(order)
@@ -506,6 +490,7 @@ def with_cusum(
     d_pos = F.coalesce(x - F.lit(float(target)) - F.lit(float(slack)), F.lit(0.0))
     d_neg = F.coalesce(-(x - F.lit(float(target)) + F.lit(float(slack))), F.lit(0.0))
 
+    src, tmp = df, []
     if strategy == "window":
         w = (
             Window.partitionBy(*keys_l).orderBy(*order_l)
@@ -516,12 +501,9 @@ def with_cusum(
         pos = s_pos - F.least(F.lit(0.0), F.min(s_pos).over(w))
         neg = s_neg - F.least(F.lit(0.0), F.min(s_neg).over(w))
     elif strategy == "bucketed":
-        from .temporal import epoch_seconds
-
-        b = F.floor(epoch_seconds(ts_col) / F.lit(int(bucket_seconds)))
-        base = df.withColumn("__bucket", b).withColumn(
-            "__dp", d_pos
-        ).withColumn("__dn", d_neg)
+        base = df.withColumn(
+            "__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds)
+        ).withColumn("__dp", d_pos).withColumn("__dn", d_neg)
         wl = (
             Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
             .rowsBetween(Window.unboundedPreceding, 0)
@@ -531,31 +513,34 @@ def with_cusum(
         ).withColumn("__lmp", F.min("__lsp").over(wl)).withColumn(
             "__lmn", F.min("__lsn").over(wl)
         )
-        # tiny per-(key, bucket) totals: bucket sum + bucket min-prefix
-        tot = base.groupBy(*keys_l, "__bucket").agg(
-            F.sum("__dp").alias("__tp"), F.sum("__dn").alias("__tn"),
-            F.min("__lsp").alias("__bp"), F.min("__lsn").alias("__bn"),
+
+        # per-(key, bucket) totals: bucket sum + bucket min-prefix. Then
+        # carry_sum(b) = exclusive prefix of bucket totals, and
+        # carry_min(b) = min over earlier buckets of (carry_sum(b') +
+        # local_min(b')) — two passes over the same small table
+        def sums(w):
+            return [
+                "__bp", "__bn",
+                _sum_before("__tp", w).alias("__cp"),
+                _sum_before("__tn", w).alias("__cn"),
+            ]
+
+        def mins(w):
+            before = w.rowsBetween(Window.unboundedPreceding, -1)
+            return [
+                "__cp", "__cn",
+                F.min(F.col("__cp") + F.col("__bp")).over(before).alias("__mp"),
+                F.min(F.col("__cn") + F.col("__bn")).over(before).alias("__mn"),
+            ]
+
+        j = _carry_in(
+            base, keys_l,
+            [
+                F.sum("__dp").alias("__tp"), F.sum("__dn").alias("__tn"),
+                F.min("__lsp").alias("__bp"), F.min("__lsn").alias("__bn"),
+            ],
+            sums, mins,
         )
-        wprev = (
-            Window.partitionBy(*keys_l).orderBy("__bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        # carry_sum(b) = exclusive prefix of bucket totals; then
-        # carry_min(b) = min over earlier buckets of
-        # (carry_sum(b') + local_min(b')) — two window passes over the
-        # SAME tiny per-bucket table (projected between them so the
-        # second window sees plain columns)
-        c1 = tot.select(
-            *keys_l, "__bucket", "__bp", "__bn",
-            F.coalesce(F.sum("__tp").over(wprev), F.lit(0.0)).alias("__cp"),
-            F.coalesce(F.sum("__tn").over(wprev), F.lit(0.0)).alias("__cn"),
-        )
-        carries = c1.select(
-            *keys_l, "__bucket", "__cp", "__cn",
-            F.min(F.col("__cp") + F.col("__bp")).over(wprev).alias("__mp"),
-            F.min(F.col("__cn") + F.col("__bn")).over(wprev).alias("__mn"),
-        )
-        j = base.join(carries, [*keys_l, "__bucket"])
         s_pos = F.col("__cp") + F.col("__lsp")
         s_neg = F.col("__cn") + F.col("__lsn")
         run_min_p = F.least(
@@ -568,25 +553,16 @@ def with_cusum(
         )
         pos = s_pos - F.least(F.lit(0.0), run_min_p)
         neg = s_neg - F.least(F.lit(0.0), run_min_n)
-        out = j.withColumn(f"{value_col}_cusum_pos", pos).withColumn(
-            f"{value_col}_cusum_neg", neg
-        ).drop(
+        src, tmp = j, [
             "__bucket", "__dp", "__dn", "__lsp", "__lsn", "__lmp", "__lmn",
             "__cp", "__cn", "__mp", "__mn",
-        )
-        if threshold is not None:
-            out = out.withColumn(
-                f"{value_col}_cusum_alarm",
-                (F.col(f"{value_col}_cusum_pos") > F.lit(float(threshold)))
-                | (F.col(f"{value_col}_cusum_neg") > F.lit(float(threshold))),
-            )
-        return out
+        ]
     else:
         raise ValueError(f"unknown with_cusum strategy {strategy!r}")
 
-    out = df.withColumn(f"{value_col}_cusum_pos", pos).withColumn(
+    out = src.withColumn(f"{value_col}_cusum_pos", pos).withColumn(
         f"{value_col}_cusum_neg", neg
-    )
+    ).drop(*tmp)
     if threshold is not None:
         out = out.withColumn(
             f"{value_col}_cusum_alarm",

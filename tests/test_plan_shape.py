@@ -154,6 +154,36 @@ def test_bucketed_rolling_no_global_window(spark, tmp_path_factory):
         assert "__bucket" in spec, spec
 
 
+def test_bucketed_stitch_exchange_counts(spark, tmp_path_factory):
+    """The bucketed carry-ins (temporal._carry_in) cost few shuffles:
+    the bucketed materialize chain stays at or under the 16 Exchanges of
+    its pre-helper plan, and the bucketed as-of join under the 4 of its
+    old bucket-densifying theta join."""
+    import re
+
+    from didtool_spark.operators.temporal import asof_join
+
+    path = str(tmp_path_factory.mktemp("stitch") / "t")
+    generate_transcripts(spark, n_convs=10, avg_turns=5).write.parquet(path)
+    tr = spark.read.parquet(path)
+
+    def n_exchanges(df):
+        return len(re.findall(r"\(\d+\) Exchange", plan_str(df)))
+
+    mat = materialize_features(tr, strategy="bucketed", bucket_seconds=3600)
+    assert n_exchanges(mat) <= 16, plan_str(mat)[:3000]
+    feats = tr.where(F.col("role") == "tool").select(
+        "conv_id", "ts", F.length("text").cast("double").alias("score")
+    )
+    anchors = tr.where(F.col("role") == "user").select("conv_id", "turn_idx", "ts")
+    for strict in (False, True):
+        out = asof_join(
+            anchors, feats, value_cols=["score"], strict=strict,
+            strategy="bucketed", n_buckets=16,
+        )
+        assert n_exchanges(out) < 4, plan_str(out)[:3000]
+
+
 def test_new_text_ops_plan_shapes(spark):
     """Scale contracts for the session's text/dedup additions:
     - paragraph_dedup: no Window (groupBy-min, not a per-hash sort), no

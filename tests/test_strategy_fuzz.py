@@ -8,7 +8,9 @@ gaps (order ties broken by turn_idx), NULL/empty text, NULL roles,
 NULL tools, NULL values, heavy text repeats — and assert the bucketed
 hot-key strategy is output-identical to the single-window strategy on
 each draw.  Tiny bucket sizes (2 turns / 30 minutes) force many carry
-boundaries per conversation.
+boundaries per conversation.  One conversation may have a NULL key (the
+window strategy groups NULL keys as one key, so the bucketed stitch must
+too); ``NULL_KEY_ROWS`` pins that case on every test.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ import datetime
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from didtool_spark.operators.labels import (
@@ -29,6 +31,7 @@ from didtool_spark.operators.seq_features import (
     with_turn_novelty,
 )
 from didtool_spark.operators.temporal import (
+    asof_join,
     forward_fill,
     sessionize,
     with_lags,
@@ -63,9 +66,11 @@ FUZZ = settings(
 def transcripts(draw):
     """Rows (conv_id, turn_idx, role, text, tool, ts, value): 1-3
     ragged conversations, gaps in [0, 3600]s (ties included), nullable
-    everything except the key/order columns."""
+    everything except the order columns; the last conversation's key
+    may be NULL."""
     rows = []
     n_convs = draw(st.integers(1, 3))
+    null_last = draw(st.booleans())
     for ci in range(n_convs):
         n_turns = draw(st.integers(1, 8))
         gaps = draw(
@@ -79,7 +84,7 @@ def transcripts(draw):
             t += gaps[ti]
             rows.append(
                 (
-                    f"c{ci}",
+                    None if null_last and ci == n_convs - 1 else f"c{ci}",
                     ti,
                     draw(st.sampled_from(ROLES)),
                     draw(st.sampled_from(TEXTS)),
@@ -95,6 +100,24 @@ def transcripts(draw):
             )
     return rows
 
+
+def _null_key_rows():
+    """Six turns under conv_id NULL next to six under "a", 20 minutes
+    apart: every 30-minute bucket boundary needs a carry."""
+    rows = []
+    for key in ("a", None):
+        for ti in range(6):
+            rows.append(
+                (
+                    key, ti, ROLES[ti % 3], TEXTS[ti], TOOLS[ti % 2],
+                    BASE + datetime.timedelta(seconds=1200 * ti),
+                    None if ti == 2 else float(ti),
+                )
+            )
+    return rows
+
+
+NULL_KEY_ROWS = _null_key_rows()
 
 SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -119,6 +142,7 @@ def _cmp(a_df, b_df, sort_cols):
 
 @FUZZ
 @given(rows=transcripts())
+@example(rows=NULL_KEY_ROWS)
 def test_temporal_bucketed_equals_window_fuzz(spark, rows):
     df = spark.createDataFrame(rows, SCHEMA)
     _cmp(
@@ -154,11 +178,30 @@ def test_temporal_bucketed_equals_window_fuzz(spark, rows):
                      bucket_seconds=1800),
         ["conv_id", "turn_idx"],
     )
+    # as-of: every turn is an anchor, so anchors share timestamps with
+    # features; features are one row per (key, ts) — two features at one
+    # instant would make "the latest" a tie — with NULL values kept, and
+    # the user turns they skip leave anchor-only buckets
+    feats = (
+        df.where(F.col("role").isin("assistant", "tool"))
+        .groupBy("conv_id", "ts")
+        .agg(F.max("value").alias("value"))
+    )
+    anchors = df.select("conv_id", "turn_idx", "ts")
+    for strict in (False, True):
+        kw = dict(keys="conv_id", value_cols=["value"], strict=strict)
+        _cmp(
+            asof_join(anchors, feats, **kw),
+            asof_join(anchors, feats, strategy="bucketed", bucket_seconds=600,
+                      **kw),
+            ["conv_id", "turn_idx"],
+        )
 
 
 @FUZZ
 @given(rows=transcripts(), keep=st.sampled_from(["head", "tail"]),
        budget=st.sampled_from([0, 5, 12, 40]))
+@example(rows=NULL_KEY_ROWS, keep="head", budget=12)
 def test_transcript_bucketed_equals_window_fuzz(spark, rows, keep, budget):
     df = spark.createDataFrame(rows, SCHEMA)
     _cmp(
@@ -187,6 +230,7 @@ def test_transcript_bucketed_equals_window_fuzz(spark, rows, keep, budget):
 
 @FUZZ
 @given(rows=transcripts())
+@example(rows=NULL_KEY_ROWS)
 def test_feature_bucketed_equals_window_fuzz(spark, rows):
     df = spark.createDataFrame(rows, SCHEMA)
     _cmp(
@@ -245,6 +289,7 @@ def test_feature_bucketed_equals_window_fuzz(spark, rows):
 
 @FUZZ
 @given(rows=transcripts())
+@example(rows=NULL_KEY_ROWS)
 def test_scd2_bucketed_equals_window_fuzz(spark, rows):
     """SCD2 run compression: the bucketed carry-in run numbering must
     reproduce the window strategy on ragged, tie-heavy, NULL-valued

@@ -125,7 +125,7 @@ def _asof_oracle(anchors_pd, feats_pd, strict):
     return res.sort_values(["conv_id", "ts", "turn_idx"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["window", "bucketed", "pandas"])
+@pytest.mark.parametrize("strategy", ["window", "bucketed"])
 @pytest.mark.parametrize("strict", [False, True])
 def test_asof_join_matches_merge_asof(tr, tr_pd, strict, strategy):
     # features: tool turns carry a score; anchors: user turns
@@ -157,7 +157,7 @@ def test_asof_join_matches_merge_asof(tr, tr_pd, strict, strategy):
     assert got["tool_score"].notna().any()
 
 
-@pytest.mark.parametrize("strategy", ["window", "pandas"])
+@pytest.mark.parametrize("strategy", ["window"])
 @pytest.mark.parametrize(
     "direction, strict, tolerance",
     [
@@ -175,7 +175,7 @@ def test_asof_direction_tolerance_matches_merge_asof(
 ):
     """direction='forward'/'nearest' and tolerance replicate
     pandas.merge_asof exactly (incl. the equidistant-tie-goes-backward
-    rule) on both the window and the Arrow-cogroup strategies."""
+    rule) on the window strategy."""
     from pyspark.sql import functions as F
 
     feats = tr.where(F.col("role") == "tool").select(
@@ -227,12 +227,10 @@ def test_asof_nearest_tie_goes_backward(spark):
         ],
         "conv_id string, ts timestamp, v double",
     )
-    for strategy in ("window", "pandas"):
-        out = asof_join(
-            anchors, feats, keys="conv_id", value_cols=["v"],
-            direction="nearest", strategy=strategy,
-        ).collect()
-        assert out[0]["v"] == 1.0, strategy
+    out = asof_join(
+        anchors, feats, keys="conv_id", value_cols=["v"], direction="nearest",
+    ).collect()
+    assert out[0]["v"] == 1.0
 
 
 def test_asof_bucketed_rejects_non_backward():
