@@ -4,13 +4,13 @@ arXiv:1508.07909) as a distributed Spark operator pair:
 - ``fit_bpe``: learn merge rules from a corpus. The sufficient
   statistic is the word-frequency table (groupBy(word).count() — the
   ONLY pass over the corpus; distinct words, not occurrences, drive
-  every later cost). The merge loop then runs either on the driver
-  over the capped collected table (default — bit-reproducible,
-  mirrors the reference ecosystem's subword-nmt which also loops over
-  a word-freq dict) or fully Spark-side (``distributed=True``: each
-  round is one pair-count aggregation + one argmax + one column
-  rewrite over the word table, proven equal to the driver loop in
-  tests).
+  every later cost). The merge loop runs on the driver over the
+  collected table when it has at most ``_DRIVER_WORDS`` distinct words
+  (bit-reproducible, mirrors the reference ecosystem's subword-nmt
+  which also loops over a word-freq dict); larger tables run the same
+  loop Spark-side (each round is one pair-count aggregation + one
+  argmax + one column rewrite over the word table, proven equal to the
+  driver loop in tests).
 - ``bpe_tokenize``: apply the learned merges. Segmentation happens on
   the DISTINCT-word vocabulary (each word segmented ONCE however many
   times it occurs), then a join + one groupBy(doc) reassembly — the
@@ -39,8 +39,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from .binning import collect_capped
+
 SEP = "\x1f"  # U+001F unit separator: stripped from input defensively
 EOW = "</w>"  # end-of-word symbol (one symbol, never char-split)
+# distinct-word tables up to this size are collected for the driver loop
+_DRIVER_WORDS = 2_000_000
 
 
 # ----------------------------------------------------------- encoding
@@ -137,36 +141,29 @@ def fit_bpe(
     text_col: str = "text",
     n_merges: int = 100,
     min_count: int = 1,
-    max_words: int = 2_000_000,
-    distributed: bool = False,
 ) -> list[tuple[str, str]]:
     """Learn BPE merges from a corpus.
 
-    Driver path (default): ONE corpus pass builds (word, count); words
-    below ``min_count`` are dropped (they cannot win an argmax that a
-    kept word ties, and at web scale the hapax tail IS the table);
-    the capped collect raises — never silently truncates — when the
-    distinct-word table exceeds ``max_words``, naming the distributed
-    path, exactly the collect_capped contract everywhere else in the
-    package.
+    ONE corpus pass builds (word, count); words below ``min_count`` are
+    dropped (they cannot win an argmax that a kept word ties, and at
+    web scale the hapax tail IS the table).
 
-    Distributed path: the same algorithm with the word table kept in
-    Spark. Per round: adjacent-pair explode -> ONE count aggregation
-    (map-side combined; the shuffled unit is (pair, long)) -> argmax
-    to the driver (one row) -> one replace-column rewrite,
+    Driver path: a distinct-word table of at most ``_DRIVER_WORDS``
+    rows is collected (``binning.collect_capped`` — the driver never
+    holds more than the cap) and ``fit_bpe_py`` loops over it.
+
+    Distributed path (larger tables): the same algorithm with the word
+    table kept in Spark. Per round: adjacent-pair explode -> ONE count
+    aggregation (map-side combined; the shuffled unit is (pair, long))
+    -> argmax to the driver (one row) -> one replace-column rewrite,
     localCheckpoint-ed so round r does not replay rounds 0..r-1.
     2 jobs x n_merges; equality with the driver loop is unit-tested.
     """
     wf = _word_freqs(corpus, text_col)
     if min_count > 1:
         wf = wf.where(F.col("cnt") >= min_count)
-    if not distributed:
-        rows = wf.limit(max_words + 1).collect()
-        if len(rows) > max_words:
-            raise ValueError(
-                f"distinct-word table exceeds max_words={max_words}; "
-                "raise the cap or use distributed=True"
-            )
+    rows = collect_capped(wf, _DRIVER_WORDS)
+    if rows is not None:
         freqs = sorted((r["word"], r["cnt"]) for r in rows)
         return fit_bpe_py(freqs, n_merges)
 
@@ -210,38 +207,18 @@ def bpe_tokenize(
     text_col: str = "text",
     id_col: str = "doc_id",
     out_col: str = "tokens",
-    strategy: str = "vocab",
 ) -> DataFrame:
     """Tokenize ``text_col`` with learned merges; adds ``out_col``
     (array<string>) preserving all other columns.
 
-    strategy='vocab' (default, the scale path): segment each DISTINCT
-    word once (the chained-replace projection runs over the vocabulary
-    table, inside codegen), join occurrences to their segmentation,
-    reassemble per doc with ONE groupBy — word order restored via
-    posexplode positions. AQE broadcasts the vocab side when it fits;
-    at web scale it degrades to a shuffled equi-join on the word, never
-    to per-occurrence expression work.
-
-    strategy='inline': the chained replaces applied per word occurrence
-    inside an array transform — no join and no shuffle, but the HOF
-    lambda is interpreted per occurrence; kept as the
-    equivalence-tested simple form (and the right choice for small
-    merge lists over wide rows).
+    Each DISTINCT word is segmented once (the chained-replace
+    projection runs over the vocabulary table, inside codegen), the
+    occurrences join to their segmentation and ONE groupBy reassembles
+    each doc — word order restored via posexplode positions. AQE
+    broadcasts the vocab side when it fits; at web scale it degrades to
+    a shuffled equi-join on the word, never to per-occurrence
+    expression work.
     """
-    if strategy == "inline":
-        toks = F.flatten(
-            F.transform(
-                words_expr(text_col),
-                lambda w: tokens_from_seg_expr(
-                    apply_merges_expr(seg_init_expr(w), merges)
-                ),
-            )
-        )
-        return df.withColumn(out_col, toks)
-    if strategy != "vocab":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
     occ = df.select(
         F.col(id_col).alias("__id"),
         F.posexplode(words_expr(text_col)).alias("__pos", "__w"),

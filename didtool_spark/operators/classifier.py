@@ -16,9 +16,9 @@ literals). SCORING is the web-scale pass: explode gram buckets ->
 broadcast the bounded (bucket, weight) table -> one (doc, double)
 shuffle with map-side combine. Text never moves.
 
-For labeled sets above the collect cap, ``fit_quality_classifier(...,
-distributed=True)`` runs the SAME full-batch gradient descent with
-per-iteration Spark aggregation: each step broadcasts the current
+For labeled sets above the collect cap (``_DRIVER_DOCS`` documents),
+``fit_quality_classifier`` runs the SAME full-batch gradient descent
+with per-iteration Spark aggregation: each step broadcasts the current
 weights (n_buckets rows), computes per-doc probabilities and
 residuals, and reduces the gradient back to n_buckets rows — the
 driver only ever holds the weight vector. Parity with the driver path
@@ -53,6 +53,9 @@ __all__ = [
     "fit_quality_classifier",
     "score_quality",
 ]
+
+# labeled sets up to this many documents are collected for the numpy fit
+_DRIVER_DOCS = 200_000
 
 
 class QualityClassifier(NamedTuple):
@@ -130,25 +133,18 @@ def fit_quality_classifier(
     n_iter: int = 300,
     lr: float = 5.0,
     l2: float = 1e-4,
-    max_train_docs: int = 200_000,
-    distributed: bool = False,
     hash_fn: str = "xxhash64",
 ) -> QualityClassifier:
-    """Fit the hashed-n-gram logistic regression. Driver path (default):
-    distributed feature aggregation, capped collect, deterministic
-    numpy GD. ``distributed=True``: identical full-batch GD with
-    per-iteration Spark aggregation for labeled sets that exceed any
-    reasonable collect (the driver only holds the weight vector)."""
+    """Fit the hashed-n-gram logistic regression: distributed feature
+    aggregation, then deterministic full-batch GD. Labeled sets of at
+    most ``_DRIVER_DOCS`` documents are collected and fitted in numpy;
+    larger ones run the identical GD with per-iteration Spark
+    aggregation (the driver only holds the weight vector)."""
     feats = doc_bucket_counts(labeled, col, id_col, n_buckets, label_col, hash_fn)
-    if distributed:
+    n_docs = labeled.select(id_col).distinct().count()
+    if n_docs > _DRIVER_DOCS:
         return _fit_distributed(
             feats, id_col, label_col, n_buckets, n_iter, lr, l2, hash_fn
-        )
-    n_docs = labeled.select(id_col).distinct().count()
-    if n_docs > max_train_docs:
-        raise ValueError(
-            f"labeled set has {n_docs} docs > max_train_docs={max_train_docs}; "
-            "sample the labeled set or pass distributed=True"
         )
     collected = feats.collect()
     rows = [(r[id_col], r["b"], r["cnt"]) for r in collected]

@@ -15,11 +15,9 @@ runs between raw crawl and tokenizer:
   proportions (the static-weights form of domain reweighting).
 
 Scale notes:
-- decontaminate shuffles only (id, gram_hash) pairs — 16 bytes/gram —
-  never text; with ``strategy="broadcast"`` (the common case: benchmark
-  suites are MBs, corpora are TBs) the benchmark gram set ships to the
-  scan and the contamination test is a map-side hash-join with NO
-  shuffle of the corpus at all.
+- decontaminate ships the benchmark gram set (benchmark suites are
+  MBs, corpora are TBs) to the scan: the contamination test is a
+  map-side hash-join with NO shuffle of the corpus grams at all.
 - gopher_quality is per-row column expressions except the
   most-frequent-2-gram statistic, which genuinely needs a per-(doc,
   gram) count: that is one shuffle of (doc_id, gram_hash) with
@@ -75,7 +73,6 @@ def decontaminate(
     bench_col: str | None = None,
     n: int = 13,
     min_hits: int = 1,
-    strategy: str = "broadcast",
     keep_contaminated: bool = True,
 ) -> DataFrame:
     """Flag (or drop) documents that share >= ``min_hits`` distinct
@@ -90,17 +87,11 @@ def decontaminate(
     ``contaminated``; with ``keep_contaminated=False`` returns only the
     clean rows (columns unchanged).
 
-    strategy="broadcast" (default): the DISTINCT benchmark gram hashes
-    are broadcast and each doc's grams probe the hash map map-side —
-    zero shuffle of the corpus; right whenever the benchmark fits in an
-    executor (eval suites are ~MBs; the gram set of a 100 MB benchmark
-    is ~100M longs = 800 MB worst case — below that this is the 100 TB
-    plan). strategy="shuffle": plain equi-join on the gram hash for
-    benchmark sets too large to broadcast; shuffles only (id, hash)
-    pairs, never text.
+    The DISTINCT benchmark gram hashes are broadcast and each doc's
+    grams probe the hash map map-side — zero shuffle of the corpus
+    (eval suites are ~MBs; the gram set of a 100 MB benchmark is ~100M
+    longs = 800 MB worst case).
     """
-    if strategy not in ("broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     bench_col = bench_col or col
     # Materialize the token array BELOW the gram transform: the slice
     # inside _gram_hashes's lambda is evaluated once per gram position,
@@ -123,9 +114,8 @@ def decontaminate(
             F.explode(F.array_distinct(_gram_hashes(F.col("__toks"), n))).alias("__g"),
         )
     )
-    right = F.broadcast(bench_grams) if strategy == "broadcast" else bench_grams
     hits = (
-        doc_grams.join(right, "__g")
+        doc_grams.join(F.broadcast(bench_grams), "__g")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_hit_grams"))
     )

@@ -299,15 +299,13 @@ def minhash_near_dupes(
     bands: int = 16,
     threshold: float = 0.6,
     max_bucket: int = 1000,
-    hot_bucket_strategy: str = "broadcast",
     compute: str = "arrow",
 ) -> DataFrame:
     """shingle -> minhash -> band -> bucket-join -> exact-Jaccard verify.
     Returns verified pairs (id_a < id_b, jaccard >= threshold).
-    ``hot_bucket_strategy``: 'broadcast' (default — map-side anti-join
-    drop of hot buckets, skew-safe at any bucket size) or 'window'
-    (lower latency, one lineage; a hot bucket transits one task).
-    ``compute``: 'arrow' (default — numpy affine-min kernel per Arrow
+    Buckets holding more than ``max_bucket`` docs are dropped by a
+    map-side anti-join before the self-join (skew-safe at any bucket
+    size). ``compute``: 'arrow' (default — numpy affine-min kernel per Arrow
     batch) or 'expr' (pure-JVM lambda expressions; bit-identical
     signatures).
 
@@ -322,37 +320,23 @@ def minhash_near_dupes(
     docs = _docs_table(df, text_col, id_col)
     banded = _minhash_banded(docs, k_shingle, n_hashes, bands, compute)
 
-    # bound hot buckets (boilerplate clusters)
-    if hot_bucket_strategy == "window":
-        # count-over-window on the SAME (band, bucket) partitioning the
-        # self-join shuffles on — one lineage, exchange reused for both
-        # self-join sides, no extra cache. Caveat: a hot bucket lands in
-        # ONE window task before being filtered (linear scan, but a
-        # straggler at extreme skew) — low-latency variant for corpora
-        # without pathological boilerplate.
-        from pyspark.sql.window import Window
-
-        banded = banded.withColumn(
-            "__bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-        ).where(F.col("__bsz") <= max_bucket).drop("__bsz")
-    else:
-        # skew-safe default: bucket sizes via partial-aggregated groupBy
-        # (map-side combine — no task ever holds a whole hot bucket) and
-        # a broadcast anti-join that drops hot rows MAP-SIDE, before any
-        # shuffle co-locates them. The slim (id, band, bucket) table is
-        # cached LAZILY: its consumers are strictly ordered — the sizes
-        # broadcast exchange must materialize before any self-join probe
-        # stage launches, so the broadcast job alone computes the
-        # signature pipeline and fills the cache; the two self-join map
-        # stages then read it. (Contrast cands below, whose two
-        # consumers ARE concurrent stages and need the eager fill.)
-        banded = banded.persist()
-        sizes = banded.groupBy("band", "bucket").count()
-        banded = banded.join(
-            F.broadcast(sizes.where(F.col("count") > max_bucket)),
-            ["band", "bucket"],
-            "left_anti",
-        )
+    # bound hot buckets (boilerplate clusters): bucket sizes via a
+    # partial-aggregated groupBy (map-side combine — no task ever holds
+    # a whole hot bucket) and a broadcast anti-join that drops hot rows
+    # MAP-SIDE, before any shuffle co-locates them. The slim (id, band,
+    # bucket) table is cached LAZILY: its consumers are strictly
+    # ordered — the sizes broadcast exchange must materialize before
+    # any self-join probe stage launches, so the broadcast job alone
+    # computes the signature pipeline and fills the cache; the two
+    # self-join map stages then read it. (Contrast cands below, whose
+    # two consumers ARE concurrent stages and need the eager fill.)
+    banded = banded.persist()
+    sizes = banded.groupBy("band", "bucket").count()
+    banded = banded.join(
+        F.broadcast(sizes.where(F.col("count") > max_bucket)),
+        ["band", "bucket"],
+        "left_anti",
+    )
 
     a = banded.alias("a")
     b = banded.alias("b")
@@ -807,18 +791,24 @@ def connected_components(
       checksum — one tiny aggregate per round, no expensive
       ``exceptAll`` diff.
     """
-    # Materialize the input edges ONCE: every round references `e`
-    # several times, so an un-checkpointed pair lineage (e.g. the whole
-    # MinHash candidate pipeline) would re-execute per reference; the
-    # driver pull's count runs on this table too.  Union-find is
+    # Cache the input edges: the driver pull reads them twice (count +
+    # pull), the iterative path's distinct checkpoint once after the
+    # count, and an uncached pair lineage (e.g. the whole MinHash
+    # candidate pipeline) would re-execute per read.  The cache is
+    # released as soon as `pdf` or `e` holds the edges.  Union-find is
     # idempotent under duplicate/reversed edges, so only the iterative
     # path pays for the `.distinct()` shuffle.
     e_raw = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=True)
+        .persist()
     )
-    pdf = bounded_pull(e_raw, _DRIVER_EDGES)
+    try:
+        pdf = bounded_pull(e_raw, _DRIVER_EDGES)
+        if pdf is None:
+            e = e_raw.distinct().localCheckpoint(eager=True)
+    finally:
+        e_raw.unpersist()
     if pdf is not None:
         ids, comp = _numpy_union_find(pdf["u"], pdf["v"])
         t = e_raw.schema["u"].dataType.simpleString()
@@ -826,7 +816,6 @@ def connected_components(
             pd.DataFrame({"id": ids, "component": comp}),
             schema=f"id {t}, component {t}",
         )
-    e = e_raw.distinct().localCheckpoint(eager=True)
     prev = None
     for _ in range(max_rounds):
         # ---- large-star: connect strictly-larger neighbors to the min
@@ -968,7 +957,6 @@ def _dup_window_spans(
     id_col: str,
     k: int,
     min_count: int,
-    strategy: str,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared core of the exact-substring family: (per-doc token counts,
     merged duplicated spans). A window is duplicated iff its normalized
@@ -981,21 +969,19 @@ def _dup_window_spans(
       explode (doc, pos, window-hash)         [one scan, no text moved]
       -> groupBy hash, count >= min_count     [map-side combine; the
                                                shuffled unit is 8 bytes]
-      -> join back on hash                    [equi-join; broadcast-able
-                                               when the dup set is small]
+      -> join back on hash                    [equi-join; AQE broadcasts
+                                               it when the dup set is small]
       -> gaps-and-islands merge per doc       [window over (doc, pos) —
                                                only DUP windows reach it]
 
     Scale notes (100 TB): the explode emits ~n_tokens rows per doc but
     only (id, pos, int64) triples — text never shuffles; the dup-hash
     table after HAVING is the duplicated-substring vocabulary
-    (boilerplate), orders of magnitude smaller than the corpus;
-    strategy='broadcast' ships it to the scan when it fits, the
-    'shuffle' default lets AQE pick (skew-split on hot boilerplate
-    hashes). The island merge partitions by doc — bounded per-doc work.
+    (boilerplate), orders of magnitude smaller than the corpus; the
+    plain join lets AQE pick (broadcast when it fits, skew-split on hot
+    boilerplate hashes). The island merge partitions by doc — bounded
+    per-doc work.
     """
-    if strategy not in ("broadcast", "shuffle"):
-        raise ValueError(f"unknown strategy {strategy!r}")
     norm = F.split(F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " "), " ")
     # materialized token alias: HOFs are interpreted — see decontam.py
     base = df.repartition(
@@ -1011,7 +997,7 @@ def _dup_window_spans(
         .where(F.col("__c") >= min_count)
         .select("__gh")
     )
-    dwin = wins.join(F.broadcast(dup) if strategy == "broadcast" else dup, "__gh")
+    dwin = wins.join(dup, "__gh")
 
     from pyspark.sql import Window
 
@@ -1043,7 +1029,6 @@ def duplicated_substring_stats(
     id_col: str = "doc_id",
     k: int = 50,
     min_count: int = 2,
-    strategy: str = "shuffle",
 ) -> DataFrame:
     """Per-document duplicated-substring statistics: one row per INPUT
     doc with ``n_tokens``, ``n_dup_windows`` (duplicated k-token window
@@ -1051,9 +1036,7 @@ def duplicated_substring_stats(
     ``dup_tokens`` (tokens covered by those spans) and ``dup_frac``.
     k=50 is the Lee et al. threshold; the gate/demo queries use a
     smaller k to match the synthetic corpus' doc lengths."""
-    n_tokens, spans = _dup_window_spans(
-        df, text_col, id_col, k, min_count, strategy
-    )
+    n_tokens, spans = _dup_window_spans(df, text_col, id_col, k, min_count)
     stats = spans.groupBy(id_col).agg(
         F.sum("__nw").cast("int").alias("n_dup_windows"),
         F.count(F.lit(1)).cast("int").alias("n_dup_spans"),
@@ -1082,7 +1065,6 @@ def remove_duplicated_substrings(
     id_col: str = "doc_id",
     k: int = 50,
     min_count: int = 2,
-    strategy: str = "shuffle",
     out_col: str = "clean_text",
     with_stats: bool = False,
 ) -> DataFrame:
@@ -1100,7 +1082,7 @@ def remove_duplicated_substrings(
     doc length (documents are bounded; conversations are not, which is
     why the temporal family has bucketed strategies and this does not
     need them). The token filter is one per-row array expression."""
-    _, spans = _dup_window_spans(df, text_col, id_col, k, min_count, strategy)
+    _, spans = _dup_window_spans(df, text_col, id_col, k, min_count)
     span_lists = spans.groupBy(id_col).agg(
         F.collect_list(F.struct("s", "e", "__nw")).alias("__spans")
     )

@@ -42,6 +42,9 @@ __all__ = ["pagerank"]
 
 # driver power-iteration cap: 30M edges is ~480 MB of longs
 _DRIVER_EDGES = 30_000_000
+# distributed path: broadcast the rank vector (|V| rows of (key,
+# double), a few MB) up to this many nodes
+_BROADCAST_NODES = 8_000_000
 
 
 def _driver_pagerank(
@@ -107,7 +110,6 @@ def pagerank(
     iterations: int = 8,
     checkpoint_every: int = 3,
     tol: float | None = 1e-6,
-    broadcast_nodes: int = 8_000_000,
     dedupe: bool = False,
 ) -> DataFrame:
     """One row per node with its PageRank (uniform 1/N start, uniform
@@ -123,16 +125,15 @@ def pagerank(
     (what the oracle-checked gate query does — the DuckDB oracle
     replays exactly ``iterations`` CTE rounds).
 
-    ``broadcast_nodes`` (guide §3.1 — broadcast the side that fits):
-    when the measured node count ``n`` is at or below it, each round
-    joins the edge table against a BROADCAST of the rank vector and
-    the edge table is cached partitioned by ``dst`` — so the per-round
-    contribution join needs no exchange at all and the ``dst``
-    aggregation is partition-local: ZERO shuffles per iteration (the
-    rank vector is |V| rows of (key, double) — a few MB up to the
-    default 8M nodes).  Above the bound the original co-partitioned
-    shuffle plan runs unchanged — at 10^9+ nodes a broadcast would not
-    fit, which is exactly the regime the shuffle plan is for."""
+    Distributed path (guide §3.1 — broadcast the side that fits): when
+    the measured node count ``n`` is at most ``_BROADCAST_NODES``, each
+    round joins the edge table against a BROADCAST of the rank vector
+    and the edge table is cached partitioned by ``dst`` — so the
+    per-round contribution join needs no exchange at all and the
+    ``dst`` aggregation is partition-local: ZERO shuffles per
+    iteration.  Above the bound the co-partitioned shuffle plan runs —
+    at 10^9+ nodes a broadcast would not fit, which is exactly the
+    regime the shuffle plan is for."""
     # a NULL id matches no join below, so a NULL-id edge carries no
     # rank; drop it before either path instead of leaving a NULL node
     e_in = edges.select(
@@ -172,7 +173,7 @@ def pagerank(
             return nodes.withColumn("rank", F.lit(0.0)).localCheckpoint(
                 eager=True
             )
-        bcast = n <= int(broadcast_nodes)
+        bcast = n <= _BROADCAST_NODES
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         ej = e.join(deg, "src")
         if bcast:

@@ -36,6 +36,10 @@ from .dsir import _bucket_expr
 
 __all__ = ["negative_samples"]
 
+# broadcast the indexed item dimension up to this many items (the
+# sf1.0 `part` table has 200k rows)
+_BROADCAST_ITEMS = 1_000_000
+
 
 def negative_samples(
     positives: DataFrame,
@@ -45,7 +49,6 @@ def negative_samples(
     item_col: str = "item_id",
     seed: int = 42,
     hash_fn: str = "xxhash64",
-    broadcast_items: bool = True,
 ) -> DataFrame:
     """k deterministic negatives per positive pair:
     ``(entity, pos_item, j, neg_item)``.
@@ -54,6 +57,8 @@ def negative_samples(
     along onto the output).  Candidates colliding with ANY positive of
     the same entity are dropped (so a pair can yield < k rows); the
     same inputs + seed give the same negatives on any cluster size.
+    Up to ``_BROADCAST_ITEMS`` items the indexed dimension is broadcast
+    into the candidate join; larger item tables take a shuffled join.
     """
     n = items.count()
     if n == 0:
@@ -62,7 +67,7 @@ def negative_samples(
         "__idx",
         F.row_number().over(Window.orderBy(item_col)).cast("long") - 1,
     )
-    if broadcast_items:
+    if n <= _BROADCAST_ITEMS:
         idx = F.broadcast(idx)
     key = F.concat_ws(
         "\x1f",

@@ -252,7 +252,6 @@ def rfm_segments(
     n: int = 5,
     asof: str | None = None,
     approx: bool = False,
-    eager_release: bool = True,
 ) -> DataFrame:
     """Per-entity RFM table: ``recency_days`` (days from last activity
     to ``asof``, default the corpus max date), ``frequency`` (rows),
@@ -345,13 +344,10 @@ def rfm_segments(
         "key", "recency_days", "frequency", "monetary",
         "r_score", "f_score", "m_score", seg.alias("segment"),
     )
-    if eager_release:
-        # eager checkpoint + unpersist: the result stops depending on
-        # the per-entity cache, which is released immediately (ADVICE
-        # r4).  eager_release=False keeps the lazy plan (composition /
-        # plan inspection) — the caller owns the cache lifetime then.
-        out = out.localCheckpoint(eager=True)
-        _cached.unpersist()
+    # eager checkpoint + unpersist: the result stops depending on the
+    # per-entity cache, which is released immediately (ADVICE r4)
+    out = out.localCheckpoint(eager=True)
+    _cached.unpersist()
     return out
 
 
@@ -361,12 +357,13 @@ def pareto_curve(
     amount_col: str,
     n_buckets: int = 64,
     approx: bool = False,
-    eager_release: bool = True,
 ) -> DataFrame:
     """Revenue-concentration curve: per entity, its total, global rank
     by total DESC (key ASC tie-break), and the cumulative share of the
     grand total down the ranking — "the top x% of entities hold y% of
     the value".  ``cum_share``/``frac_keys`` are the curve's (y, x).
+    As in ``rfm_segments``, the result is eagerly localCheckpoint()ed
+    and the per-entity cache released before return.
     """
     # feeds the rank fit action + the final plan twice; keep the exact
     # persisted Dataset for release (see rfm_segments / ADVICE r5)
@@ -401,8 +398,7 @@ def pareto_curve(
             (F.col("rank") / F.lit(float(total))).alias("frac_keys"),
         )
     )
-    if eager_release:
-        # see rfm_segments: release the per-entity cache before return
-        out = out.localCheckpoint(eager=True)
-        _cached.unpersist()
+    # see rfm_segments: release the per-entity cache before return
+    out = out.localCheckpoint(eager=True)
+    _cached.unpersist()
     return out

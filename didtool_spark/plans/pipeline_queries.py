@@ -1142,7 +1142,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") % 17 == 0).select("text")
     corpus = docs.where(F.col("doc_id") % 17 != 0)
-    out = decontaminate(corpus, bench, n=4, strategy="broadcast")
+    out = decontaminate(corpus, bench, n=4)
     return out.select("doc_id", "n_hit_grams", "contaminated")
 
 

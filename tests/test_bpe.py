@@ -1,12 +1,15 @@
 """BPE trainer/tokenizer: classic-example goldens, the
 double-delimiter encoding's equivalence to the greedy symbol loop
-across Spark / Python / DuckDB, driver==distributed fit, and
-vocab==inline tokenization strategies."""
+across Spark / Python / DuckDB, driver==distributed fit, and the
+tokenizer's round trip."""
+
+from collections import Counter
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from didtool_spark.operators import bpe
 from didtool_spark.operators.bpe import (
     EOW,
     SEP,
@@ -114,10 +117,11 @@ CORPUS = [
 ]
 
 
-def test_fit_driver_equals_distributed(spark):
+def test_fit_driver_equals_distributed(spark, monkeypatch):
     df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
     driver = fit_bpe(df, "text", n_merges=12)
-    dist = fit_bpe(df, "text", n_merges=12, distributed=True)
+    monkeypatch.setattr(bpe, "_DRIVER_WORDS", 1)
+    dist = fit_bpe(df, "text", n_merges=12)
     assert driver == dist
 
 
@@ -127,11 +131,8 @@ def test_tokenize_strategies_agree_and_roundtrip(spark):
         "doc_id long, text string",
     )
     merges = fit_bpe(df, "text", n_merges=10)
-    a = bpe_tokenize(df, merges, strategy="vocab").toPandas()
-    b = bpe_tokenize(df, merges, strategy="inline").toPandas()
+    a = bpe_tokenize(df, merges).toPandas()
     a = a.sort_values("doc_id").reset_index(drop=True)
-    b = b.sort_values("doc_id").reset_index(drop=True)
-    assert [list(x) for x in a["tokens"]] == [list(x) for x in b["tokens"]]
     # round trip: joining tokens and splitting at EOW restores the words
     for r in a.itertuples():
         words = "".join(r.tokens).split(EOW)[:-1] if list(r.tokens) else []
@@ -140,10 +141,14 @@ def test_tokenize_strategies_agree_and_roundtrip(spark):
     assert list(a[a["doc_id"] >= len(CORPUS)]["tokens"].map(len)) == [0, 0]
 
 
-def test_fit_cap_raises(spark):
+def test_fit_over_cap_equals_driver(spark, monkeypatch):
+    """One kept word over the cap: the fit runs distributed instead of
+    raising, and the gate counts the table AFTER the min_count prune."""
     df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
-    with pytest.raises(ValueError, match="distributed=True"):
-        fit_bpe(df, "text", n_merges=2, max_words=3)
+    driver = fit_bpe(df, "text", n_merges=5, min_count=2)
+    kept = sum(c >= 2 for c in Counter(" ".join(CORPUS).split()).values())
+    monkeypatch.setattr(bpe, "_DRIVER_WORDS", kept - 1)
+    assert fit_bpe(df, "text", n_merges=5, min_count=2) == driver
 
 
 def test_min_count_prunes_tail(spark):

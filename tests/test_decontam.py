@@ -50,20 +50,6 @@ def test_decontaminate_min_hits_and_drop(spark, corpus):
     assert [r["doc_id"] for r in clean.collect()] == [2]
 
 
-def test_decontaminate_strategies_agree(spark, corpus):
-    bench = spark.createDataFrame(
-        [("quick brown fox jumps",), ("tokens appear here now",)], "text string"
-    )
-    a = decontaminate(corpus, bench, n=4, strategy="broadcast")
-    b = decontaminate(corpus, bench, n=4, strategy="shuffle")
-    cols = ["doc_id", "n_hit_grams", "contaminated"]
-    assert sorted(map(tuple, a.select(cols).collect())) == sorted(
-        map(tuple, b.select(cols).collect())
-    )
-    with pytest.raises(ValueError):
-        decontaminate(corpus, bench, strategy="bogus")
-
-
 def test_gopher_quality_metrics(spark):
     clean = " ".join(f"w{i:02d}" for i in range(30))  # 30 distinct 3-char words
     dup = "hello world\nhello world\nhello world"

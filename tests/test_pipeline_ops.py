@@ -328,18 +328,6 @@ def test_minhash_bucket_stats_reports_dropped(spark):
     assert all(r["count"] == 40 for r in got)
 
 
-def test_minhash_hot_bucket_strategies_agree(spark):
-    """broadcast (skew-safe default) and window (low-latency) hot-bucket
-    bounds produce identical verified pairs."""
-    from didtool_spark.operators.dedup import minhash_near_dupes
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = minhash_near_dupes(docs, hot_bucket_strategy="broadcast").collect()
-    b = minhash_near_dupes(docs, hot_bucket_strategy="window").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) > 0
-
-
 def test_arrow_kernels_tolerate_null_rows(spark):
     """A NULL text/embedding row must not crash the Arrow kernels (the
     expression kernels emit NULL and downstream joins drop the row):
@@ -668,20 +656,6 @@ def test_remove_duplicated_substrings_with_stats_matches_stats(spark):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_remove_duplicated_substrings_broadcast_equals_shuffle(spark):
-    from didtool_spark.operators.dedup import remove_duplicated_substrings
-
-    rows = [
-        (1, "shared run of tokens one two three four five six end a"),
-        (2, "other doc shared run of tokens one two three four five six"),
-        (3, "fully distinct content here with nothing else going on"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    a = remove_duplicated_substrings(df, k=5, strategy="shuffle").orderBy("doc_id")
-    b = remove_duplicated_substrings(df, k=5, strategy="broadcast").orderBy("doc_id")
-    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
-
-
 def test_connected_components_driver_path_matches_distributed(
     spark, force_distributed
 ):
@@ -811,9 +785,12 @@ def test_tfidf_keywords_matches_numpy(spark):
     assert got_by_doc == exp
 
 
-def test_quality_classifier_separates_and_distributed_fit_agrees(spark):
+def test_quality_classifier_separates_and_distributed_fit_agrees(
+    spark, monkeypatch
+):
     import numpy as np
 
+    from didtool_spark.operators import classifier
     from didtool_spark.operators.classifier import (
         fit_quality_classifier,
         score_quality,
@@ -834,10 +811,9 @@ def test_quality_classifier_separates_and_distributed_fit_agrees(spark):
 
     # the distributed GD path runs the same math with Spark reductions:
     # weights agree to float-sum-order noise
-    dist = fit_quality_classifier(
-        fixture, n_buckets=512, n_iter=20, distributed=True
-    )
     drv = fit_quality_classifier(fixture, n_buckets=512, n_iter=20)
+    monkeypatch.setattr(classifier, "_DRIVER_DOCS", 0)
+    dist = fit_quality_classifier(fixture, n_buckets=512, n_iter=20)
     np.testing.assert_allclose(dist.weights, drv.weights, rtol=1e-8, atol=1e-10)
     np.testing.assert_allclose(dist.bias, drv.bias, rtol=1e-8, atol=1e-10)
 
@@ -866,16 +842,22 @@ def test_quality_classifier_hash_fn_parity(spark):
     assert all(lab == d % 2 for d, lab in labels["xxhash64"].items())
 
 
-def test_quality_classifier_collect_cap(spark):
-    import pytest as _pytest
+def test_quality_classifier_over_cap_equals_driver(spark, monkeypatch):
+    """A labeled set one document over the cap is fitted distributed
+    instead of raising, with the driver fit's weights."""
+    import numpy as np
 
-    from didtool_spark.operators.classifier import fit_quality_classifier
+    from didtool_spark.operators import classifier
     from didtool_spark.plans.pipeline_queries import _qc_fixture_spark
 
-    with _pytest.raises(ValueError, match="max_train_docs"):
-        fit_quality_classifier(
-            _qc_fixture_spark(spark), n_buckets=64, max_train_docs=10
-        )
+    fixture = _qc_fixture_spark(spark)
+    kw = dict(n_buckets=64, n_iter=5, hash_fn="md5_60")
+    drv = classifier.fit_quality_classifier(fixture, **kw)
+    monkeypatch.setattr(classifier, "_DRIVER_DOCS", fixture.count() - 1)
+    dist = classifier.fit_quality_classifier(fixture, **kw)
+    np.testing.assert_allclose(dist.weights, drv.weights, rtol=1e-8, atol=1e-10)
+    np.testing.assert_allclose(dist.bias, drv.bias, rtol=1e-8, atol=1e-10)
+    assert dist.hash_fn == "md5_60"
 
 
 def test_winnow_guarantee_and_overlap(spark):

@@ -345,7 +345,7 @@ def test_session8_plan_shapes(spark, force_distributed):
     import re
 
     from didtool_spark.operators.scd import scd2_compress, snapshot_latest
-    from didtool_spark.operators.segments import pareto_curve
+    from didtool_spark.operators.segments import _global_rank
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
     orders = spark.read.parquet(f"{SF}/orders.parquet")
@@ -372,18 +372,21 @@ def test_session8_plan_shapes(spark, force_distributed):
     assert "SinglePartition" not in p, p[:2500]
     assert "hashpartitioning(user_id" in p, p[:2500]
 
-    # pareto rank, DISTRIBUTED regime (r6: below the 8M-entity cap the
-    # ranks come from the bounded numpy driver path — force the
+    # pareto's rank, DISTRIBUTED regime (r6: below the 8M-entity cap
+    # the ranks come from the bounded numpy driver path — force the
     # bucketed fallback to assert its shape): per-entity rows are
     # ranked under __bk hash partitioning; SinglePartition appears
-    # only for the bounded bucket-stats window and the grand-total
-    # scalar.  eager_release=False: the default eagerly checkpoints
-    # the result (cache hygiene, ADVICE r4), which truncates the
-    # inspectable plan to a Scan ExistingRDD — inspect the lazy plan
+    # only for the bounded bucket-stats window.  pareto_curve eagerly
+    # checkpoints its result (cache hygiene, ADVICE r4), which
+    # truncates the inspectable plan to a Scan ExistingRDD — inspect
+    # the lazy plan of the rank it runs instead
+    per = orders.groupBy(F.col("o_custkey").alias("key")).agg(
+        F.sum("o_totalprice").alias("amount")
+    )
     with force_distributed():
-        p = plan_str(
-            pareto_curve(
-                orders, "o_custkey", "o_totalprice", eager_release=False
-            )
+        ranked, _ = _global_rank(
+            per, "amount", ["key"], descending=True, sum_col="amount",
+            rank_name="rank",
         )
+        p = plan_str(ranked)
     assert "hashpartitioning(__bk" in p, p[:2500]
