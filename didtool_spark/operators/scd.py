@@ -22,9 +22,10 @@ exchange on ``keys``; rows within a run are contiguous in the sorted
 partition, so the groupBy's partial aggregation collapses them before
 the second (tiny) shuffle.  A key whose history is too hot for one
 task takes ``strategy="bucketed"``: change flags come from the
-bucketed lag (temporal._bucketed_shift) and run ids are re-based per
-bucket by a temporal._carry_in of flag counts.  Output is
-strategy-independent (equivalence units + fuzz in tests/test_scd.py).
+bucketed lag (temporal._shift_step in a temporal._bucketed_scan) and
+run ids are re-based per bucket by a temporal._carry_in of flag
+counts.  Output is strategy-independent (equivalence units + fuzz in
+tests/test_scd.py).
 
 Reference parity: didtool has no dimension builder (its pandas frames
 are point-in-time by construction); this generalizes its
@@ -128,37 +129,32 @@ def _bucketed_flags(
 ) -> DataFrame:
     """Hot-key-safe change flags + global run ids.
 
-    Per-key lags come from temporal._bucketed_shift (in-bucket F.lag,
-    carry prefix stitched across the previous NON-EMPTY buckets — so
-    empty buckets cannot orphan a run start), with a lagged constant
+    Per-key lags come from temporal._shift_step (in-bucket F.lag, tail
+    stitched across the previous NON-EMPTY buckets — so empty buckets
+    cannot orphan a run start), with a lagged constant
     as the is-first-row marker.  Global run numbering is the in-bucket
     cumulative flag count re-based by the flags of earlier buckets.
     """
     from .temporal import (
-        _bucketed_shift, _bucketize, _carry_in, _sum_before, epoch_seconds,
+        _bucketed_scan, _bucketize, _carry_in, _keyed, _shift_step, _sum_before,
+        epoch_seconds,
     )
 
-    shifted = _bucketed_shift(
-        df.withColumn("__one", F.lit(1)),
-        cols=["__one", *vals_l],
-        ks=[1],
-        keys_l=keys_l,
-        order_l=order_l,
-        ts_col=ts_col,
-        bucket_seconds=bw,
-        descending=False,
-        name="lag",
+    shifted = _bucketed_scan(
+        df.withColumn("__one", F.lit(1)), keys_l, order_l, ts_col, bw,
+        [_shift_step(["__one", *vals_l], [1])],
     )
 
     def lag_of(c):
         return F.col("__one_lag1") if c is None else F.col(f"{c}_lag1")
 
     flagged = (
-        shifted.withColumn("__chg", _change_flag(vals_l, lag_of).cast("int"))
+        _keyed(shifted, keys_l)
+        .withColumn("__chg", _change_flag(vals_l, lag_of).cast("int"))
         .withColumn("__bucket", _bucketize(epoch_seconds(ts_col), bw))
         .drop("__one", "__one_lag1", *[f"{c}_lag1" for c in vals_l])
     )
-    wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
+    wb = Window.partitionBy("__kk", "__bucket").orderBy(*order_l)
     flagged = flagged.withColumn(
         "__local",
         F.sum("__chg").over(
@@ -166,11 +162,11 @@ def _bucketed_flags(
         ),
     )
     flagged = _carry_in(
-        flagged, keys_l, [F.sum("__chg").alias("__nb")],
+        flagged, [F.sum("__chg").alias("__nb")],
         lambda w: [_sum_before("__nb", w).alias("__off")],
     )
     return flagged.withColumn("__run", F.col("__off") + F.col("__local")).drop(
-        "__bucket", "__local", "__off"
+        "__kk", "__bucket", "__local", "__off"
     )
 
 

@@ -15,24 +15,28 @@ Scale notes:
   ``Window.partitionBy(conv_id)``: EVERY operator here accepts
   ``strategy="bucketed"``, which range-splits time into buckets per key
   (``_bucketize``) so no single task ever sees a whole hot key, and
-  stitches bucket boundaries with one of three shared helpers:
+  stitches bucket boundaries in one of two ways:
 
-  - ``_carry_in``: a per-(key, bucket) summary, a window over buckets
-    on that small table, joined back (sessionize, forward_fill,
-    asof_join; also cusum, transcript carries and scd run offsets);
-  - ``_tail_prefix``: the ≤K rows preceding each bucket (with_lags,
-    with_rolling rows mode);
+  - ``_bucketed_scan``: one in-bucket row pass, one ``_carry_in`` (a
+    per-(key, bucket) summary, windows over buckets on that small
+    table, one join back) and one output select. Each operator is a
+    ``_Step`` of it — sessionize, with_lags, with_rolling rows mode and
+    forward_fill (so asof_join) — and the steps share its summary,
+    including one K-row tail of the rows next to each bucket, so
+    ``materialize_features`` runs all four with one carry join.
+    ``_carry_in`` alone serves the carries that read a step's output or
+    live elsewhere (cusum, transcript carries, scd run offsets);
   - ``_range_frame``: a time-range frame whose rows are also copied
     into the adjacent bucket as context (with_rolling time mode, and
     the rolling-distinct and future-label operators).
 
   Output is identical to the window strategy; NULL keys group together
-  on both (the stitch joins are null-safe).
+  on both (the stitch joins on ``struct(keys)``).
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Callable, Iterable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window, WindowSpec
@@ -71,6 +75,11 @@ def ordered_window(
     return Window.partitionBy(*keys).orderBy(*order)
 
 
+def _breaks(t: Column, prev: Column, gap_seconds: int) -> Column:
+    """Session-break flag: no previous event, or a gap over ``gap_seconds``."""
+    return prev.isNull() | (epoch_seconds(t) - epoch_seconds(prev) > F.lit(gap_seconds))
+
+
 def sessionize(
     df: DataFrame,
     gap_seconds: int = 1800,
@@ -90,55 +99,27 @@ def sessionize(
 
     strategy="bucketed" (hot keys — a conversation with millions of
     turns): the cumulative sum runs per (key, ``bucket_seconds`` bucket);
-    one ``_carry_in`` of each bucket's first/last event and in-bucket
-    break count gives every bucket its predecessor event and its offset
-    of earlier sessions. Identical output to the window strategy.
+    each bucket's first/last event and in-bucket break count give every
+    bucket its predecessor event and its offset of earlier sessions
+    (``_session_step`` of a ``_bucketed_scan``). Identical output to the
+    window strategy.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     order_l = [order] if isinstance(order, str) else list(order)
 
-    def breaks(t: Column, prev: Column) -> Column:
-        return prev.isNull() | (
-            epoch_seconds(t) - epoch_seconds(prev) > F.lit(gap_seconds)
-        )
-
     if strategy == "window":
         w = ordered_window(keys_l, order_l)
-        is_new = breaks(F.col(ts_col), F.lag(F.col(ts_col)).over(w)).cast("int")
+        prev = F.lag(F.col(ts_col)).over(w)
+        is_new = _breaks(F.col(ts_col), prev, gap_seconds).cast("int")
         cum = w.rowsBetween(Window.unboundedPreceding, 0)
         return df.withColumn(out_col, F.sum(is_new).over(cum) - F.lit(1))
 
     if strategy != "bucketed":
         raise ValueError(f"unknown sessionize strategy {strategy!r}")
-
-    b = df.withColumn("__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds))
-    wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
-    # in-bucket gap flags; NULL on each bucket's first row, whose
-    # predecessor is the previous bucket's last event
-    prev = F.lag(ts_col).over(wb)
-    b = b.withColumn("__gap", F.when(prev.isNotNull(), breaks(F.col(ts_col), prev)))
-    ends = F.struct(*order_l, F.col(ts_col).alias("__t"))
-    b = _carry_in(
-        b,
-        keys_l,
-        [
-            F.min(ends)["__t"].alias("__first"),
-            F.max(ends)["__t"].alias("__last"),
-            F.count(F.when(F.col("__gap"), 1)).alias("__n"),
-        ],
-        lambda w: ["__first", "__n", F.lag("__last").over(w).alias("__prev_ts")],
-        # sessions started in earlier buckets offset the in-bucket count
-        lambda w: [
-            "__prev_ts",
-            _sum_before(
-                F.col("__n") + breaks(F.col("__first"), F.col("__prev_ts")).cast("long"), w
-            ).alias("__offset"),
-        ],
+    return _bucketed_scan(
+        df, keys_l, order_l, ts_col, bucket_seconds,
+        [_session_step(gap_seconds, ts_col, order_l, out_col)],
     )
-    is_new = F.coalesce(F.col("__gap"), breaks(F.col(ts_col), F.col("__prev_ts")))
-    cum = F.sum(is_new.cast("long")).over(wb.rowsBetween(Window.unboundedPreceding, 0))
-    out = b.withColumn(out_col, (F.col("__offset") + cum - 1).cast("long"))
-    return out.drop("__bucket", "__gap", "__prev_ts", "__offset")
 
 
 def _bucketize(t: Column, width: int) -> Column:
@@ -156,24 +137,20 @@ def _keyed(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.withColumn("__kk", F.struct(*keys))
 
 
-def _carry_in(
-    b: DataFrame,
-    keys: list[str],
-    per_bucket: list[Column],
-    *across,
-) -> DataFrame:
-    """The bucketed strategies' boundary stitch: group ``b`` by (keys,
-    ``__bucket``) with the ``per_bucket`` aggregates, run each ``across``
-    pass — ``w -> [Column]`` over ``w`` = the per-key window in bucket
-    order — as one select on that small table (keys x buckets rows),
-    and left-join the last pass's columns back onto ``b``. Keys are
-    matched null-safely (``_keyed``)."""
-    b = _keyed(b, keys)
+def _carry_in(b: DataFrame, per_bucket: list[Column], *across) -> DataFrame:
+    """The bucketed strategies' boundary stitch over ``b`` keyed by
+    ``__kk`` (``_keyed``) and ``__bucket``: group by both with the
+    ``per_bucket`` aggregates, run each ``across`` pass — ``w ->
+    [Column]`` over ``w`` = the per-key window in bucket order — as one
+    select that adds its columns to that small table (keys x buckets
+    rows), and left-join every column the passes added back onto
+    ``b``."""
     w = Window.partitionBy("__kk").orderBy("__bucket")
     carry = b.groupBy("__kk", "__bucket").agg(*per_bucket)
+    summary = carry.columns[2:]
     for cols in across:
-        carry = carry.select("__kk", "__bucket", *cols(w))
-    return b.join(carry, ["__kk", "__bucket"], "left").drop("__kk")
+        carry = carry.select("*", *cols(w))
+    return b.join(carry.drop(*summary), ["__kk", "__bucket"], "left")
 
 
 def _sum_before(col: Column | str, w: WindowSpec) -> Column:
@@ -213,99 +190,181 @@ def _range_frame(
     return u.where(~F.col("__ctx")).drop("__t", "__bucket", "__ctx")
 
 
-def _tail_prefix(
-    b: DataFrame,
-    keys_l: list[str],
-    order_l: list[str],
-    payload_cols: list[str],
-    K: int,
-    descending: bool = False,
-) -> DataFrame:
-    """Per-(keys, __bucket) carry table with ``__prefix``: an array of up
-    to ``K`` structs — the K rows immediately *preceding* the bucket in
-    event order (immediately *following* when ``descending``), nearest
-    row last (``element_at(__prefix, -1)`` is the adjacent row).
-
-    Memory is bounded by K, never by bucket or key size: per-bucket tails
-    come from a row_number over the reversed order + filter (no
-    whole-bucket collect), and the cross-bucket stitch only flattens the
-    previous K non-empty buckets' ≤K-row tails (each non-empty bucket
-    contributes ≥1 row, so K buckets back always suffices)."""
-    rev = [
-        F.col(c).asc() if descending else F.col(c).desc() for c in order_l
-    ]
-    w_rev = Window.partitionBy(*keys_l, "__bucket").orderBy(*rev)
-    row_struct = F.struct(
-        *[F.col(c).alias(f"__o{i}") for i, c in enumerate(order_l)],
-        *[F.col(c).alias(f"__p_{c}") for c in payload_cols],
-    )
-    tail_rows = (
-        b.select(
-            *keys_l,
-            "__bucket",
-            row_struct.alias("__r"),
-            F.row_number().over(w_rev).alias("__rne"),
-        )
-        .where(F.col("__rne") <= K)
-        .drop("__rne")
-    )
-    sorted_tail = F.array_sort(F.collect_list("__r"))
-    if descending:
-        sorted_tail = F.reverse(sorted_tail)
-    tails = tail_rows.groupBy(*keys_l, "__bucket").agg(sorted_tail.alias("__tail"))
-    bucket_ord = F.col("__bucket").desc() if descending else F.col("__bucket").asc()
-    wc = (
-        Window.partitionBy(*keys_l)
-        .orderBy(bucket_ord)
-        .rowsBetween(-K, -1)
-    )
-    flat = F.flatten(F.collect_list("__tail").over(wc))
-    return tails.select(
-        *keys_l,
-        "__bucket",
-        F.slice(
-            flat, F.greatest(F.lit(1), F.size(flat) - F.lit(K) + 1), F.lit(K)
-        ).alias("__prefix"),
-    )
+def _none(wb: WindowSpec) -> dict[str, Column]:
+    return {}
 
 
-def _bucketed_shift(
+class _Step(NamedTuple):
+    """One operator's share of a ``_bucketed_scan``. It reads the scan's
+    input columns and its own columns only, never another step's:
+
+    - ``rows(wb)``: in-bucket columns its ``per_bucket`` aggregates read;
+    - ``per_bucket`` / ``across``: as in ``_carry_in``;
+    - ``out(wb)``: its output columns, over the rows joined with the
+      carry columns;
+    - ``k`` > 0: it reads the K-row tail of its ``tail`` columns —
+      ``__prefix``, the rows before the bucket (nearest last), or
+      ``__suffix``, the rows after it (nearest first) when
+      ``descending`` — with the in-bucket ranks ``__rn`` (from the
+      bucket's start) and ``__rne`` (from its end)."""
+
+    out: Callable[[WindowSpec], dict[str, Column]]
+    rows: Callable[[WindowSpec], dict[str, Column]] = _none
+    per_bucket: Sequence[Column] = ()
+    across: Sequence[Callable[[WindowSpec], list[Column]]] = ()
+    tail: Sequence[str] = ()
+    k: int = 0
+    descending: bool = False
+
+
+def _bucketed_scan(
     df: DataFrame,
-    cols: list[str],
-    ks: list[int],
-    keys_l: list[str],
-    order_l: list[str],
+    keys: list[str],
+    order: list[str],
     ts_col: str,
     bucket_seconds: int,
-    descending: bool,
-    name: str,
+    steps: Sequence[_Step],
 ) -> DataFrame:
-    """Bucketed lag (lead when ``descending``): in-bucket F.lag over the
-    per-(key, bucket) window; the first k rows of each bucket read the
-    carry prefix instead (``__prefix[rn - k - 1]``, negative = from the
-    end). No task ever scans a whole hot key."""
-    K = max(ks)
-    b = _keyed(df, keys_l).withColumn(
+    """Run bucketed ``steps`` (``_Step``) over ``df`` as one ordered scan
+    per (key, ``ts_col``-bucket) with one carry join:
+
+    1. key (``__kk``) and bucketize once;
+    2. one in-bucket row pass over ``wb`` (per key and bucket, in
+       ``order``): the steps' ``rows``, plus ``__rn``/``__rne`` if a
+       step reads a tail;
+    3. one ``_carry_in``: every step's ``per_bucket`` aggregates, and
+       one shared tail per direction (``_tail_step``); then the steps'
+       ``across`` passes side by side; then one left join back;
+    4. one select of every step's ``out`` over ``wb``."""
+    b = _keyed(df, keys).withColumn(
         "__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds)
     )
-    prefix = _tail_prefix(b, ["__kk"], order_l, cols, K, descending)
-    joined = b.join(prefix, ["__kk", "__bucket"], "left").drop("__kk")
-    ord_cols = [
-        F.col(c).desc() if descending else F.col(c).asc() for c in order_l
+    wb = Window.partitionBy("__kk", "__bucket").orderBy(*order)
+    steps = list(steps)
+    for desc in (False, True):
+        tailed = [s for s in steps if s.k and s.descending == desc]
+        if tailed:
+            payload = sorted({c for s in tailed for c in s.tail})
+            steps.append(_tail_step(order, payload, max(s.k for s in tailed), desc))
+    rows: dict[str, Column] = {}
+    for s in steps:
+        rows.update(s.rows(wb))
+    n_passes = max((len(s.across) for s in steps), default=0)
+    across = [
+        _side_by_side([s.across[i] for s in steps if i < len(s.across)])
+        for i in range(n_passes)
     ]
-    wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*ord_cols)
-    joined = joined.withColumn("__rn", F.row_number().over(wb))
-    for c in cols:
-        for k in ks:
-            in_bucket = F.lag(c, k).over(wb)
-            from_prefix = F.try_element_at(
-                F.col("__prefix"), F.col("__rn") - F.lit(k) - F.lit(1)
-            )[f"__p_{c}"]
-            joined = joined.withColumn(
-                f"{c}_{name}{k}",
-                F.when(F.col("__rn") > k, in_bucket).otherwise(from_prefix),
-            )
-    return joined.drop("__bucket", "__prefix", "__rn")
+    joined = _carry_in(
+        b.withColumns(rows), [c for s in steps for c in s.per_bucket], *across
+    )
+    outs: dict[str, Column] = {}
+    for s in steps:
+        outs.update(s.out(wb))
+    new = [c for c in outs if c not in df.columns]
+    return joined.withColumns(outs).select(*df.columns, *new)
+
+
+def _side_by_side(passes):
+    """One across pass adding every one of ``passes``' columns."""
+    return lambda w: [c for p in passes for c in p(w)]
+
+
+def _tail_step(order: list[str], payload: list[str], K: int, descending: bool) -> _Step:
+    """The scan's shared K-row tail: ``__prefix`` (``__suffix`` when
+    ``descending``) holds the ``payload`` of the K rows before (after)
+    each bucket. Memory is bounded by K, never by bucket or key size:
+    each bucket collects only its last (first) K rows, and the stitch
+    flattens the K nearest buckets' lists (a bucket holds >= 1 row, so K
+    buckets always suffice)."""
+    name, rank = ("__suffix", "__rn") if descending else ("__prefix", "__rne")
+    row = F.struct(
+        *[F.col(c).alias(f"__o{i}") for i, c in enumerate(order)],
+        *[F.col(c).alias(f"__p_{c}") for c in payload],
+    )
+
+    def rows(wb: WindowSpec) -> dict[str, Column]:
+        # rank from the end as count - rank: no second, reversed sort
+        rn = F.row_number().over(wb)
+        whole = wb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        return {"__rn": rn, "__rne": (F.count(F.lit(1)).over(whole) - rn + 1).cast("int")}
+
+    def stitch(w: WindowSpec) -> list[Column]:
+        near = w.rowsBetween(1, K) if descending else w.rowsBetween(-K, -1)
+        flat = F.flatten(F.collect_list(f"{name}_b").over(near))
+        start = F.lit(1) if descending else F.greatest(F.lit(1), F.size(flat) - K + 1)
+        return [F.slice(flat, start, F.lit(K)).alias(name)]
+
+    return _Step(
+        _none,
+        rows,
+        per_bucket=[
+            F.array_sort(F.collect_list(F.when(F.col(rank) <= K, row))).alias(f"{name}_b")
+        ],
+        across=[stitch],
+    )
+
+
+def _session_step(gap_seconds: int, ts_col: str, order: list[str], out_col: str) -> _Step:
+    """sessionize's bucketed step: in-bucket gap flags (NULL on each
+    bucket's first row, whose predecessor is the previous bucket's last
+    event) plus a carry of that predecessor and of the sessions started
+    in earlier buckets."""
+    ends = F.struct(*order, F.col(ts_col).alias("__t"))
+
+    def rows(wb: WindowSpec) -> dict[str, Column]:
+        prev = F.lag(ts_col).over(wb)
+        return {"__gap": F.when(prev.isNotNull(), _breaks(F.col(ts_col), prev, gap_seconds))}
+
+    def out(wb: WindowSpec) -> dict[str, Column]:
+        is_new = F.coalesce(
+            F.col("__gap"), _breaks(F.col(ts_col), F.col("__prev_ts"), gap_seconds)
+        )
+        cum = F.sum(is_new.cast("long")).over(wb.rowsBetween(Window.unboundedPreceding, 0))
+        return {out_col: (F.col("__offset") + cum - 1).cast("long")}
+
+    return _Step(
+        out,
+        rows,
+        per_bucket=[
+            F.min(ends)["__t"].alias("__first"),
+            F.max(ends)["__t"].alias("__last"),
+            F.count(F.when(F.col("__gap"), 1)).alias("__n"),
+        ],
+        across=[
+            lambda w: [F.lag("__last").over(w).alias("__prev_ts")],
+            # sessions started in earlier buckets offset the in-bucket count
+            lambda w: [
+                _sum_before(
+                    F.col("__n")
+                    + _breaks(F.col("__first"), F.col("__prev_ts"), gap_seconds).cast("long"),
+                    w,
+                ).alias("__offset")
+            ],
+        ],
+    )
+
+
+def _shift_step(cols: list[str], ks: list[int], descending: bool = False) -> _Step:
+    """with_lags' bucketed step: ``{c}_lag{k}`` (``{c}_lead{k}`` when
+    ``descending``) is the in-bucket F.lag (F.lead) except on the k rows
+    nearest the bucket's start (end), which read the tail instead."""
+    name, rank, tail, shift = (
+        ("lead", "__rne", "__suffix", F.lead) if descending
+        else ("lag", "__rn", "__prefix", F.lag)
+    )
+
+    def out(wb: WindowSpec) -> dict[str, Column]:
+        r = F.col(rank)
+        res = {}
+        for c in cols:
+            for k in ks:
+                at = F.lit(k) - r + 1 if descending else r - F.lit(k) - 1
+                res[f"{c}_{name}{k}"] = F.when(r > k, shift(c, k).over(wb)).otherwise(
+                    F.try_element_at(F.col(tail), at)[f"__p_{c}"]
+                )
+        return res
+
+    return _Step(out, tail=cols, k=max(ks), descending=descending)
 
 
 def with_lags(
@@ -327,8 +386,9 @@ def with_lags(
     strategy="window": one shuffle on ``keys``; each key is one task.
     strategy="bucketed": the carry-in trick for hot keys — time is
     range-split into ``bucket_seconds`` buckets; each bucket shifts
-    locally and its first k rows read a tiny per-(key, bucket) carry
-    prefix (the K=max(k) trailing rows of earlier buckets). Identical
+    locally and its first k rows read a tiny per-(key, bucket) tail
+    (the K=max(k) trailing rows of earlier buckets; leading rows of
+    later buckets for leads), all in one ``_bucketed_scan``. Identical
     output, task size bounded by bucket not key.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
@@ -348,19 +408,14 @@ def with_lags(
 
     if strategy != "bucketed":
         raise ValueError(f"unknown with_lags strategy {strategy!r}")
-
-    out = df
-    if lags_l:
-        out = _bucketed_shift(
-            out, cols_l, lags_l, keys_l, order_l, ts_col, bucket_seconds,
-            descending=False, name="lag",
-        )
-    if leads_l:
-        out = _bucketed_shift(
-            out, cols_l, leads_l, keys_l, order_l, ts_col, bucket_seconds,
-            descending=True, name="lead",
-        )
-    return out
+    steps = [
+        _shift_step(cols_l, ks, descending)
+        for ks, descending in ((lags_l, False), (leads_l, True))
+        if ks
+    ]
+    if not steps:
+        return df
+    return _bucketed_scan(df, keys_l, order_l, ts_col, bucket_seconds, steps)
 
 
 _AGG = {
@@ -421,10 +476,11 @@ def with_rolling(
     - rows mode: per-(key, ``bucket_ts_col``-bucket) window aggregate,
       combined on the first k rows of each bucket with an aggregate over
       the tiny carry prefix (the trailing K=max(k) rows of earlier
-      buckets): sums/counts add, min/max take least/greatest, avg and
-      stddev recombine from (count, sum, sum-of-squares). Exact for
-      sum/count/min/max/avg; stddev recombination is algebraically exact
-      but may differ from the window form in the last float ulps.
+      buckets; ``_rolling_step`` of a ``_bucketed_scan``): sums/counts
+      add, min/max take least/greatest, avg and stddev recombine from
+      (count, sum, sum-of-squares). Exact for sum/count/min/max/avg;
+      stddev recombination is algebraically exact but may differ from
+      the window form in the last float ulps.
     - time mode: ``_range_frame`` — each row is also copied into the
       next bucket (width >= max k) as context. Exact, at 2x shuffle
       volume on the value columns.
@@ -448,97 +504,72 @@ def with_rolling(
             bucket_seconds if strategy == "bucketed" else None, add,
         )
 
-    out = df
     if strategy == "window":
         base = Window.partitionBy(*keys_l).orderBy(*order_l)
+        out = df
         for col, agg, k in specs_l:
             w = base.rowsBetween(-int(k), upper)
             out = out.withColumn(f"{col}_{agg}_last{k}", _AGG[agg](col).over(w))
         return out
 
-    # rows mode: in-bucket window + carry-prefix recombination
-    K = max(k for _, _, k in specs_l)
-    payload = sorted({c for c, _, _ in specs_l})
-    b = _keyed(out, keys_l).withColumn(
-        "__bucket", _bucketize(epoch_seconds(bucket_ts_col), bucket_seconds)
+    return _bucketed_scan(
+        df, keys_l, order_l, bucket_ts_col, bucket_seconds,
+        [_rolling_step(df, specs_l, upper)],
     )
-    prefix = _tail_prefix(b, ["__kk"], order_l, payload, K, descending=False)
-    j = b.join(prefix, ["__kk", "__bucket"], "left").drop("__kk")
-    wb = Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
-    j = j.withColumn("__rn", F.row_number().over(wb))
-    drop_cols = ["__bucket", "__prefix", "__rn"]
 
-    # per-k slice of the prefix: the last m = k - rn + 1 rows (only
-    # meaningful when rn <= k; empty otherwise)
-    ks = sorted({k for _, _, k in specs_l})
-    for k in ks:
-        m = F.lit(k) - F.col("__rn") + F.lit(1)
-        sl = F.when(
-            m > 0,
-            F.slice(
+
+def _rolling_step(df: DataFrame, specs: list[tuple[str, str, int]], upper: int) -> _Step:
+    """with_rolling's bucketed rows-mode step: the in-bucket window
+    aggregate, combined on each bucket's first k rows with the same
+    aggregate over the last k - rn + 1 rows of ``__prefix``."""
+
+    def out(wb: WindowSpec) -> dict[str, Column]:
+        res = {}
+        for col, agg, k in specs:
+            # the prefix rows inside this row's frame: the last
+            # m = k - rn + 1 (none once rn > k)
+            m = F.lit(k) - F.col("__rn") + 1
+            sl = F.slice(
                 F.col("__prefix"),
                 F.greatest(F.lit(1), F.size("__prefix") - m + 1),
-                F.greatest(m, F.lit(1)),
-            ),
-        ).otherwise(F.slice(F.col("__prefix"), 1, 0))
-        j = j.withColumn(f"__sl_{k}", sl)
-        drop_cols.append(f"__sl_{k}")
+                F.greatest(m, F.lit(0)),
+            )
+            w = wb.rowsBetween(-k, upper)
+            nn = F.filter(F.transform(sl, _prefix_vals(col)), _notnull())
+            total_cnt = F.count(col).over(w) + F.size(nn).cast("long")
+            name = f"{col}_{agg}_last{k}"
+            if agg == "count":
+                res[name] = total_cnt
+            elif agg in ("min", "max"):
+                res[name] = (
+                    F.least(F.min(col).over(w), F.array_min(nn)) if agg == "min"
+                    else F.greatest(F.max(col).over(w), F.array_max(nn))
+                )
+            elif agg in ("sum", "avg"):
+                cast_t = "long" if _is_integral(df, col) else "double"
+                zero = F.lit(0).cast(cast_t)
+                total_sum = F.coalesce(
+                    F.sum(F.col(col).cast(cast_t)).over(w), zero
+                ) + F.aggregate(nn, zero, _sum_merge(cast_t))
+                if agg == "avg":
+                    total_sum = total_sum.cast("double") / total_cnt.cast("double")
+                res[name] = F.when(total_cnt > 0, total_sum)
+            elif agg == "stddev":
+                s1 = F.coalesce(
+                    F.sum(F.col(col).cast("double")).over(w), F.lit(0.0)
+                ) + F.aggregate(nn, F.lit(0.0), _sum_merge("double"))
+                s2 = F.coalesce(
+                    F.sum(F.col(col).cast("double") * F.col(col).cast("double")).over(w),
+                    F.lit(0.0),
+                ) + F.aggregate(nn, F.lit(0.0), _sumsq_merge())
+                n_d = total_cnt.cast("double")
+                var = (s2 - s1 * s1 / n_d) / (n_d - F.lit(1.0))
+                res[name] = F.when(total_cnt >= 2, F.sqrt(F.greatest(var, F.lit(0.0))))
+            else:
+                raise ValueError(f"unsupported bucketed rolling agg {agg!r}")
+        return res
 
-    for col, agg, k in specs_l:
-        w = wb.rowsBetween(-k, upper)
-        nn = F.filter(
-            F.transform(F.col(f"__sl_{k}"), _prefix_vals(col)), _notnull()
-        )
-        pre_cnt = F.size(nn).cast("long")
-        in_cnt = F.count(col).over(w)
-        total_cnt = in_cnt + pre_cnt
-        name = f"{col}_{agg}_last{k}"
-        if agg == "count":
-            j = j.withColumn(name, total_cnt)
-            continue
-        if agg in ("min", "max"):
-            in_v = (F.min(col) if agg == "min" else F.max(col)).over(w)
-            pre_v = F.array_min(nn) if agg == "min" else F.array_max(nn)
-            j = j.withColumn(
-                name, F.least(in_v, pre_v) if agg == "min" else F.greatest(in_v, pre_v)
-            )
-            continue
-        cast_t = "long" if _is_integral(df, col) else "double"
-        zero = F.lit(0).cast(cast_t)
-        in_sum = F.sum(F.col(col).cast(cast_t)).over(w)
-        pre_sum = F.aggregate(nn, zero, _sum_merge(cast_t))
-        total_sum = F.coalesce(in_sum, zero) + pre_sum
-        if agg == "sum":
-            j = j.withColumn(
-                name, F.when(total_cnt > 0, total_sum).otherwise(F.lit(None))
-            )
-        elif agg == "avg":
-            j = j.withColumn(
-                name,
-                F.when(
-                    total_cnt > 0,
-                    total_sum.cast("double") / total_cnt.cast("double"),
-                ).otherwise(F.lit(None)),
-            )
-        elif agg == "stddev":
-            s1 = F.coalesce(
-                F.sum(F.col(col).cast("double")).over(w), F.lit(0.0)
-            ) + F.aggregate(nn, F.lit(0.0), _sum_merge("double"))
-            s2 = F.coalesce(
-                F.sum(F.col(col).cast("double") * F.col(col).cast("double")).over(w),
-                F.lit(0.0),
-            ) + F.aggregate(nn, F.lit(0.0), _sumsq_merge())
-            n_d = total_cnt.cast("double")
-            var = (s2 - s1 * s1 / n_d) / (n_d - F.lit(1.0))
-            j = j.withColumn(
-                name,
-                F.when(
-                    total_cnt >= 2, F.sqrt(F.greatest(var, F.lit(0.0)))
-                ).otherwise(F.lit(None)),
-            )
-        else:
-            raise ValueError(f"unsupported bucketed rolling agg {agg!r}")
-    return j.drop(*drop_cols)
+    return _Step(out, tail=sorted({c for c, _, _ in specs}), k=max(k for _, _, k in specs))
 
 
 def forward_fill(
@@ -557,9 +588,10 @@ def forward_fill(
 
     strategy="window": one shuffle on ``keys``; each key is one task.
     strategy="bucketed": the fill runs per (key, ``ts_col``-bucket); a
-    ``_carry_in`` of each bucket's last non-null value, filled forward
-    over strictly earlier buckets, seeds rows whose bucket has no
-    earlier non-null. Identical output, task size bounded by bucket.
+    carry of each bucket's last non-null value, filled forward over
+    strictly earlier buckets, seeds rows whose bucket has no earlier
+    non-null (``_ffill_step`` of a ``_bucketed_scan``). Identical
+    output, task size bounded by bucket.
     """
     keys_l = [keys] if isinstance(keys, str) else list(keys)
     order_l = [order] if isinstance(order, str) else list(order)
@@ -578,44 +610,48 @@ def forward_fill(
 
     if strategy != "bucketed":
         raise ValueError(f"unknown forward_fill strategy {strategy!r}")
+    return _bucketed_scan(
+        df, keys_l, order_l, ts_col, bucket_seconds,
+        [_ffill_step(cols_l, order_l, suffix)],
+    )
 
-    b = df.withColumn("__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds))
-    # carry: the latest non-null value per (key, bucket) = max over
-    # (order, v) structs restricted to non-null v, filled forward over
-    # strictly earlier buckets
-    b = _carry_in(
-        b,
-        keys_l,
-        [
-            F.max(
-                F.when(
-                    F.col(c).isNotNull(),
-                    F.struct(
-                        *[F.col(o).alias(f"__o{i}") for i, o in enumerate(order_l)],
-                        F.col(c).alias("__v"),
-                    ),
-                )
-            )["__v"].alias(f"__c_{c}")
-            for c in cols_l
-        ],
-        lambda w: [
-            F.last(f"__c_{c}", ignorenulls=True)
-            .over(w.rowsBetween(Window.unboundedPreceding, -1))
-            .alias(f"__p_{c}")
-            for c in cols_l
+
+def _ffill_step(cols: list[str], order: list[str], suffix: str) -> _Step:
+    """forward_fill's bucketed step: the in-bucket fill, seeded by a
+    carry of each bucket's latest non-null value — the max over
+    (order, value) structs restricted to non-null values — filled
+    forward over strictly earlier buckets."""
+
+    def latest(c: str) -> Column:
+        return F.max(
+            F.when(
+                F.col(c).isNotNull(),
+                F.struct(
+                    *[F.col(o).alias(f"__o{i}") for i, o in enumerate(order)],
+                    F.col(c).alias("__v"),
+                ),
+            )
+        )["__v"].alias(f"__c_{c}")
+
+    def out(wb: WindowSpec) -> dict[str, Column]:
+        run = wb.rowsBetween(Window.unboundedPreceding, 0)
+        return {
+            f"{c}{suffix}": F.coalesce(F.last(c, ignorenulls=True).over(run), F.col(f"__f_{c}"))
+            for c in cols
+        }
+
+    return _Step(
+        out,
+        per_bucket=[latest(c) for c in cols],
+        across=[
+            lambda w: [
+                F.last(f"__c_{c}", ignorenulls=True)
+                .over(w.rowsBetween(Window.unboundedPreceding, -1))
+                .alias(f"__f_{c}")
+                for c in cols
+            ]
         ],
     )
-    wb = (
-        Window.partitionBy(*keys_l, "__bucket")
-        .orderBy(*order_l)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    for c in cols_l:
-        b = b.withColumn(
-            f"{c}{suffix}",
-            F.coalesce(F.last(c, ignorenulls=True).over(wb), F.col(f"__p_{c}")),
-        )
-    return b.drop("__bucket", *[f"__p_{c}" for c in cols_l])
 
 
 def _tag_union(

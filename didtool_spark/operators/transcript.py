@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .temporal import _bucketize, _carry_in, _sum_before
+from .temporal import _bucketize, _carry_in, _keyed, _sum_before
 
 
 def _norm_hash(text: str | Column) -> Column:
@@ -339,14 +339,14 @@ def truncate_conversations(
         b = turns.withColumn("__ord", o)
         b = b.withColumn("__bucket", _bucketize(F.col("__ord"), bucket_size))
         b = _carry_in(
-            b, [conv_col], [F.sum(tok).alias("__t")],
+            _keyed(b, [conv_col]), [F.sum(tok).alias("__t")],
             lambda w: [_sum_before("__t", w).alias("__carry")],
         )
         # monotone cumsum: a bucket whose carry-in busts the budget can
         # never contribute a kept row — prune it before the window
         b = b.where(F.col("__carry") <= budget)
         wl = (
-            Window.partitionBy(conv_col, "__bucket")
+            Window.partitionBy("__kk", "__bucket")
             .orderBy("__ord")
             .rowsBetween(Window.unboundedPreceding, 0)
         )
@@ -354,7 +354,7 @@ def truncate_conversations(
             "cum_tokens", (F.col("__carry") + F.sum(tok).over(wl)).cast("long")
         )
         return out.where(F.col("cum_tokens") <= budget).drop(
-            "__ord", "__bucket", "__carry"
+            "__kk", "__ord", "__bucket", "__carry"
         )
     order = F.col(order_col).asc() if keep == "head" else F.col(order_col).desc()
     w = (
@@ -525,8 +525,7 @@ def attach_outcome(
     if strategy == "bucketed":
         b = turns.withColumn("__bucket", _bucketize(F.col(order_col), bucket_size))
         b = _carry_in(
-            b,
-            [conv_col],
+            _keyed(b, [conv_col]),
             [
                 F.count(F.lit(1)).alias("__n"),
                 *[F.max_by(c, order_col).alias(f"__last_{c}") for c in outcome_cols],
@@ -544,7 +543,7 @@ def attach_outcome(
                 ],
             ],
         )
-        wloc = Window.partitionBy(conv_col, "__bucket").orderBy(order_col)
+        wloc = Window.partitionBy("__kk", "__bucket").orderBy(order_col)
         out = b.withColumn(
             "turns_remaining",
             (F.col("__tot") - F.col("__carry") - F.row_number().over(wloc)).cast("long"),

@@ -501,11 +501,11 @@ def with_cusum(
         pos = s_pos - F.least(F.lit(0.0), F.min(s_pos).over(w))
         neg = s_neg - F.least(F.lit(0.0), F.min(s_neg).over(w))
     elif strategy == "bucketed":
-        base = df.withColumn(
+        base = _keyed(df, keys_l).withColumn(
             "__bucket", _bucketize(epoch_seconds(ts_col), bucket_seconds)
         ).withColumn("__dp", d_pos).withColumn("__dn", d_neg)
         wl = (
-            Window.partitionBy(*keys_l, "__bucket").orderBy(*order_l)
+            Window.partitionBy("__kk", "__bucket").orderBy(*order_l)
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         base = base.withColumn("__lsp", F.sum("__dp").over(wl)).withColumn(
@@ -520,7 +520,6 @@ def with_cusum(
         # local_min(b')) — two passes over the same small table
         def sums(w):
             return [
-                "__bp", "__bn",
                 _sum_before("__tp", w).alias("__cp"),
                 _sum_before("__tn", w).alias("__cn"),
             ]
@@ -528,13 +527,12 @@ def with_cusum(
         def mins(w):
             before = w.rowsBetween(Window.unboundedPreceding, -1)
             return [
-                "__cp", "__cn",
                 F.min(F.col("__cp") + F.col("__bp")).over(before).alias("__mp"),
                 F.min(F.col("__cn") + F.col("__bn")).over(before).alias("__mn"),
             ]
 
         j = _carry_in(
-            base, keys_l,
+            base,
             [
                 F.sum("__dp").alias("__tp"), F.sum("__dn").alias("__tn"),
                 F.min("__lsp").alias("__bp"), F.min("__lsn").alias("__bn"),
@@ -554,7 +552,7 @@ def with_cusum(
         pos = s_pos - F.least(F.lit(0.0), run_min_p)
         neg = s_neg - F.least(F.lit(0.0), run_min_n)
         src, tmp = j, [
-            "__bucket", "__dp", "__dn", "__lsp", "__lsn", "__lmp", "__lmn",
+            "__kk", "__bucket", "__dp", "__dn", "__lsp", "__lsn", "__lmp", "__lmn",
             "__cp", "__cn", "__mp", "__mn",
         ]
     else:

@@ -23,7 +23,9 @@ A unit of work = one conv_id hash bucket: ``pmod(xxhash64(conv_id), B)``.
 Every window/feature in the job is keyed by conv_id, so a bucket is
 closed under the computation — materializing buckets independently is
 exactly equivalent to one global job, and a crashed run resumes by
-anti-joining the manifest (skip buckets whose manifest entry exists).
+anti-joining the manifest (skip buckets whose manifest entry exists
+and was written under the same input fingerprint; a changed input
+re-runs every bucket).
 The staging write is itself a commit point (_STAGED marker with the
 input fingerprint): a resumed run reuses the staged copy instead of
 re-scanning the source.
@@ -91,8 +93,13 @@ class CheckpointedRun:
         input_fingerprint: str = "",
     ) -> dict:
         """Materialize ``transform(source)`` bucket-by-bucket, skipping
-        buckets already present in the manifest. Returns run totals."""
-        done = self.completed_buckets()
+        buckets whose manifest entry carries ``input_fingerprint``; a
+        bucket committed under another fingerprint re-runs. Returns run
+        totals."""
+        done = {
+            m["bucket"] for m in self.manifest()
+            if m.get("input_fingerprint", "") == input_fingerprint
+        }
         todo = [b for b in range(self.n_buckets) if b not in done]
         totals = {"rows": 0, "bytes": 0, "buckets_run": 0, "buckets_skipped": len(done)}
         if not todo:

@@ -14,9 +14,27 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.temporal import forward_fill, sessionize, with_lags, with_rolling
+from ..operators.temporal import (
+    _bucketed_scan,
+    _ffill_step,
+    _rolling_step,
+    _session_step,
+    _shift_step,
+    forward_fill,
+    sessionize,
+    with_lags,
+    with_rolling,
+)
 
 ORDER = ("ts", "turn_idx")
+LAG_COLS, LAGS = ["text_len", "n_tokens"], [1, 2]
+ROLLING = [
+    ("text_len", "sum", 5),
+    ("text_len", "avg", 5),
+    ("n_tokens", "sum", 5),
+    ("is_tool", "sum", 10),
+    ("is_user", "sum", 10),
+]
 
 
 def turn_features(df: DataFrame) -> DataFrame:
@@ -53,11 +71,13 @@ def materialize_features(
     strategy="window" (default): every step shares one partitioning, so
     Catalyst plans a single Exchange+Sort with chained window operators
     — the optimal plan when no conversation is hot.
-    strategy="bucketed": every step uses its carry-in skew-split form
-    (task size bounded by ``bucket_seconds`` regardless of key size) —
-    the right plan when a single conversation holds a large share of all
-    turns (BENCH/SKEW.md: 2-3x faster end to end on a 99%-hot-key input,
-    and the only form that survives an arbitrarily hot key).
+    strategy="bucketed": the four steps run as ``_Step``s of one
+    ``temporal._bucketed_scan`` — one carry join in all (task size
+    bounded by ``bucket_seconds`` regardless of key size), the only
+    form that survives an arbitrarily hot key. BENCH/SKEW.md, local[4]
+    on a 4-core host, 1.12M turns with 89% in one conversation: 11.56 s
+    bucketed vs 10.44 s window (at that size the window's one hot task
+    still fits).
 
     Shuffle-byte layout: Tungsten's UnsafeRow gives every fixed-width
     field a full 8-byte slot, so each column kept out of the pre-window
@@ -69,12 +89,6 @@ def materialize_features(
     cross the wire instead of 10 (~20% fewer uncompressed shuffle
     bytes/row; on the bandwidth-capped 16-core host this is the lever
     that scales, not more partitions)."""
-    kw = dict(keys="conv_id", order=ORDER)
-    bkw = (
-        dict(strategy="bucketed", bucket_seconds=bucket_seconds)
-        if strategy == "bucketed"
-        else {}
-    )
     n_tokens = (
         F.length("text")
         - F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
@@ -103,30 +117,37 @@ def materialize_features(
         .drop("text", "role")
     )
     base_cols = [c for c in pre.columns if c != "__role_code"]
-    # the first window (sessionize's cumulative session ids) triggers
-    # the single conv_id Exchange; everything added after it is
-    # computed post-shuffle
-    out = sessionize(pre, gap_seconds=gap_seconds, **kw, **bkw)
-    out = (
-        out.withColumn("is_user", (F.col("__role_code") == 0).cast("int"))
-        .withColumn("is_assistant", (F.col("__role_code") == 1).cast("int"))
-        .withColumn("is_tool", (F.col("__role_code") == 2).cast("int"))
-        .withColumn("has_tool", F.col("tool").isNotNull().cast("int"))
-    )
-    out = with_lags(out, ["text_len", "n_tokens"], lags=[1, 2], **kw, **bkw)
-    out = with_rolling(
-        out,
-        [
-            ("text_len", "sum", 5),
-            ("text_len", "avg", 5),
-            ("n_tokens", "sum", 5),
-            ("is_tool", "sum", 10),
-            ("is_user", "sum", 10),
-        ],
-        **kw,
-        **bkw,
-    )
-    out = forward_fill(out, ["tool"], **kw, **bkw)
+
+    def with_flags(frame: DataFrame) -> DataFrame:
+        return (
+            frame.withColumn("is_user", (F.col("__role_code") == 0).cast("int"))
+            .withColumn("is_assistant", (F.col("__role_code") == 1).cast("int"))
+            .withColumn("is_tool", (F.col("__role_code") == 2).cast("int"))
+            .withColumn("has_tool", F.col("tool").isNotNull().cast("int"))
+        )
+
+    if strategy == "bucketed":
+        # every step reads only the flagged input, so the four run as
+        # one bucketed scan with one carry join
+        flagged, order = with_flags(pre), list(ORDER)
+        out = _bucketed_scan(
+            flagged, ["conv_id"], order, "ts", bucket_seconds,
+            [
+                _session_step(gap_seconds, "ts", order, "session_id"),
+                _shift_step(LAG_COLS, LAGS),
+                _rolling_step(flagged, ROLLING, upper=-1),
+                _ffill_step(["tool"], order, "_ffill"),
+            ],
+        )
+    else:
+        kw = dict(keys="conv_id", order=ORDER)
+        # the first window (sessionize's cumulative session ids) triggers
+        # the single conv_id Exchange; everything added after it is
+        # computed post-shuffle
+        out = with_flags(sessionize(pre, gap_seconds=gap_seconds, **kw))
+        out = with_lags(out, LAG_COLS, lags=LAGS, **kw)
+        out = with_rolling(out, ROLLING, **kw)
+        out = forward_fill(out, ["tool"], **kw)
     # restore the canonical column order (turn features before
     # session/lag/rolling outputs — the r4 schema, byte-for-byte)
     flags = ["is_user", "is_assistant", "is_tool", "has_tool"]

@@ -1,9 +1,12 @@
 """Skew evidence: one conversation holding ~half of all turns (the
 hot-key regime the north rule's salted-key splitting targets).
 
-Compares wall time of the as-of join window strategy (whole hot key in
-one task) vs the bucketed skew-splitting strategy, and sessionize
-window vs bucketed (carry trick). Appends results to BENCH/SKEW.md.
+Compares wall time of the window strategy (whole hot key in one task)
+vs the bucketed skew-splitting strategy for each temporal operator and
+for the whole ``materialize_features`` chain. Appends one run (host
+cores, input size, table) to BENCH/SKEW.md.
+
+    python scripts/skew_bench.py [n_convs] [hot_factor]
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from didtool_spark.operators.temporal import (
     with_lags,
     with_rolling,
 )
+from didtool_spark.plans.materialize import materialize_features
 from didtool_spark.session import get_spark
 
 
@@ -36,7 +40,8 @@ def timed(fn):
 def main() -> None:
     n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     hot_factor = int(sys.argv[2]) if len(sys.argv) > 2 else 20000
-    spark = get_spark("skew-bench", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    spark = get_spark("skew-bench", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
 
     tr = generate_transcripts(
@@ -90,6 +95,11 @@ def main() -> None:
             tr, ["tool"], strategy=strategy, bucket_seconds=BW
         ).write.format("noop").mode("overwrite").save()
 
+    def run_materialize(strategy):
+        materialize_features(
+            tr, strategy=strategy, bucket_seconds=BW
+        ).write.format("noop").mode("overwrite").save()
+
     runners = {
         "asof": run_asof,
         "sessionize": run_sess,
@@ -97,6 +107,7 @@ def main() -> None:
         "rolling_rows": run_roll_rows,
         "rolling_time": run_roll_time,
         "ffill": run_ffill,
+        "materialize": run_materialize,
     }
     # warm both plans once
     for fn in runners.values():
@@ -110,13 +121,15 @@ def main() -> None:
     print(results)
 
     os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/SKEW.md", "w") as f:
+    with open("BENCH/SKEW.md", "a") as f:
         f.write(
-            f"""# BENCH/SKEW — hot-key skew-splitting evidence
+            f"""
+## Run {time.strftime("%Y-%m-%d")}: local[{cores}] on a {os.cpu_count()}-core host
 
-Input: {n:,} turns, hottest conversation holds {hot['count']:,}
-({100 * hot['count'] / n:.0f}% of all turns) — the regime where
-``Window.partitionBy(conv_id)`` serializes on one task.
+Input: {n:,} turns (`skew_bench.py {n_convs} {hot_factor}`); the
+hottest conversation holds {hot['count']:,} ({100 * hot['count'] / n:.0f}%).
+Bucket width {BW // 3600} h. Wall seconds of one noop write, after one
+warm run of each plan.
 
 | operator | window strategy (s) | bucketed skew-split (s) |
 |---|---|---|
@@ -126,14 +139,9 @@ Input: {n:,} turns, hottest conversation holds {hot['count']:,}
 | rolling rows (sum+avg last5) | {results['rolling_rows_window']} | {results['rolling_rows_bucketed']} |
 | rolling time (sum 1800s) | {results['rolling_time_window']} | {results['rolling_time_bucketed']} |
 | forward fill | {results['ffill_window']} | {results['ffill_bucketed']} |
-
-All bucketed forms are proven output-identical to the window forms
-(tests/test_temporal.py). At 10^12 turns a hot conversation makes the
-window strategy's single task unbounded; the bucketed strategies bound
-every task by the time-bucket width regardless of key size.
+| materialize_features (all four) | {results['materialize_window']} | {results['materialize_bucketed']} |
 """
         )
-
 
 if __name__ == "__main__":
     main()

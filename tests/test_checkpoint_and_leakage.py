@@ -73,6 +73,35 @@ def test_checkpoint_resume(spark, tr, tmp_path_factory, monkeypatch):
     assert all(m["rows"] >= 0 and m["bytes"] > 0 and "finished_at" in m for m in man)
 
 
+def test_checkpoint_rerun_on_changed_fingerprint(spark, tr, tmp_path_factory):
+    """A bucket committed under another input fingerprint is stale: a
+    run with a new fingerprint re-runs every bucket, and the result is
+    the new source's."""
+    out = str(tmp_path_factory.mktemp("ckpt_fp"))
+    first = CheckpointedRun(spark, out, n_buckets=4).run(
+        tr, materialize_features, input_fingerprint="fp-1"
+    )
+    assert first["buckets_run"] == 4
+    changed = tr.withColumn("text", F.concat(F.coalesce("text", F.lit("")), F.lit(" more")))
+    run = CheckpointedRun(spark, out, n_buckets=4)
+    second = run.run(changed, materialize_features, input_fingerprint="fp-2")
+    assert second["buckets_run"] == 4
+    assert second["buckets_skipped"] == 0
+    assert {m["input_fingerprint"] for m in run.manifest()} == {"fp-2"}
+    key = ["conv_id", "turn_idx"]
+    cols = [*key, "text_len", "n_tokens_lag1", "text_len_sum_last5"]
+
+    def rows(df):
+        return df.select(*cols).toPandas().sort_values(key).reset_index(drop=True)
+
+    assert rows(run.read_result()).equals(rows(materialize_features(changed)))
+    # same fingerprint again -> nothing re-runs
+    again = CheckpointedRun(spark, out, n_buckets=4).run(
+        changed, materialize_features, input_fingerprint="fp-2"
+    )
+    assert again["buckets_run"] == 0 and again["buckets_skipped"] == 4
+
+
 def test_zero_temporal_leakage(spark, tr):
     """Perturb every row's text/role/tool/ts in the FUTURE of an anchor
     cut; features at-or-before the cut must be bit-identical."""

@@ -49,6 +49,7 @@ from didtool_spark.operators.ts_features import (
     with_rolling_distinct,
     with_zscore,
 )
+from didtool_spark.plans.materialize import materialize_features
 
 BASE = datetime.datetime(2026, 1, 1, 12, 0, 0)
 TEXTS = ["hi", "run the tool", "", None, "ok", "try again", "loop loop", "hi"]
@@ -118,6 +119,29 @@ def _null_key_rows():
 
 
 NULL_KEY_ROWS = _null_key_rows()
+
+
+def _long_rows():
+    """28 turns under "a" and 14 under NULL, 0 to 1801 s apart: 30-minute
+    buckets of 1 to 11 turns, so the K=10 tail of the bucketed
+    materialize chain both spans several buckets and is cut at K."""
+    gaps = [0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1801, 600, 1799, 1801, 30]
+    rows = []
+    for key, n in (("a", 28), (None, 14)):
+        t = 0
+        for ti in range(n):
+            t += gaps[ti % len(gaps)]
+            rows.append(
+                (
+                    key, ti, ROLES[ti % 4], TEXTS[ti % len(TEXTS)], TOOLS[ti % 3],
+                    BASE + datetime.timedelta(seconds=t),
+                    None if ti % 5 == 2 else float(ti),
+                )
+            )
+    return rows
+
+
+LONG_ROWS = _long_rows()
 
 SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -196,6 +220,22 @@ def test_temporal_bucketed_equals_window_fuzz(spark, rows):
                       **kw),
             ["conv_id", "turn_idx"],
         )
+
+
+@FUZZ
+@given(rows=transcripts())
+@example(rows=NULL_KEY_ROWS)
+@example(rows=LONG_ROWS)
+def test_materialize_bucketed_equals_window_fuzz(spark, rows):
+    """The fused bucketed chain (sessionize, lags, rolling and
+    forward_fill in one scan) equals the window strategy, with 30-minute
+    buckets that hold fewer rows than the K=10 rolling tail."""
+    df = spark.createDataFrame(rows, SCHEMA)
+    _cmp(
+        materialize_features(df),
+        materialize_features(df, strategy="bucketed", bucket_seconds=1800),
+        ["conv_id", "turn_idx"],
+    )
 
 
 @FUZZ
