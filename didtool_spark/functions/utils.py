@@ -8,6 +8,7 @@ operators.metrics.handle_categorical_expr.
 
 from __future__ import annotations
 
+import contextlib
 from typing import Iterable
 
 from pyspark.sql import DataFrame, functions as F
@@ -56,6 +57,30 @@ def bounded_pull(df: DataFrame, cap: int):
 
     masked = {pa.float64(): pd.Float64Dtype(), pa.float32(): pd.Float32Dtype()}
     return df.toArrow().to_pandas(types_mapper=masked.get)
+
+
+@contextlib.contextmanager
+def persisted():
+    """Scope for tables only the enclosing function reads.  Yields
+    ``keep(df, level=None)``: persists ``df`` and returns that exact
+    Dataset, which the exit (normal or by exception) unpersists —
+    ``unpersist`` on a frame derived from it would be a silent no-op.
+    A table the returned lazy plan still reads is instead
+    ``localCheckpoint(eager=True)``ed: its blocks live as long as the
+    plans that read them (the ContextCleaner frees them on GC) and no
+    CacheManager entry is made."""
+    kept: list[DataFrame] = []
+
+    def keep(df: DataFrame, level=None) -> DataFrame:
+        df = df.persist() if level is None else df.persist(level)
+        kept.append(df)
+        return df
+
+    try:
+        yield keep
+    finally:
+        for df in kept:
+            df.unpersist()
 
 
 class Logger:

@@ -44,6 +44,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..functions.utils import persisted
 from .decontam import _norm_tokens
 from .dsir import _gram_buckets
 
@@ -168,43 +169,44 @@ def _fit_distributed(
     broadcast-joined weights, (2) per-bucket gradient via the residuals
     joined back. Only (n_buckets) rows ever reach the driver."""
     sess = feats.sparkSession
-    feats = feats.withColumn(
-        "x", F.col("cnt") / F.sum("cnt").over(Window.partitionBy(id_col))
-    ).persist()
-    n = feats.select(id_col).distinct().count()  # also fills the cache
     w = np.zeros(n_buckets)
     b = 0.0
-    for _ in range(n_iter):
-        wtab = sess.createDataFrame(
-            [(i, float(v)) for i, v in enumerate(w)], "b long, w double"
-        )
-        per_doc = (
-            feats.join(F.broadcast(wtab), "b", "left")
-            .groupBy(id_col, label_col)
-            .agg(F.sum(F.col("x") * F.coalesce("w", F.lit(0.0))).alias("z"))
-            .select(
-                id_col,
-                (
-                    1.0 / (1.0 + F.exp(-(F.col("z") + F.lit(b))))
-                    - F.col(label_col)
-                ).alias("resid"),
+    with persisted() as keep:
+        feats = keep(feats.withColumn(
+            "x", F.col("cnt") / F.sum("cnt").over(Window.partitionBy(id_col))
+        ))
+        n = feats.select(id_col).distinct().count()  # also fills the cache
+        for _ in range(n_iter):
+            wtab = sess.createDataFrame(
+                [(i, float(v)) for i, v in enumerate(w)], "b long, w double"
             )
-        )
-        per_doc = per_doc.persist()
-        grad = (
-            feats.join(per_doc, id_col)
-            .groupBy("b")
-            .agg(F.sum(F.col("x") * F.col("resid")).alias("g"))
-            .collect()
-        )
-        g = np.zeros(n_buckets)
-        for row in grad:
-            g[row["b"]] = row["g"]
-        r_sum = per_doc.agg(F.sum("resid")).collect()[0][0] or 0.0
-        per_doc.unpersist()
-        w -= lr * (g / n + l2 * w)
-        b -= lr * r_sum / n
-    feats.unpersist()
+            per_doc = (
+                feats.join(F.broadcast(wtab), "b", "left")
+                .groupBy(id_col, label_col)
+                .agg(F.sum(F.col("x") * F.coalesce("w", F.lit(0.0))).alias("z"))
+                .select(
+                    id_col,
+                    (
+                        1.0 / (1.0 + F.exp(-(F.col("z") + F.lit(b))))
+                        - F.col(label_col)
+                    ).alias("resid"),
+                )
+            )
+            # read twice (gradient join, residual sum); freed each round
+            with persisted() as keep_round:
+                per_doc = keep_round(per_doc)
+                grad = (
+                    feats.join(per_doc, id_col)
+                    .groupBy("b")
+                    .agg(F.sum(F.col("x") * F.col("resid")).alias("g"))
+                    .collect()
+                )
+                r_sum = per_doc.agg(F.sum("resid")).collect()[0][0] or 0.0
+            g = np.zeros(n_buckets)
+            for row in grad:
+                g[row["b"]] = row["g"]
+            w -= lr * (g / n + l2 * w)
+            b -= lr * r_sum / n
     return QualityClassifier(w, b, n_buckets, hash_fn)
 
 

@@ -15,11 +15,11 @@ returns the dropped-bucket table (band, bucket, count) so a pipeline
 can report exactly what was excluded (they are near-identical
 boilerplate clusters handled by exact dedup).
 
-Caching note: minhash_near_dupes and ngram_jaccard_pairs eager-persist
-bounded intermediates (band table / pair set / inverted index) that the
-returned lazy DataFrame reads; they stay pinned until the session
-evicts them — in a long-lived session loop, call
-``spark.catalog.clearCache()`` between corpora (bench.py does).
+Caching note: minhash_near_dupes and ngram_jaccard_pairs store bounded
+intermediates (band table / pair set / inverted index) that the
+returned lazy DataFrame reads as eager local checkpoints: no
+CacheManager entry is made, and the blocks are freed once no plan
+references them.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.utils import bounded_pull
+from ..functions.utils import bounded_pull, persisted
 from .text import tokens_expr, window_concat_expr
 
 
@@ -313,7 +313,7 @@ def minhash_near_dupes(
     band explode and the candidate self-join — carrying the shingle
     arrays would multiply shuffled bytes by bands x shingle-size. The
     deduped candidate pair set (orders of magnitude smaller than the
-    corpus) is persisted, its ids are joined back to the source, and
+    corpus) is checkpointed, its ids are joined back to the source, and
     shingles are recomputed ONLY for candidate rows: the shingle
     projection sits above the id join, so the interpreted shingle
     lambda never runs for non-candidate docs in the verify pass."""
@@ -324,13 +324,11 @@ def minhash_near_dupes(
     # partial-aggregated groupBy (map-side combine — no task ever holds
     # a whole hot bucket) and a broadcast anti-join that drops hot rows
     # MAP-SIDE, before any shuffle co-locates them. The slim (id, band,
-    # bucket) table is cached LAZILY: its consumers are strictly
-    # ordered — the sizes broadcast exchange must materialize before
-    # any self-join probe stage launches, so the broadcast job alone
-    # computes the signature pipeline and fills the cache; the two
-    # self-join map stages then read it. (Contrast cands below, whose
-    # two consumers ARE concurrent stages and need the eager fill.)
-    banded = banded.persist()
+    # bucket) table feeds the sizes aggregate and both self-join sides,
+    # so the signature pipeline runs once into an eager local
+    # checkpoint (no CacheManager entry; its blocks are freed with the
+    # last plan that reads them)
+    banded = banded.localCheckpoint(eager=True)
     sizes = banded.groupBy("band", "bucket").count()
     banded = banded.join(
         F.broadcast(sizes.where(F.col("count") > max_bucket)),
@@ -340,22 +338,24 @@ def minhash_near_dupes(
 
     a = banded.alias("a")
     b = banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+    # the pair set feeds TWO consumers of the returned plan (the id set
+    # and the verify join): filling it in its own job runs the LSH DAG
+    # exactly once.  Checkpointing it from the filled cache gives the
+    # checkpoint the measured size, not the self-join's estimate, so the
+    # pair joins below still plan as broadcasts.
+    with persisted() as keep:
+        cands = keep(
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.id") < F.col("b.id")),
+            )
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .persist()
-    )
-    # eager fill: the pair cache feeds TWO consumers (the id set and the
-    # verify join) — filling it in its own job first guarantees the LSH
-    # DAG runs exactly once (lazy caching would race the two branch
-    # stages into computing it twice inside one action)
-    cands.count()
+        cands.count()
+        cands = cands.select("*").localCheckpoint(eager=True)
     ids = (
         cands.select(F.col("id_a").alias("id"))
         .union(cands.select(F.col("id_b").alias("id")))
@@ -633,15 +633,12 @@ def ngram_jaccard_pairs(
         F.col(id_col).alias("id"),
         F.explode(shingles_expr(text_col, k_shingle)).alias("s"),
     )
-    # the inverted index feeds up to four consumers (df-prune counts,
-    # per-doc sizes, both self-join sides): eager-cache so the
-    # interpreted shingle lambda runs once — caching the exploded index
-    # is the standard trade for this oracle-grade exact tool (MinHash is
-    # the low-memory 100 TB path)
-    from pyspark import StorageLevel
-
-    inv = inv.persist(StorageLevel.MEMORY_AND_DISK)
-    inv.count()
+    # the inverted index feeds up to four consumers of the returned
+    # plan (df-prune counts, per-doc sizes, both self-join sides):
+    # checkpoint it eagerly so the interpreted shingle lambda runs once
+    # — storing the exploded index is the standard trade for this
+    # oracle-grade exact tool (MinHash is the low-memory 100 TB path)
+    inv = inv.localCheckpoint(eager=True)
     # prune ultra-common shingles (stopword boilerplate) for scalability.
     # Numerator AND denominators are computed over the retained shingle
     # universe (sizes post-prune), so the Jaccard is exact over that
@@ -791,24 +788,21 @@ def connected_components(
       checksum — one tiny aggregate per round, no expensive
       ``exceptAll`` diff.
     """
-    # Cache the input edges: the driver pull reads them twice (count +
-    # pull), the iterative path's distinct checkpoint once after the
+    # Persist the input edges: the driver pull reads them twice (count
+    # + pull), the iterative path's distinct checkpoint once after the
     # count, and an uncached pair lineage (e.g. the whole MinHash
-    # candidate pipeline) would re-execute per read.  The cache is
-    # released as soon as `pdf` or `e` holds the edges.  Union-find is
-    # idempotent under duplicate/reversed edges, so only the iterative
-    # path pays for the `.distinct()` shuffle.
-    e_raw = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .persist()
-    )
-    try:
+    # candidate pipeline) would re-execute per read.  The scope
+    # releases them as soon as `pdf` or `e` holds the edges.  Union-find
+    # is idempotent under duplicate/reversed edges, so only the
+    # iterative path pays for the `.distinct()` shuffle.
+    with persisted() as keep:
+        e_raw = keep(
+            pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .where(F.col("u") != F.col("v"))
+        )
         pdf = bounded_pull(e_raw, _DRIVER_EDGES)
         if pdf is None:
             e = e_raw.distinct().localCheckpoint(eager=True)
-    finally:
-        e_raw.unpersist()
     if pdf is not None:
         ids, comp = _numpy_union_find(pdf["u"], pdf["v"])
         t = e_raw.schema["u"].dataType.simpleString()

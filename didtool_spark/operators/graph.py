@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.utils import bounded_pull
+from ..functions.utils import bounded_pull, persisted
 
 __all__ = ["pagerank"]
 
@@ -157,15 +157,13 @@ def pagerank(
     # persist the edge table FIRST: it feeds nodes, degrees, the join
     # relation and the dangling set — without this the caller's edge
     # construction (often a self-join + distinct) re-executes for each
-    e = e_in.persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    ej = dangling = zero_in = None
-    try:
+    with persisted() as keep:
+        e = keep(e_in)
+        nodes = keep(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
         n = nodes.count()
         if n == 0:
             # empty edge table: no nodes, no ranks — return the empty
@@ -184,10 +182,10 @@ def pagerank(
             ej = ej.repartition(
                 e.sparkSession.sparkContext.defaultParallelism, F.col("dst")
             )
-        ej = ej.persist()
-        dangling = nodes.join(
+        ej = keep(ej)
+        dangling = keep(nodes.join(
             deg.select(F.col("src").alias("node")), "node", "left_anti"
-        ).persist()
+        ))
         # a graph with no dangling nodes (every co-occurrence graph,
         # any symmetrized graph) skips the per-round dangling-mass
         # subplan entirely — one fit-time count saves an agg +
@@ -197,10 +195,10 @@ def pagerank(
         # term, so each round UNIONS them in (exchange-free) instead
         # of left-joining the full node table against the
         # contributions — one exchange per round saved
-        zero_in = nodes.join(
+        zero_in = keep(nodes.join(
             e.select(F.col("dst").alias("node")).distinct(),
             "node", "left_anti",
-        ).persist()
+        ))
 
         d = float(damping)
         tele = (1.0 - d) / n
@@ -268,14 +266,5 @@ def pagerank(
                     if delta is not None and delta < tol:
                         break
         # one final eager checkpoint makes the result independent of
-        # the cached helper tables, so they can be released
-        # immediately — a long-lived session calling pagerank
-        # repeatedly must not accumulate five cached relations per
-        # call
+        # the cached helper tables, which the scope then releases
         return ranks.localCheckpoint(eager=True)
-    finally:
-        # unpersist unconditionally — an exception mid-iteration must
-        # not leak five cached relations into a long-lived session
-        for cached in (e, nodes, ej, dangling, zero_in):
-            if cached is not None:
-                cached.unpersist()

@@ -13,10 +13,10 @@ standard filter they still lacked. Spark-first design:
   The fitted state is a pair of SMALL DataFrames (vocab-sized), the
   didtool fit-state shape (SURVEY §1.1) at corpus scale.
 - ``NgramLM.score``: pure JVM column expressions — per-position
-  bigrams explode, the LM tables join in (broadcast by default: a
-  pruned LM is MBs; corpora are TBs — zero shuffle of the corpus), and
-  one ``groupBy(doc_id)`` with partial aggregation re-folds the
-  positions. No Python in the row path.
+  bigrams explode, the LM tables join in (broadcast while both fit
+  ``_BROADCAST_ROWS``: a pruned LM is MBs; corpora are TBs — zero
+  shuffle of the corpus), and one ``groupBy(doc_id)`` with partial
+  aggregation re-folds the positions. No Python in the row path.
 
 Model (deterministic, SQL-replayable — every constant is a literal):
   P_uni(w)     = (c(w) + k) / (N + k * (V + 1))      add-k smoothing,
@@ -35,12 +35,11 @@ the broadcast stays bounded (top-V vocab + surviving bigrams). The
 pruning changes scores (documented divergence knob, default off) the
 same way KenLM pruning does in the reference pipeline.
 
-Caching note: fit() caches three vocab-sized tables — unigram counts,
-bigram counts, and the pre-divided conditional ``bi_ratio`` (see the
-comment there; score() broadcasts exactly two of them). Like the dedup
-family's eager caches they stay pinned until the session evicts them —
-call ``spark.catalog.clearCache()`` between corpora in a long-lived
-session loop (bench.py does).
+Storage note: fit() stores three vocab-sized tables — unigram counts,
+bigram counts, and the pre-divided conditional ``bi_ratio`` (score()
+joins exactly two of them) — as eager local checkpoints: no
+CacheManager entry is made, and their blocks are freed once the model
+and every plan built from it are gone.
 """
 
 from __future__ import annotations
@@ -52,6 +51,10 @@ from pyspark.sql import DataFrame, functions as F
 from .decontam import _norm_tokens
 
 __all__ = ["NgramLM", "lm_perplexity"]
+
+# score() broadcasts the LM tables while vocab and bigram counts are
+# both at most this; above, (doc_id, token) pairs shuffle, never text
+_BROADCAST_ROWS = 1_000_000
 
 
 def _bigram_structs(toks):
@@ -81,11 +84,12 @@ class NgramLM:
     ``bi``:   (w1, w2, c) bigram counts
     ``bi_ratio``: (w1, w2, ratio) with ratio = c(w1 w2) / c(w1) —
         the conditional term PRE-DIVIDED at fit time (one vocab-sized
-        join, cached), so score() needs exactly TWO broadcast lookups:
+        join, checkpointed), so score() needs exactly TWO lookups:
         this table on (w1, w2) and ``uni`` on w2. ratio is NULL when
         w1 was pruned from the vocab (falls into the backoff, same as
         a missing bigram).
-    ``n_total``: total token count N;  ``v``: distinct vocab size V.
+    ``n_total``: total token count N;  ``v``: distinct vocab size V;
+    ``n_bigrams``: rows of ``bi_ratio`` (with ``v``, picks the join).
     """
 
     uni: DataFrame
@@ -95,6 +99,7 @@ class NgramLM:
     v: int
     k: float
     lam: float
+    n_bigrams: int = 0
 
     @classmethod
     def fit(
@@ -112,23 +117,22 @@ class NgramLM:
         toks = corpus.select(_norm_tokens(F.col(col)).alias("__toks")).where(
             F.size("__toks") > 0
         )
-        # Cache both fitted tables: they are vocab-sized, but their
-        # PLANS each contain a full corpus scan — score() references
-        # ``uni`` twice (one broadcast, reused via ReuseExchange), and
-        # without the cache each reference re-scans the corpus.
-        # The collect below doubles as the materializing action for uni.
+        # Checkpoint both fitted tables eagerly: they are vocab-sized,
+        # but their PLANS each contain a full corpus scan, and the
+        # model's score() plans keep reading them — without this each
+        # reference would re-scan the corpus.
         uni = (
             toks.select(F.explode("__toks").alias("w"))
             .groupBy("w")
             .agg(F.count("*").alias("c"))
-            .cache()
+            .localCheckpoint(eager=True)
         )
         bi = (
             toks.where(F.size("__toks") > 1)
             .select(F.explode(_bigram_structs(F.col("__toks"))).alias("p"))
             .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
             .agg(F.count("*").alias("c"))
-            .cache()
+            .localCheckpoint(eager=True)
         )
         # one tiny action for the two scalars (vocab-sized input)
         tot = uni.agg(
@@ -138,9 +142,10 @@ class NgramLM:
             uni = uni.where(F.col("c") >= min_count)
             bi = bi.where(F.col("c") >= min_count)
         # pre-divide the conditional term (vocab-sized join over the two
-        # cached tables, itself cached): the division over (pruned)
-        # unigram counts is bit-identical whether it runs here or per
-        # scored position
+        # checkpointed tables, itself checkpointed, so every score()
+        # plan reads only the two stored tables): the division over
+        # (pruned) unigram counts is bit-identical whether it runs here
+        # or per scored position
         bi_ratio = (
             bi.join(
                 uni.select(F.col("w").alias("__rw"), F.col("c").alias("__c1")),
@@ -154,16 +159,12 @@ class NgramLM:
                     "ratio"
                 ),
             )
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        # materialize: the ratio build (and the bigram corpus scan it
-        # sits on) runs once HERE, so every score() plan sees only the
-        # two cached vocab-sized tables — two broadcasts, no rebuild
-        bi_ratio.count()
         return cls(
             uni=uni, bi=bi, bi_ratio=bi_ratio,
             n_total=int(tot["n"]), v=int(tot["v"]),
-            k=float(k), lam=float(lam),
+            k=float(k), lam=float(lam), n_bigrams=bi_ratio.count(),
         )
 
     def _p_uni(self, c_col):
@@ -175,12 +176,10 @@ class NgramLM:
         df: DataFrame,
         col: str = "text",
         id_col: str = "doc_id",
-        broadcast: bool = True,
     ) -> DataFrame:
         """(id_col, n_tokens, avg_nll, perplexity) per document with at
-        least one token. ``broadcast=False`` switches the LM joins to
-        shuffle equi-joins for LMs too large to broadcast (then only
-        (doc_id, token) pairs shuffle, never text).
+        least one token. The LM tables are broadcast while both fit
+        ``_BROADCAST_ROWS``; larger LMs join by shuffle equi-joins.
 
         Single-stream design: every position — the unigram-only first
         token rides a (w1=NULL, w2=t1) row — flows through ONE stream
@@ -189,7 +188,8 @@ class NgramLM:
         plan carries two BroadcastExchange nodes total (plan-asserted
         in test_lm.py), where the former first/interior/backoff split
         built three; one groupBy(id) folds everything."""
-        hint = F.broadcast if broadcast else (lambda d: d)
+        bcast = max(self.v, self.n_bigrams) <= _BROADCAST_ROWS
+        hint = F.broadcast if bcast else (lambda d: d)
         uni = hint(self.uni.select("w", F.col("c").cast("double").alias("__cu")))
         bir = hint(
             self.bi_ratio.select(
@@ -264,9 +264,8 @@ def lm_perplexity(
     k: float = 0.5,
     lam: float = 0.8,
     min_count: int = 1,
-    broadcast: bool = True,
 ) -> DataFrame:
     """One-call form: fit on ``corpus`` (default: ``df`` itself — the
     self-scored form used for relative quality ranking), score ``df``."""
     lm = NgramLM.fit(corpus if corpus is not None else df, col, k, lam, min_count)
-    return lm.score(df, col, id_col, broadcast)
+    return lm.score(df, col, id_col)

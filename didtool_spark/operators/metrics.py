@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from ..functions.binexpr import bin_expr
 from ..functions.exprs import is_missing
+from ..functions.utils import persisted
 from .binning import MAX_DISTINCT, Binner, collect_capped, step_edges
 from .woe import _floors, woe_value
 
@@ -653,12 +654,12 @@ def auc_ks_values(
     (the scorecard/report paths) should use this instead of auc()+ks(),
     which would each pay the approxQuantile + chunk-offset jobs."""
     table = _score_table(df, label, score, n_score_bins)
-    if not n_score_bins:
-        # the exact path runs three jobs over the distinct-score table
-        # (quantile bounds, chunk totals, final aggregate) — persist it
-        # so the underlying score aggregation runs once
-        table = table.persist()
-    try:
+    with persisted() as keep:
+        if not n_score_bins:
+            # the exact path runs three jobs over the distinct-score
+            # table (quantile bounds, chunk totals, final aggregate) —
+            # persist it so the underlying score aggregation runs once
+            table = keep(table)
         t, n, n1 = (
             _with_cum_before(table) if n_score_bins
             else _with_cum_before_exact(table)
@@ -680,9 +681,6 @@ def auc_ks_values(
             (row["r1"] - n1 * (n1 + 1) / 2.0) / (n0 * n1),
             row["ks"],
         )
-    finally:
-        if not n_score_bins:
-            table.unpersist()
 
 
 def auc(

@@ -34,7 +34,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.utils import bounded_pull
+from ..functions.utils import bounded_pull, persisted
 
 __all__ = [
     "fit_scaler",
@@ -112,13 +112,12 @@ def exact_percentiles(
 
     from pyspark.sql.window import Window
 
-    cnts = (
-        melted.where(F.col("__val").isNotNull())
-        .groupBy("__feat", "__val")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
-    )
-    try:
+    with persisted() as keep:
+        cnts = keep(
+            melted.where(F.col("__val").isNotNull())
+            .groupBy("__feat", "__val")
+            .agg(F.count(F.lit(1)).alias("__c"))
+        )
         # the pull's count materializes the cache with a direct action
         # FIRST: an aggregation planned ON TOP of the un-materialized
         # InMemoryRelation does not reliably populate it under AQE
@@ -190,8 +189,6 @@ def exact_percentiles(
                 )
             out[f_] = res
         return out
-    finally:
-        cnts.unpersist()
 
 
 def fit_scaler(

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.binexpr import bin_expr
-from ..functions.utils import bounded_pull
+from ..functions.utils import bounded_pull, persisted
 
 __all__ = ["rfm_segments", "pareto_curve"]
 
@@ -263,12 +263,12 @@ def rfm_segments(
     (resp. frequency/monetary ASC) — deterministic under ties via the
     key tiebreak, and exactly what the SQL oracle runs.
 
-    The per-entity table is persisted while the ranks are fitted (one
-    row per entity — bounded; it feeds the rank fit actions and the
-    final plan), then released before return: the result is eagerly
-    localCheckpoint()ed so it no longer depends on the cache, and the
-    per-entity cache is unpersisted — repeated calls in a long-lived
-    session do not accumulate cached relations (the pagerank pattern).
+    The per-entity table is persisted in a ``functions.utils.persisted``
+    scope while the ranks are fitted (one row per entity — bounded; it
+    feeds the rank fit actions and the final plan).  The result is
+    eagerly localCheckpoint()ed before the scope releases the cache, so
+    repeated calls in a long-lived session accumulate no cached
+    relations.
     """
     per = df.groupBy(F.col(key).alias("key")).agg(
         F.max(ts_col).alias("__last"),
@@ -290,65 +290,60 @@ def rfm_segments(
     per = per.drop("__last")
     # the per-entity table feeds three rank fits (each an eager
     # percentile action) plus the final plan — persist or the raw
-    # stream re-aggregates for every pass.  Keep a handle on the
-    # EXACT persisted Dataset: unpersist matches on the logical plan,
-    # so calling it on a frame later derived via withColumn/drop is a
-    # silent no-op and the cache leaks (ADVICE r5)
-    per = _cached = per.persist()
-
-    # rank monetary on whole cents: a float SUM's partial-aggregation
-    # order differs between engines (and between runs at different
-    # parallelism), and an ulp difference must not be able to swap two
-    # near-equal entities' ranks; displayed monetary stays exact
-    per = per.withColumn(
-        "__mon_q",
-        F.floor(F.col("monetary") * 100 + F.lit(0.5)).cast("long"),
-    )
-    per, total = _global_ranks(
-        per,
-        [
-            ("recency_days", True, "__rk_r"),
-            ("frequency", False, "__rk_f"),
-            ("__mon_q", False, "__rk_m"),
-        ],
-        tiebreak=["key"],
-        approx=approx,
-    )
-    per = per.drop("__mon_q")
-    per = (
-        per.withColumn("r_score", _ntile_from_rank(F.col("__rk_r"), total, n))
-        .withColumn("f_score", _ntile_from_rank(F.col("__rk_f"), total, n))
-        .withColumn("m_score", _ntile_from_rank(F.col("__rk_m"), total, n))
-        .drop("__rk_r", "__rk_f", "__rk_m")
-    )
-    hi, lo = n - 1, 2  # >= hi: strong; <= lo: weak (classic 5-tile rules)
-    seg = (
-        F.when(
-            (F.col("r_score") >= hi)
-            & (F.col("f_score") >= hi)
-            & (F.col("m_score") >= hi),
-            "champion",
+    # stream re-aggregates for every pass
+    with persisted() as keep:
+        per = keep(per)
+        # rank monetary on whole cents: a float SUM's partial-aggregation
+        # order differs between engines (and between runs at different
+        # parallelism), and an ulp difference must not be able to swap two
+        # near-equal entities' ranks; displayed monetary stays exact
+        per = per.withColumn(
+            "__mon_q",
+            F.floor(F.col("monetary") * 100 + F.lit(0.5)).cast("long"),
         )
-        .when(
-            (F.col("r_score") <= lo) & (F.col("f_score") >= hi), "at_risk"
+        per, total = _global_ranks(
+            per,
+            [
+                ("recency_days", True, "__rk_r"),
+                ("frequency", False, "__rk_f"),
+                ("__mon_q", False, "__rk_m"),
+            ],
+            tiebreak=["key"],
+            approx=approx,
         )
-        .when(
-            (F.col("r_score") <= lo) & (F.col("f_score") <= lo), "hibernating"
+        per = per.drop("__mon_q")
+        per = (
+            per.withColumn("r_score", _ntile_from_rank(F.col("__rk_r"), total, n))
+            .withColumn("f_score", _ntile_from_rank(F.col("__rk_f"), total, n))
+            .withColumn("m_score", _ntile_from_rank(F.col("__rk_m"), total, n))
+            .drop("__rk_r", "__rk_f", "__rk_m")
         )
-        .when(F.col("f_score") >= hi, "loyal")
-        .when(F.col("m_score") >= hi, "big_spender")
-        .when(F.col("r_score") >= hi, "recent")
-        .otherwise("regular")
-    )
-    out = per.select(
-        "key", "recency_days", "frequency", "monetary",
-        "r_score", "f_score", "m_score", seg.alias("segment"),
-    )
-    # eager checkpoint + unpersist: the result stops depending on the
-    # per-entity cache, which is released immediately (ADVICE r4)
-    out = out.localCheckpoint(eager=True)
-    _cached.unpersist()
-    return out
+        hi, lo = n - 1, 2  # >= hi: strong; <= lo: weak (classic 5-tile rules)
+        seg = (
+            F.when(
+                (F.col("r_score") >= hi)
+                & (F.col("f_score") >= hi)
+                & (F.col("m_score") >= hi),
+                "champion",
+            )
+            .when(
+                (F.col("r_score") <= lo) & (F.col("f_score") >= hi), "at_risk"
+            )
+            .when(
+                (F.col("r_score") <= lo) & (F.col("f_score") <= lo), "hibernating"
+            )
+            .when(F.col("f_score") >= hi, "loyal")
+            .when(F.col("m_score") >= hi, "big_spender")
+            .when(F.col("r_score") >= hi, "recent")
+            .otherwise("regular")
+        )
+        out = per.select(
+            "key", "recency_days", "frequency", "monetary",
+            "r_score", "f_score", "m_score", seg.alias("segment"),
+        )
+        # eager checkpoint: the result stops depending on the
+        # per-entity cache, which the scope then releases
+        return out.localCheckpoint(eager=True)
 
 
 def pareto_curve(
@@ -365,40 +360,40 @@ def pareto_curve(
     As in ``rfm_segments``, the result is eagerly localCheckpoint()ed
     and the per-entity cache released before return.
     """
-    # feeds the rank fit action + the final plan twice; keep the exact
-    # persisted Dataset for release (see rfm_segments / ADVICE r5)
-    per = _cached = df.groupBy(F.col(key).alias("key")).agg(
-        F.sum(amount_col).alias("amount")
-    ).persist()
-    # rank on whole cents (see rfm_segments) so engine-order float
-    # summation cannot reorder near-equal entities
-    per = per.withColumn(
-        "__amt_q", F.floor(F.col("amount") * 100 + F.lit(0.5)).cast("long")
-    )
-    per, total = _global_rank(
-        per,
-        "__amt_q",
-        ["key"],
-        descending=True,
-        n_buckets=n_buckets,
-        sum_col="amount",
-        rank_name="rank",
-        cum_name="__cum",
-        approx=approx,
-    )
-    per = per.drop("__amt_q")
-    grand = per.agg(F.sum("amount").alias("__g"))
-    out = (
-        per.crossJoin(F.broadcast(grand))
-        .select(
-            "key",
-            "amount",
-            F.col("rank").cast("long").alias("rank"),
-            (F.col("__cum") / F.col("__g")).alias("cum_share"),
-            (F.col("rank") / F.lit(float(total))).alias("frac_keys"),
+    # the per-entity table feeds the rank fit action + the final plan
+    # twice; as in rfm_segments it is released before return
+    with persisted() as keep:
+        per = keep(
+            df.groupBy(F.col(key).alias("key")).agg(
+                F.sum(amount_col).alias("amount")
+            )
         )
-    )
-    # see rfm_segments: release the per-entity cache before return
-    out = out.localCheckpoint(eager=True)
-    _cached.unpersist()
-    return out
+        # rank on whole cents (see rfm_segments) so engine-order float
+        # summation cannot reorder near-equal entities
+        per = per.withColumn(
+            "__amt_q", F.floor(F.col("amount") * 100 + F.lit(0.5)).cast("long")
+        )
+        per, total = _global_rank(
+            per,
+            "__amt_q",
+            ["key"],
+            descending=True,
+            n_buckets=n_buckets,
+            sum_col="amount",
+            rank_name="rank",
+            cum_name="__cum",
+            approx=approx,
+        )
+        per = per.drop("__amt_q")
+        grand = per.agg(F.sum("amount").alias("__g"))
+        out = (
+            per.crossJoin(F.broadcast(grand))
+            .select(
+                "key",
+                "amount",
+                F.col("rank").cast("long").alias("rank"),
+                (F.col("__cum") / F.col("__g")).alias("cum_share"),
+                (F.col("rank") / F.lit(float(total))).alias("frac_keys"),
+            )
+        )
+        return out.localCheckpoint(eager=True)

@@ -11,29 +11,25 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.utils import persisted
 from .metrics import iv_all
 
 
 class Selector:
     """Chainable: Selector(df, 'target').drop_missing().drop_low_iv()
-    .drop_correlated() — selector.py:60-192."""
+    .drop_correlated() — selector.py:60-192.
+
+    Used as a context manager (``with Selector(df, 'y') as sel:``) it
+    persists the input frame on entry, so the chain's stages — missing
+    scan, melted IV aggregation, correlation pass — read the columnar
+    cache instead of re-scanning the source N times, and releases it on
+    exit.  At 100 TB the cached frame is the NARROW feature projection
+    (select your feature columns before constructing the Selector),
+    stored MEMORY_AND_DISK so it spills rather than evicts.  Used
+    without ``with`` it caches nothing."""
 
     def __init__(self, df: DataFrame, label: str | None = None,
-                 categorical_cols: list[str] | None = None,
-                 cache: bool = False):
-        """``cache=True`` persists the (already column-pruned) input
-        frame once so the chain's stages — missing scan, melted IV
-        aggregation, correlation pass — read the columnar cache instead
-        of re-scanning the source N times. At 100 TB the cached frame
-        is the NARROW feature projection (select your feature columns
-        before constructing the Selector), stored MEMORY_AND_DISK so it
-        spills rather than evicts; call :meth:`unpersist` (or rely on
-        context exit) when the chain is done."""
-        if cache:
-            from pyspark import StorageLevel
-
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._cached = df if cache else None
+                 categorical_cols: list[str] | None = None):
         self.df = df
         self.label = label
         self.categorical_cols = categorical_cols or []
@@ -214,18 +210,16 @@ class Selector:
         ]
         return bounded_sample_pandas(self.df.select(*cols), sample_limit)
 
-    def unpersist(self) -> "Selector":
-        """Release the cache taken by ``cache=True`` (no-op otherwise)."""
-        if self._cached is not None:
-            self._cached.unpersist()
-            self._cached = None
-        return self
-
     def __enter__(self) -> "Selector":
+        from pyspark import StorageLevel
+
+        self._scope = persisted()
+        keep = self._scope.__enter__()
+        self.df = keep(self.df, StorageLevel.MEMORY_AND_DISK)
         return self
 
     def __exit__(self, *exc) -> None:
-        self.unpersist()
+        self._scope.__exit__(*exc)
 
     def _drop(self, cols: list[str]) -> None:
         if cols:

@@ -271,14 +271,15 @@ def fingerprint_overlap(
     docs — are dropped MAP-SIDE via a broadcast anti-join of the
     (small) hot-fp set before the self-join can co-locate them, so no
     task ever materializes a boilerplate posting list."""
-    # the fingerprint table feeds FOUR consumers (hot-fp aggregate,
-    # anti-join probe, both self-join sides) and Spark does not reuse
-    # common subplans — cache it once (it is 1/w the corpus token
-    # count: the winnowing paper's own storage bound) so the hash +
-    # window-min chain runs once, not four times; the count() makes the
-    # cache eager before the consumers race to populate it
-    fps = winnow_fingerprints(df, text_col, id_col, k, w, hash_fn).cache()
-    fps.count()
+    # the fingerprint table feeds FOUR consumers of the returned plan
+    # (hot-fp aggregate, anti-join probe, both self-join sides) and
+    # Spark does not reuse common subplans — store it once as an eager
+    # local checkpoint (it is 1/w the corpus token count: the winnowing
+    # paper's own storage bound) so the hash + window-min chain runs
+    # once, not four times
+    fps = winnow_fingerprints(df, text_col, id_col, k, w, hash_fn).localCheckpoint(
+        eager=True
+    )
     hot = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__n"))

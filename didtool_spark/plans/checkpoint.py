@@ -174,11 +174,17 @@ class CheckpointedRun:
         return self.spark.read.parquet(staged)
 
     def read_result(self) -> DataFrame:
+        """Every completed bucket as one DataFrame; raises when they were
+        written under different input fingerprints (new + stale mix)."""
         done = sorted(self.completed_buckets())
         if not done:
             raise ValueError(
                 f"no completed buckets under {self.out_dir} — nothing to read"
             )
+        fps = {m.get("input_fingerprint", "") for m in self.manifest()}
+        if len(fps) > 1:
+            raise ValueError(f"{self.out_dir} mixes input fingerprints "
+                             f"{sorted(fps)}; re-run to completion first")
         return self.spark.read.parquet(
             *[os.path.join(self.out_dir, f"bucket={b}") for b in done]
         )

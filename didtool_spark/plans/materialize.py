@@ -14,6 +14,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.utils import persisted
 from ..operators.temporal import (
     _bucketed_scan,
     _ffill_step,
@@ -199,31 +200,27 @@ def run_throughput(
             with open(meta_path, "w") as fh:
                 _json.dump(want, fh)
         tr = spark.read.parquet(stage_path)
-        n_turns = tr.count()
-    else:
-        tr = tr.persist()
+    with persisted() as keep:
+        if not stage_path:
+            tr = keep(tr)
         n_turns = tr.count()  # force generation before the timed section
-
-    feats = materialize_features(tr, gap_seconds=gap_seconds)
-    for _ in range(warm_passes):  # hot-JIT/steady-state measurement
-        feats.write.format("noop").mode("overwrite").save()
-    dt = None
-    for _ in range(max(1, timed_passes)):  # best-of-k vs scheduler noise
-        t0 = time.time()
-        if out_path:
-            feats.write.mode("overwrite").parquet(out_path)
-        else:
-            # noop sink computes every column (count() would let Catalyst
-            # prune the window expressions and fake the throughput)
+        feats = materialize_features(tr, gap_seconds=gap_seconds)
+        for _ in range(warm_passes):  # hot-JIT/steady-state measurement
             feats.write.format("noop").mode("overwrite").save()
-        d = time.time() - t0
-        dt = d if dt is None else min(dt, d)
-    n_out = n_turns
-    if not stage_path:
-        tr.unpersist()
+        dt = None
+        for _ in range(max(1, timed_passes)):  # best-of-k vs scheduler noise
+            t0 = time.time()
+            if out_path:
+                feats.write.mode("overwrite").parquet(out_path)
+            else:
+                # noop sink computes every column (count() would let
+                # Catalyst prune the windows and fake the throughput)
+                feats.write.format("noop").mode("overwrite").save()
+            d = time.time() - t0
+            dt = d if dt is None else min(dt, d)
     return {
         "n_turns": n_turns,
-        "n_out": n_out,
+        "n_out": n_turns,
         "sec": dt,
         "turns_per_sec": n_turns / dt if dt > 0 else float("inf"),
     }

@@ -422,10 +422,10 @@ def q_selector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.pmod(F.col("event_id"), 5) == 0, F.lit(None).cast("double"))
          .otherwise(F.pmod(F.col("user_id"), 100).cast("double")).alias("v3"),
     )
-    # cache=True: the three stats passes (missing / melted IV / corr)
-    # read the narrow 4-column projection from the columnar cache
-    # instead of re-scanning the parquet source three times
-    with Selector(df, "y", cache=True) as sel:
+    # inside the with block the three stats passes (missing / melted
+    # IV / corr) read the narrow 4-column projection from the columnar
+    # cache instead of re-scanning the parquet source three times
+    with Selector(df, "y") as sel:
         sel.drop_missing(0.9).drop_low_iv(
             0.0, cut_method="step"
         ).drop_correlated(0.9)

@@ -85,8 +85,9 @@ sel_df = features.select(
     F.when(F.pmod("event_id", 5) == 0, None)
      .otherwise(F.pmod("user_id", 100).cast("double")).alias("v3"),
 )
-# cache=True: the chain's three stats passes share one columnar cache
-with dt.Selector(sel_df, "label", cache=True) as sel:
+# inside the with block the chain's three stats passes share one
+# columnar cache, released on exit
+with dt.Selector(sel_df, "label") as sel:
     sel.drop_missing(0.9).drop_low_iv(0.0, cut_method="step") \
        .drop_correlated(0.9)
     sel.plot_missing(out_path=out)

@@ -4,6 +4,10 @@ oracle (row count, sorted-column schema, order-insensitive values).
 
 Usage: python scripts/check_oracle.py [--bitexact] [sf_dir] [query ...]
 
+Every query must also leave Spark's CacheManager empty: a query that
+leaves a cached Dataset behind is printed as a LEAK line (the cache is
+then cleared so the next query is judged on its own) and fails the run.
+
 --bitexact replays the driver's hash semantics (sort columns by name,
 round floats to 6, serialize, sort rows, compare serialized CSV) so
 sign-of-zero and other serialization-level divergences that are
@@ -103,11 +107,17 @@ def main() -> int:
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    cache = spark._jsparkSession.sharedState().cacheManager()
     failures = 0
+    leaks: list[str] = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         got = fn(spark, sf_dir).toPandas()
+        if not cache.isEmpty():
+            leaks.append(name)
+            print(f"{name:28s} LEAK: leaves a CacheManager entry")
+            spark.catalog.clearCache()
         if name not in oracles:
             print(f"{name:28s} rows={len(got)} (rows-only check, no oracle)")
             continue
@@ -143,7 +153,9 @@ def main() -> int:
                 print(f"   spark cols: {list(g.columns)}\n   duck  cols: {list(e.columns)}")
         else:
             print(f"{name:28s} {status} rows={len(g)}")
-    return 1 if failures else 0
+    print(f"{len(leaks)} queries leave a cache behind"
+          + (f": {', '.join(leaks)}" if leaks else ""))
+    return 1 if failures or leaks else 0
 
 
 if __name__ == "__main__":

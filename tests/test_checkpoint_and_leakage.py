@@ -102,6 +102,29 @@ def test_checkpoint_rerun_on_changed_fingerprint(spark, tr, tmp_path_factory):
     assert again["buckets_run"] == 0 and again["buckets_skipped"] == 4
 
 
+def test_read_result_refuses_mixed_fingerprints(spark, tr, tmp_path_factory):
+    """A re-run on changed input that fails part way leaves new and
+    stale buckets side by side; read_result() must refuse to mix them."""
+    out = str(tmp_path_factory.mktemp("ckpt_mixed"))
+    CheckpointedRun(spark, out, n_buckets=4).run(
+        tr, materialize_features, input_fingerprint="fp-1"
+    )
+    calls = []
+
+    def crash_on_third(part):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("bucket 2 failed")
+        return materialize_features(part)
+
+    run = CheckpointedRun(spark, out, n_buckets=4)
+    with pytest.raises(RuntimeError, match="bucket 2 failed"):
+        run.run(tr, crash_on_third, input_fingerprint="fp-2")
+    assert {m["input_fingerprint"] for m in run.manifest()} == {"fp-1", "fp-2"}
+    with pytest.raises(ValueError, match="fingerprints"):
+        run.read_result()
+
+
 def test_zero_temporal_leakage(spark, tr):
     """Perturb every row's text/role/tool/ts in the FUTURE of an anchor
     cut; features at-or-before the cut must be bit-identical."""

@@ -111,12 +111,24 @@ def test_min_count_pruning_backs_off(spark):
     assert np.isclose(r0["avg_nll"], -lp / len(toks), atol=1e-9)
 
 
-def test_shuffle_join_strategy_matches_broadcast(spark):
+def test_shuffle_join_strategy_matches_broadcast(spark, monkeypatch):
+    from didtool_spark.operators import lm as lm_mod
+
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CORPUS)], "doc_id int, text string"
     )
-    a = lm_perplexity(df, k=K, lam=LAM, broadcast=True).orderBy("doc_id").collect()
-    b = lm_perplexity(df, k=K, lam=LAM, broadcast=False).orderBy("doc_id").collect()
+    a_df = lm_perplexity(df, k=K, lam=LAM)
+    # an LM over the broadcast bound takes the shuffle-join form
+    monkeypatch.setattr(lm_mod, "_BROADCAST_ROWS", 0)
+    b_df = lm_perplexity(df, k=K, lam=LAM)
+    hinted = [
+        "strategy=broadcast" in d._jdf.queryExecution().analyzed().toString()
+        for d in (a_df, b_df)
+    ]
+    assert hinted == [True, False]
+    a = a_df.orderBy("doc_id").collect()
+    b = b_df.orderBy("doc_id").collect()
+    assert len(a) == len(b) == len(CORPUS)
     for ra, rb in zip(a, b):
         assert ra["doc_id"] == rb["doc_id"]
         assert np.isclose(ra["avg_nll"], rb["avg_nll"], atol=1e-12)
