@@ -13,12 +13,15 @@ Methods and exact semantics (reference file:line):
 NaN/NULL -> bin -1 in every method (cut.py:60-61 etc.); supervised fits
 use non-null x only (cut.py:146-147, 197, 275-276).
 
-Scale notes: dt/lgb/chi aggregate ``groupBy(x)`` first — the driver only
-ever sees distinct values. ``MAX_DISTINCT`` caps that (always on,
-default 100k): collects go through ``limit(cap+1)`` so the driver never
-materializes more, and beyond the cap the fit quantizes x to
-``PRE_BINS`` percentile micro-bins (documented approximation; exact
-below the cap, so all small-scale parity goldens are unaffected).
+Scale notes: every fit collects a grouped state table through one
+capped pull, ``collect_capped``: ``limit(MAX_DISTINCT + 1)`` so the
+driver never materializes more than the cap, exact below it. Above it
+the fit falls back once, through the helpers below it: continuous fits
+re-aggregate over ``PRE_BINS`` percentile micro-bins
+(``micro_bin_rows``), categorical fits keep the top-k values by
+frequency (``top_k_rows``). The caps are module constants read at call
+time, so patching them here reaches every fit in woe, category and
+metrics as well.
 """
 
 from __future__ import annotations
@@ -34,12 +37,15 @@ from ..functions.driver_fit import cart_thresholds, chimerge_edges, lgb_threshol
 
 DEFAULT_BINS = 10
 
-# Driver-collect cap: a fit never materializes more than MAX_DISTINCT
-# grouped rows on the driver. Above it, continuous fits pre-quantize to
-# PRE_BINS percentile micro-bins (the documented approximation for
-# continuous doubles at cluster scale — distinct ~= rows there).
+# Driver cap of every capped fit: grouped rows a fit may hold on the
+# driver. Above it continuous fits quantize to PRE_BINS percentile
+# micro-bins (distinct ~= rows for continuous doubles at cluster scale)
+# and categorical fits keep the top-k values by frequency.
+# APPROX_ACCURACY is the percentile_approx accuracy of
+# quantile_edges(exact=False).
 MAX_DISTINCT = 100_000
 PRE_BINS = 10_000
+APPROX_ACCURACY = 10_000
 
 
 def _clean(df: DataFrame, col: str) -> Column:
@@ -48,33 +54,39 @@ def _clean(df: DataFrame, col: str) -> Column:
     return F.when(F.isnan(c), F.lit(None)).otherwise(c)
 
 
-def collect_capped(agg_df: DataFrame, max_distinct: int | None) -> list | None:
-    """collect() through ``limit(cap + 1)`` so the driver never
-    materializes more than the cap; returns None when the cap is
-    exceeded (the caller falls back to a quantized/top-k plan). The
-    limit also lets Spark stop the final stage early — the common
-    small-vocabulary case costs exactly the one aggregation it always
-    did. Only ``None`` means uncapped; a zero/negative cap is a caller
-    bug, not an implicit "collect everything".  (Multi-million-row
-    pulls use ``functions.utils.bounded_pull``'s count gate instead; at
-    this cap a count would run the groupBy twice.)"""
-    if max_distinct is None:
-        return agg_df.collect()
-    if max_distinct <= 0:
-        raise ValueError(f"max_distinct must be positive or None, got {max_distinct}")
-    rows = agg_df.limit(max_distinct + 1).collect()
-    return None if len(rows) > max_distinct else rows
+def class_counts() -> list[Column]:
+    """Per-group (count y=0, count y=1) over the 0/1 label ``__y``."""
+    return [
+        F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
+        F.sum("__y").alias("c1"),
+    ]
 
 
-def micro_bin_expr(df: DataFrame, xc: Column, pre_bins: int = PRE_BINS) -> Column:
-    """Exact-percentile micro-bin id for ``xc`` — the pre-quantization
-    pass used when distinct(x) exceeds the driver cap. One
+def collect_capped(agg_df: DataFrame, cap: int | None = None) -> list | None:
+    """The capped fit pull: collect() through ``limit(cap + 1)`` so the
+    driver never materializes more than the cap; None when the cap is
+    exceeded (the caller falls back to ``micro_bin_rows`` or
+    ``top_k_rows``). The limit also lets Spark stop the final stage
+    early, so a small vocabulary costs exactly its one aggregation.
+    ``cap`` defaults to ``MAX_DISTINCT``, read at call time; bpe passes
+    its own word cap. (Multi-million-row pulls use
+    ``functions.utils.bounded_pull``'s count gate instead; at this cap
+    a count would run the groupBy twice.)"""
+    cap = MAX_DISTINCT if cap is None else cap
+    if cap <= 0:
+        raise ValueError(f"driver cap must be positive, got {cap}")
+    rows = agg_df.limit(cap + 1).collect()
+    return None if len(rows) > cap else rows
+
+
+def micro_bin_expr(df: DataFrame, xc: Column) -> Column:
+    """Percentile micro-bin id of ``xc`` over ``PRE_BINS`` bins: one
     percentile_approx aggregation (accuracy scaled to the bin count so
     adjacent micro-bins are actually distinguishable), then the shared
     right-closed bin expression."""
-    qs = [i / pre_bins for i in range(1, pre_bins)]
+    qs = [i / PRE_BINS for i in range(1, PRE_BINS)]
     ps = df.select(
-        F.percentile_approx(xc, qs, max(10_000, pre_bins * 10)).alias("p")
+        F.percentile_approx(xc, qs, max(10_000, PRE_BINS * 10)).alias("p")
     ).first()["p"]
     edges: list[float] = []
     for p in ps or []:
@@ -83,39 +95,41 @@ def micro_bin_expr(df: DataFrame, xc: Column, pre_bins: int = PRE_BINS) -> Colum
     return bin_expr(xc, [-math.inf, *edges, math.inf])
 
 
+def micro_bin_rows(base: DataFrame, x: str, *aggs: Column) -> list:
+    """Over-cap fallback of a continuous fit: the rows of ``base`` with
+    a non-null ``x``, grouped by micro-bin of ``x``; each bin carries
+    its max ``x`` as representative (thresholds fitted between
+    representatives separate the same rows as thresholds between
+    micro-bins) and ``aggs``."""
+    nn = base.where(F.col(x).isNotNull())
+    return (
+        nn.select(micro_bin_expr(nn, F.col(x)).alias("__b"), *nn.columns)
+        .groupBy("__b")
+        .agg(F.max(x).alias(x), *aggs)
+        .collect()
+    )
+
+
+def top_k_rows(grouped: DataFrame, k: int, weight: Column, tie: Column) -> list:
+    """Over-cap fallback of a categorical fit: the ``k`` grouped rows of
+    largest ``weight``, ties broken on ``tie`` ascending (TakeOrdered —
+    scale-safe). The caller drops its NULL group first if it has one."""
+    return grouped.orderBy(weight.desc(), tie.asc()).limit(k).collect()
+
+
 def _value_class_counts(
-    df: DataFrame,
-    col: str,
-    target: str,
-    max_distinct: int | None = MAX_DISTINCT,
-    pre_bins: int = PRE_BINS,
+    df: DataFrame, col: str, target: str
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """groupBy(x) -> (distinct values, count(y=0), count(y=1)); the one
-    distributed pass behind every supervised fit. Above ``max_distinct``
-    distinct values the fit re-aggregates over ``pre_bins`` percentile
-    micro-bins (representative = max x in the bin, so thresholds fitted
-    between representatives separate exactly the same rows as
-    thresholds between micro-bins)."""
+    distributed pass behind every supervised fit, micro-binned above the
+    driver cap."""
     base = (
         df.select(_clean(df, col).alias("__x"), F.col(target).cast("double").alias("__y"))
         .where(F.col("__x").isNotNull())
     )
-    agg = base.groupBy("__x").agg(
-        F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
-        F.sum("__y").alias("c1"),
-    )
-    rows = collect_capped(agg, max_distinct)
+    rows = collect_capped(base.groupBy("__x").agg(*class_counts()))
     if rows is None:
-        rows = (
-            base.select(micro_bin_expr(base, F.col("__x"), pre_bins).alias("__b"), "__x", "__y")
-            .groupBy("__b")
-            .agg(
-                F.max("__x").alias("__x"),
-                F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
-                F.sum("__y").alias("c1"),
-            )
-            .collect()
-        )
+        rows = micro_bin_rows(base, "__x", *class_counts())
     rows.sort(key=lambda r: r["__x"])
     v = np.array([r["__x"] for r in rows], dtype=float)
     c0 = np.array([r["c0"] for r in rows], dtype=float)
@@ -152,9 +166,7 @@ def step_edges(
 
 
 def quantile_edges(
-    df: DataFrame, col: str, n_bins: int = DEFAULT_BINS, exact: bool = True,
-    approx_accuracy: int = 10000, max_distinct: int | None = MAX_DISTINCT,
-    pre_bins: int = PRE_BINS,
+    df: DataFrame, col: str, n_bins: int = DEFAULT_BINS, exact: bool = True
 ) -> list[float]:
     """Equal-frequency edges, pd.qcut-compatible (linear interpolation,
     duplicate edges dropped, cut.py:94-95), outer edges ±inf.
@@ -172,7 +184,7 @@ def quantile_edges(
             df.select(_clean(df, col).alias("__xq"))
             .select(
                 F.expr(
-                    f"percentile_approx(__xq, array({arr}), {approx_accuracy})"
+                    f"percentile_approx(__xq, array({arr}), {APPROX_ACCURACY})"
                 ).alias("p")
             )
             .first()
@@ -190,17 +202,10 @@ def quantile_edges(
         df.select(_clean(df, col).alias("__xq"))
         .where(F.col("__xq").isNotNull())
     )
-    rows = collect_capped(base.groupBy("__xq").count(), max_distinct)
+    rows = collect_capped(base.groupBy("__xq").count())
     if rows is None:
-        # above the driver cap: weighted interpolation over percentile
-        # micro-bins (representative = bin max) — the documented
-        # approximation for continuous doubles at cluster scale
-        rows = (
-            base.select(micro_bin_expr(base, F.col("__xq"), pre_bins).alias("__b"), "__xq")
-            .groupBy("__b")
-            .agg(F.max("__xq").alias("__xq"), F.count(F.lit(1)).alias("count"))
-            .collect()
-        )
+        # weighted interpolation over the micro-bin representatives
+        rows = micro_bin_rows(base, "__xq", F.count(F.lit(1)).alias("count"))
     if not rows:
         return [-math.inf, math.inf]
     rows.sort(key=lambda r: r["__xq"])
@@ -214,10 +219,9 @@ def quantile_edges(
 
 def dt_edges(
     df: DataFrame, col: str, target: str, n_bins: int = DEFAULT_BINS,
-    min_bin: float = 0.01, max_distinct: int | None = MAX_DISTINCT,
-    pre_bins: int = PRE_BINS,
+    min_bin: float = 0.01,
 ) -> list[float]:
-    v, c0, c1 = _value_class_counts(df, col, target, max_distinct, pre_bins)
+    v, c0, c1 = _value_class_counts(df, col, target)
     if len(v) == 0:
         return [-math.inf, math.inf]
     n = int((c0 + c1).sum())
@@ -228,13 +232,12 @@ def dt_edges(
 
 def lgb_edges(
     df: DataFrame, col: str, target: str, n_bins: int = DEFAULT_BINS,
-    min_bin: float = 0.01, max_distinct: int | None = MAX_DISTINCT,
-    pre_bins: int = PRE_BINS,
+    min_bin: float = 0.01,
 ) -> list[float]:
     # reference computes min_child_samples from len(x) INCLUDING NaN
     # (cut.py:198), then fits on non-null values (cut.py:206)
     n_total = df.count()
-    v, c0, c1 = _value_class_counts(df, col, target, max_distinct, pre_bins)
+    v, c0, c1 = _value_class_counts(df, col, target)
     if len(v) == 0:
         return [-math.inf, math.inf]
     mcs = max(1, math.ceil(min_bin * n_total))
@@ -243,10 +246,9 @@ def lgb_edges(
 
 
 def chi_edges(
-    df: DataFrame, col: str, target: str, n_bins: int = DEFAULT_BINS, cf: float = 0.1,
-    max_distinct: int | None = MAX_DISTINCT, pre_bins: int = PRE_BINS,
+    df: DataFrame, col: str, target: str, n_bins: int = DEFAULT_BINS, cf: float = 0.1
 ) -> list[float]:
-    v, c0, c1 = _value_class_counts(df, col, target, max_distinct, pre_bins)
+    v, c0, c1 = _value_class_counts(df, col, target)
     if len(v) == 0:
         return [-math.inf, math.inf]
     edges = chimerge_edges(v, c0, c1, n_bins=n_bins, cf=cf)

@@ -20,30 +20,31 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.exprs import MAP_EXPR_MAX, is_missing as _is_missing, map_expr, with_lookup
-from .binning import MAX_DISTINCT, collect_capped
+from . import binning
+from .binning import collect_capped, top_k_rows
 
 NAN_KEY = "nan"
 
 
 def _fit_value_counts(
-    df: DataFrame, col: str, top_k: int | None = None,
-    max_distinct: int = MAX_DISTINCT,
-) -> tuple[list, int, int]:
-    """-> (values desc by count, total rows, has_nan). Driver-collect is
-    capped at ``max_distinct`` grouped rows; above the cap only the top
-    ``top_k`` values by frequency are collected (TakeOrdered — scale-
-    safe) plus one tiny exact aggregation for total/has_nan. Callers
-    that keep every value (no max_bins/min_coverage) get a clear error
-    instead of a silent truncation."""
+    df: DataFrame, col: str, top_k: int | None = None
+) -> tuple[list, int, bool, bool]:
+    """-> (values desc by count, total rows, has_nan, capped), through
+    the capped fit pull. Above the driver cap (binning.MAX_DISTINCT)
+    only the top ``min(top_k, cap)`` values by frequency are collected
+    (``binning.top_k_rows``, ties on the value as a string) plus one
+    tiny exact aggregation for total/has_nan. Callers that keep every
+    value (``top_k`` None) get a clear error instead of a silent
+    truncation."""
     c = F.col(col)
     key = F.when(_is_missing(c), F.lit(None)).otherwise(c).alias("__v")
     grouped = df.groupBy(key).count()
-    rows = collect_capped(grouped, max_distinct)
+    rows = collect_capped(grouped)
     if rows is None:
-        k = min(top_k or 0, max_distinct)
-        if not k:
+        if not top_k:
             raise ValueError(
-                f"fit on `{col}`: more than {max_distinct} distinct values and no "
+                f"fit on `{col}`: more than binning.MAX_DISTINCT "
+                f"({binning.MAX_DISTINCT}) distinct values and no "
                 "max_bins/min_coverage bound — set max_bins to make the encoder "
                 "state driver-sized"
             )
@@ -51,9 +52,12 @@ def _fit_value_counts(
             F.count(F.lit(1)).alias("n"),
             F.max(_is_missing(c).cast("int")).alias("has_nan"),
         ).first()
-        rows = grouped.where(F.col("__v").isNotNull()).orderBy(
-            F.desc("count"), F.asc(F.col("__v").cast("string"))
-        ).limit(k).collect()
+        rows = top_k_rows(
+            grouped.where(F.col("__v").isNotNull()),
+            min(top_k, binning.MAX_DISTINCT),
+            F.col("count"),
+            F.col("__v").cast("string"),
+        )
         return (
             [(r["__v"], r["count"]) for r in rows],
             int(tot["n"]),
@@ -91,10 +95,10 @@ def _select_n_bins(vals, total, max_bins, min_coverage, capped=False) -> int:
 
 
 def _fit_top_k(max_bins, min_coverage) -> int | None:
-    """top_k bound passed into _fit_value_counts when the collect is
-    capped: max_bins when given, else the cap itself for the coverage
-    prefix (verified reachable in _select_n_bins)."""
-    return max_bins or (MAX_DISTINCT if min_coverage else None)
+    """top_k bound passed into _fit_value_counts: max_bins when given,
+    else the driver cap itself for a coverage prefix (whose overflow
+    _select_n_bins reports), else None — keep every value."""
+    return max_bins or (binning.MAX_DISTINCT if min_coverage else None)
 
 
 class CategoryTransformer:
@@ -105,11 +109,10 @@ class CategoryTransformer:
         self.map_encoder: dict[str, dict] = {}
 
     def fit(self, df: DataFrame, cols: list[str], max_bins: int | None = None,
-            min_coverage: float | None = None, max_distinct: int = MAX_DISTINCT):
+            min_coverage: float | None = None):
         for col in cols:
             vals, total, has_nan, capped = _fit_value_counts(
-                df, col, top_k=_fit_top_k(max_bins, min_coverage),
-                max_distinct=max_distinct,
+                df, col, top_k=_fit_top_k(max_bins, min_coverage)
             )
             n_bins = _select_n_bins(vals, total, max_bins, min_coverage, capped)
             enc = {v: i + 1 for i, (v, _) in enumerate(vals[:n_bins])}
@@ -179,11 +182,10 @@ class OneHotTransformer:
         self.map_encoder: dict[str, list] = {}
 
     def fit(self, df: DataFrame, cols: list[str], max_bins: int | None = None,
-            min_coverage: float | None = None, max_distinct: int = MAX_DISTINCT):
+            min_coverage: float | None = None):
         for col in cols:
             vals, total, has_nan, capped = _fit_value_counts(
-                df, col, top_k=_fit_top_k(max_bins, min_coverage),
-                max_distinct=max_distinct,
+                df, col, top_k=_fit_top_k(max_bins, min_coverage)
             )
             n_bins = _select_n_bins(vals, total, max_bins, min_coverage, capped)
             col_vals = [v for v, _ in vals[:n_bins]] + ["others"]
@@ -238,8 +240,7 @@ class ListTransformer:
         self.sub_sep = sub_sep
         self.map_encoder: dict[str, list[str]] = {}
 
-    def fit(self, df: DataFrame, cols: list[str], max_bins: int | None = None,
-            max_distinct: int = MAX_DISTINCT):
+    def fit(self, df: DataFrame, cols: list[str], max_bins: int | None = None):
         for col in cols:
             c = F.col(col)
             tokens = F.split(c, self.sep)
@@ -253,17 +254,15 @@ class ListTransformer:
                 .groupBy("__t")
                 .count()
             )
-            counts = collect_capped(grouped, max_distinct)
+            counts = collect_capped(grouped)
             if counts is None:
                 if not max_bins:
                     raise ValueError(
                         f"ListTransformer.fit on `{col}`: token vocabulary exceeds "
-                        f"{max_distinct} — set max_bins to bound the fit state"
+                        f"binning.MAX_DISTINCT ({binning.MAX_DISTINCT}) — set "
+                        "max_bins to bound the fit state"
                     )
-                counts = (
-                    grouped.orderBy(F.desc("count"), F.asc("__t"))
-                    .limit(max_bins).collect()
-                )
+                counts = top_k_rows(grouped, max_bins, F.col("count"), F.col("__t"))
             pairs = sorted(counts, key=lambda r: (-r["count"], r["__t"]))
             if max_bins:
                 pairs = pairs[:max_bins]

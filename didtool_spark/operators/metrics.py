@@ -17,8 +17,8 @@ from pyspark.sql.window import Window
 from ..functions.binexpr import bin_expr
 from ..functions.exprs import is_missing
 from ..functions.utils import persisted
-from .binning import MAX_DISTINCT, Binner, collect_capped, step_edges
-from .woe import _floors, woe_value
+from .binning import Binner, class_counts, collect_capped, step_edges
+from .woe import _floors, _over_cap_totals, woe_value
 
 DEFAULT_BINS = 10
 
@@ -40,27 +40,19 @@ def handle_categorical_expr(col: str | Column, dtype: str = "double") -> Column:
 
 # -------------------------------------------------------------------- IV
 
-def _iv_discrete(
-    df: DataFrame, col: Column, target: str, max_distinct: int = MAX_DISTINCT
-) -> float:
+def _iv_discrete(df: DataFrame, col: Column, target: str) -> float:
     """metric.py:66-83: sum (p1-p0)*woe over distinct values, 0.5 floors.
 
-    Driver math below ``max_distinct`` distinct values (bit-exact with
-    the reference); above it the same formula runs as a fully
-    distributed expression sum — no unbounded collect."""
+    Driver math below the driver cap (bit-exact with the reference);
+    above it the same formula runs as a fully distributed expression
+    sum — no unbounded collect."""
     base = df.select(
         col.alias("__x"), F.col(target).cast("double").alias("__y")
     )
-    agg = base.groupBy("__x").agg(
-        F.sum(F.lit(1.0) - F.col("__y")).alias("c0"), F.sum("__y").alias("c1")
-    )
-    rows = collect_capped(agg, max_distinct)
+    agg = base.groupBy("__x").agg(*class_counts())
+    rows = collect_capped(agg)
     if rows is None:
-        tot = base.agg(
-            F.sum(F.lit(1.0) - F.col("__y")).alias("t0"),
-            F.sum("__y").alias("t1"),
-        ).first()
-        t0, t1 = max(float(tot["t0"] or 0), 0.5), max(float(tot["t1"] or 0), 0.5)
+        t0, t1 = (max(t, 0.5) for t in _over_cap_totals(base)[:2])
         p1 = F.greatest(F.col("c1"), F.lit(0.5)) / F.lit(t1)
         p0 = F.greatest(F.col("c0"), F.lit(0.5)) / F.lit(t0)
         out = agg.select(F.sum((p1 - p0) * F.log(p1 / p0)).alias("iv")).first()
@@ -148,7 +140,6 @@ def iv_all(
     features: list[str],
     target: str,
     categorical_cols: list[str] | None = None,
-    max_distinct: int = MAX_DISTINCT,
     **kwargs,
 ) -> pd.DataFrame:
     """stats.py:32-67: per-feature IV, sorted desc.
@@ -188,12 +179,9 @@ def iv_all(
     agg = (
         df.select(F.explode(F.array(*structs)).alias("p"), y.alias("__y"))
         .groupBy("p.f", "p.xd", "p.xs", "p.xr")
-        .agg(
-            F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
-            F.sum("__y").alias("c1"),
-        )
+        .agg(*class_counts())
     )
-    rows = collect_capped(agg, max_distinct)
+    rows = collect_capped(agg)
     if rows is None:
         return _iv_all_per_feature(df, features, target, cat, **kwargs)
 
@@ -311,13 +299,13 @@ def psi(
         ca = handle_categorical_expr(col, dict(actual.dtypes).get(col, "double"))
         e_g = expected.select(ce.alias("__x")).groupBy("__x").count()
         a_g = actual.select(ca.alias("__x")).groupBy("__x").count()
-        e_rows = collect_capped(e_g, MAX_DISTINCT)
-        a_rows = collect_capped(a_g, MAX_DISTINCT) if e_rows is not None else None
+        e_rows = collect_capped(e_g)
+        a_rows = collect_capped(a_g) if e_rows is not None else None
         if e_rows is None or a_rows is None:
             if detail:
                 raise ValueError(
                     "psi(detail=True) needs the per-value table on the driver; "
-                    f"`{col}` exceeds {MAX_DISTINCT} distinct values"
+                    f"`{col}` exceeds binning.MAX_DISTINCT distinct values"
                 )
             return _psi_categorical_distributed(e_g, a_g)
         e_counts = {r["__x"]: r["count"] for r in e_rows}
@@ -365,7 +353,6 @@ def psi_all(
     expected: DataFrame | None = None,
     categorical_cols: list[str] | None = None,
     n_bins: int = DEFAULT_BINS,
-    max_distinct: int = MAX_DISTINCT,
 ) -> pd.DataFrame:
     """stats.py:70-123: drift per feature per group — each group vs the
     previous one (expected=None) or vs a fixed expected frame.
@@ -411,7 +398,7 @@ def psi_all(
     agg = base.groupBy("__g", "__exp", "p.f", "p.xd", "p.xs").agg(
         F.count(F.lit(1)).alias("n")
     )
-    rows = collect_capped(agg, max_distinct)
+    rows = collect_capped(agg)
     if rows is None:
         return _psi_all_per_pair(
             df, features, group_col, expected, cat, n_bins

@@ -39,7 +39,8 @@ from ..functions.driver_fit import (
     quantile_edges_weighted,
 )
 from ..functions.exprs import MAP_EXPR_MAX, map_expr, with_lookup
-from .binning import MAX_DISTINCT, PRE_BINS, collect_capped, micro_bin_expr
+from . import binning
+from .binning import class_counts, collect_capped, micro_bin_rows, top_k_rows
 
 DEFAULT_BINS = 10
 
@@ -60,6 +61,29 @@ def _normalize_str(c: Column) -> Column:
     """pandas astype(str).replace(['nan',''], nan) equivalent."""
     s = c.cast("string")
     return F.when(s.isin("nan", "NaN", "") | s.isNull(), F.lit(None)).otherwise(s)
+
+
+def _over_cap_totals(base: DataFrame) -> tuple[float, float, float, float]:
+    """Exact (total0, total1, null0, null1) class counts of ``base``
+    (``__x``, ``__y``) in one tiny aggregation — what an over-cap fit
+    keeps exact while its per-value table is cut to the top k."""
+    is_null = F.col("__x").isNull()
+    tot = base.agg(
+        F.sum(F.lit(1.0) - F.col("__y")).alias("t0"),
+        F.sum("__y").alias("t1"),
+        F.sum(F.when(is_null, F.lit(1.0) - F.col("__y")).otherwise(F.lit(0.0))).alias("n0"),
+        F.sum(F.when(is_null, F.col("__y")).otherwise(F.lit(0.0))).alias("n1"),
+    ).first()
+    return tuple(float(tot[k] or 0) for k in ("t0", "t1", "n0", "n1"))
+
+
+def _top_k_values(base: DataFrame) -> list:
+    """Over-cap categorical WOE state: the ``binning.MAX_DISTINCT``
+    most frequent non-null values of ``__x`` with their class counts."""
+    grouped = base.where(F.col("__x").isNotNull()).groupBy("__x").agg(*class_counts())
+    return top_k_rows(
+        grouped, binning.MAX_DISTINCT, F.col("c0") + F.col("c1"), F.col("__x")
+    )
 
 
 def _fit_thresholds(
@@ -90,17 +114,15 @@ def _fit_thresholds(
 
 @dataclass
 class SingleWOETransformer:
-    """transformer.py:15-208. fit state: bins, woe_map, value2code."""
+    """transformer.py:15-208. fit state: bins, woe_map, value2code.
+    Above the driver cap (binning.MAX_DISTINCT) a continuous fit bins
+    percentile micro-bins and a categorical fit keeps the top-k values
+    by frequency (the dropped tail hits the unknown path at transform —
+    documented divergence)."""
 
     cut_method: str = "dt"
     n_bins: int = DEFAULT_BINS
     is_continuous: bool = True
-    # driver-collect cap (binning.MAX_DISTINCT); above it continuous
-    # fits pre-quantize to percentile micro-bins and categorical fits
-    # keep the top-max_distinct categories by frequency (dropped tail
-    # values hit the unknown path at transform — documented divergence)
-    max_distinct: int = MAX_DISTINCT
-    pre_bins: int = PRE_BINS
 
     bins: list[float] = field(default_factory=list)
     woe_map: dict = field(default_factory=dict)
@@ -119,45 +141,13 @@ class SingleWOETransformer:
         else:
             xc = _normalize_str(F.col(col))
         base = df.select(xc.alias("__x"), y.alias("__y"))
-        c_aggs = [
-            F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
-            F.sum("__y").alias("c1"),
-        ]
-        rows = collect_capped(base.groupBy("__x").agg(*c_aggs), self.max_distinct)
+        rows = collect_capped(base.groupBy("__x").agg(*class_counts()))
         if rows is None:
-            # over the driver cap: exact totals + null counts in one tiny
-            # aggregation, then the bounded per-value pass
-            tot = base.agg(
-                F.sum(F.lit(1.0) - F.col("__y")).alias("t0"),
-                F.sum("__y").alias("t1"),
-                F.sum(
-                    F.when(F.col("__x").isNull(), F.lit(1.0) - F.col("__y")).otherwise(F.lit(0.0))
-                ).alias("n0"),
-                F.sum(
-                    F.when(F.col("__x").isNull(), F.col("__y")).otherwise(F.lit(0.0))
-                ).alias("n1"),
-            ).first()
-            nn = base.where(F.col("__x").isNotNull())
+            total0, total1, null_c0, null_c1 = _over_cap_totals(base)
             if self.is_continuous:
-                rows = (
-                    nn.select(
-                        micro_bin_expr(nn, F.col("__x"), self.pre_bins).alias("__b"),
-                        "__x", "__y",
-                    )
-                    .groupBy("__b")
-                    .agg(F.max("__x").alias("__x"), *c_aggs)
-                    .collect()
-                )
+                rows = micro_bin_rows(base, "__x", *class_counts())
             else:
-                # top-k categories by frequency (TakeOrdered — scale-safe)
-                rows = (
-                    nn.groupBy("__x").agg(*c_aggs)
-                    .orderBy(F.desc(F.col("c0") + F.col("c1")), F.asc("__x"))
-                    .limit(self.max_distinct)
-                    .collect()
-                )
-            null_c0, null_c1 = float(tot["n0"] or 0), float(tot["n1"] or 0)
-            total0, total1 = float(tot["t0"] or 0), float(tot["t1"] or 0)
+                rows = _top_k_values(base)
             vals = sorted(rows, key=lambda r: r["__x"])
         else:
             null_c0 = sum(r["c0"] for r in rows if r["__x"] is None)
@@ -303,7 +293,7 @@ class WOETransformer:
         self.transformers: dict[str, SingleWOETransformer] = {}
         self.woe_df: pd.DataFrame | None = None
 
-    def fit(self, df: DataFrame, target: str, max_distinct: int = MAX_DISTINCT):
+    def fit(self, df: DataFrame, target: str):
         """Single-pass melted fit: explode every feature into
         (feature, value) structs and aggregate class counts with ONE
         groupBy(feature, value) over ONE source scan — at F features on
@@ -312,7 +302,7 @@ class WOETransformer:
         map-side combine bounds the shuffle at partitions x Σ distinct.
         Falls back to per-feature fits (concurrent Spark jobs, each
         with its own driver cap) if the combined distinct count exceeds
-        ``max_distinct``."""
+        the driver cap."""
         feats = self.features or [c for c in df.columns if c != target]
         for f_ in feats:
             if f_ not in df.columns:
@@ -331,12 +321,9 @@ class WOETransformer:
         agg = (
             df.select(F.explode(pairs).alias("p"), y.alias("__y"))
             .groupBy(F.col("p.f").alias("__f"), F.col("p.x").alias("__x"))
-            .agg(
-                F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
-                F.sum("__y").alias("c1"),
-            )
+            .agg(*class_counts())
         )
-        rows = collect_capped(agg, max_distinct)
+        rows = collect_capped(agg)
         if rows is None:
             return self._fit_per_feature(df, target, feats)
 
@@ -412,42 +399,18 @@ class WOEEncoder:
     def __init__(self):
         self.woe_map: dict = {}
 
-    def fit(self, df: DataFrame, col: str, target: str,
-            max_distinct: int = MAX_DISTINCT):
+    def fit(self, df: DataFrame, col: str, target: str):
         y = F.col(target).cast("double")
         xc = F.col(col)
         xc = F.when(F.coalesce(F.isnan(xc.try_cast("double")), F.lit(False)), F.lit(None)).otherwise(xc)
         base = df.select(xc.alias("__x"), y.alias("__y"))
-        c_aggs = [
-            F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
-            F.sum("__y").alias("c1"),
-        ]
-        rows = collect_capped(base.groupBy("__x").agg(*c_aggs), max_distinct)
+        rows = collect_capped(base.groupBy("__x").agg(*class_counts()))
         if rows is None:
-            # over the driver cap: exact totals + NA counts in one tiny
-            # aggregation; keep the top-max_distinct values by frequency
-            # (dropped tail -> `default` at transform, like any unknown)
-            tot = base.agg(
-                F.sum(F.lit(1.0) - F.col("__y")).alias("t0"),
-                F.sum("__y").alias("t1"),
-                F.sum(
-                    F.when(F.col("__x").isNull(), F.lit(1.0) - F.col("__y")).otherwise(F.lit(0.0))
-                ).alias("n0"),
-                F.sum(
-                    F.when(F.col("__x").isNull(), F.col("__y")).otherwise(F.lit(0.0))
-                ).alias("n1"),
-            ).first()
-            rows = (
-                base.where(F.col("__x").isNotNull())
-                .groupBy("__x").agg(*c_aggs)
-                .orderBy(F.desc(F.col("c0") + F.col("c1")), F.asc("__x"))
-                .limit(max_distinct)
-                .collect()
-            )
-            total0, total1 = float(tot["t0"] or 0), float(tot["t1"] or 0)
-            pairs = [(r["__x"], r["c0"], r["c1"]) for r in rows]
-            if (tot["n0"] or 0) + (tot["n1"] or 0) > 0:
-                pairs.append((None, float(tot["n0"]), float(tot["n1"])))
+            # dropped tail -> `default` at transform, like any unknown
+            total0, total1, null0, null1 = _over_cap_totals(base)
+            pairs = [(r["__x"], r["c0"], r["c1"]) for r in _top_k_values(base)]
+            if null0 + null1 > 0:
+                pairs.append((None, null0, null1))
         else:
             total0 = sum(r["c0"] for r in rows)
             total1 = sum(r["c1"] for r in rows)
@@ -498,15 +461,14 @@ class LabelEncoder:
         self.missing_value = missing_value
         self.classes_: list = []
 
-    def fit(self, df: DataFrame, col: str, max_distinct: int = MAX_DISTINCT):
-        rows = collect_capped(
-            df.select(col).where(F.col(col).isNotNull()).distinct(), max_distinct
-        )
+    def fit(self, df: DataFrame, col: str):
+        rows = collect_capped(df.select(col).where(F.col(col).isNotNull()).distinct())
         if rows is None:
             raise ValueError(
-                f"LabelEncoder.fit: `{col}` exceeds {max_distinct} distinct values; "
-                "label codes are driver-side fit state — raise max_distinct "
-                "explicitly, or hash/bucket the column instead of label-encoding it"
+                f"LabelEncoder.fit: `{col}` exceeds binning.MAX_DISTINCT "
+                f"({binning.MAX_DISTINCT}) distinct values; label codes are "
+                "driver-side fit state — hash the column into buckets "
+                "(feature_hash.hashed_cross(df, [col], n_buckets)) instead"
             )
         self.classes_ = sorted(r[0] for r in rows)
         return self

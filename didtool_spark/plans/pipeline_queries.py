@@ -11,6 +11,8 @@ no natural dupes.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import (
@@ -186,7 +188,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from them, so dedup_clusters / split_by_cluster consume this memo
 # instead of each rebuilding shingle -> signature -> band -> verify
 # (minhash_dedup itself keeps building the full pipeline — its gate
-# entry IS the pipeline). Memoized per (session, sf_dir) as an eagerly
+# entry IS the pipeline). Memoized by _memoized as an eagerly
 # localCheckpoint()ed DataFrame: block-manager (not SQL-cache) storage,
 # so the bench loop's clearCache-per-rep cannot evict it, lineage is
 # truncated, and — unlike the r4 collect()/createDataFrame version —
@@ -195,24 +197,6 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline (the bench's documented "construction includes eager
 # candidate work" rule); later consumers and reps reuse.
 _NEAR_PAIRS_MEMO: dict = {}
-
-
-def _planted_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # applicationId is a stable session identity — id(spark) can be
-    # reused by a NEW session after the old one is GC'd, which would
-    # hand back checkpoint blocks of a dead session (ADVICE r5)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NEAR_PAIRS_MEMO:
-        pairs = minhash_near_dupes(
-            _docs_with_planted_near(spark, sf_dir), "text", "doc_id",
-            k_shingle=5, n_hashes=32, bands=16, threshold=0.5,
-        )
-        _NEAR_PAIRS_MEMO[key] = (
-            pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-        )
-    return _NEAR_PAIRS_MEMO[key]
-
-
 # Same sharing pattern for the blocked-levenshtein candidate join over
 # customer names: q_fuzzy_pairs ships the pair table itself and
 # q_entity_resolution consumes it as the edge set — in r4 each rebuilt
@@ -221,10 +205,57 @@ def _planted_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUZZY_PAIRS_MEMO: dict = {}
 
 
+def clear_memos() -> None:
+    """Drop every memoized pair table (the ContextCleaner frees their
+    checkpoint blocks with the last plan that reads them)."""
+    _NEAR_PAIRS_MEMO.clear()
+    _FUZZY_PAIRS_MEMO.clear()
+
+
+def _file_stamp(path: str) -> tuple[int, int]:
+    """(size, mtime_ns) of a table path, (-1, -1) off the local file
+    system. A Spark rewrite of a directory-form table replaces its part
+    files, which moves the directory's mtime."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return -1, -1
+    return st.st_size, st.st_mtime_ns
+
+
+def _memoized(memo: dict, spark: SparkSession, sf_dir: str, tables, build):
+    """``memo``'s pair table for this session and ``sf_dir``, built by
+    ``build()`` on a miss. The key is the flat tuple (applicationId,
+    sf_dir, size, mtime_ns per table read): applicationId, not id(spark),
+    because a NEW session can reuse the id of a GC'd one and would get
+    checkpoint blocks of a dead session (ADVICE r5); the file stamps,
+    because data rewritten under the same path must not get the old
+    table. A rebuild drops the stale entry of the same (session,
+    sf_dir)."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir) + sum(
+        (_file_stamp(f"{sf_dir}/{t}.parquet") for t in tables), ()
+    )
+    if key not in memo:
+        for old in [k for k in memo if k[:2] == (app, sf_dir)]:
+            del memo[old]
+        memo[key] = build()
+    return memo[key]
+
+
+def _planted_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def build():
+        pairs = minhash_near_dupes(
+            _docs_with_planted_near(spark, sf_dir), "text", "doc_id",
+            k_shingle=5, n_hashes=32, bands=16, threshold=0.5,
+        )
+        return pairs.select("id_a", "id_b").localCheckpoint(eager=True)
+
+    return _memoized(_NEAR_PAIRS_MEMO, spark, sf_dir, ["documents"], build)
+
+
 def _fuzzy_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # stable session identity, not id() — see _planted_near_pairs
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FUZZY_PAIRS_MEMO:
+    def build():
         from ..operators.linkage import fuzzy_pairs
 
         cust = load(spark, sf_dir, "customer", spread=True)
@@ -232,10 +263,9 @@ def _fuzzy_pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             cust, "c_custkey", "c_name", max_dist=2, prefix_len=16,
             length_bucket=4,
         )
-        _FUZZY_PAIRS_MEMO[key] = (
-            pairs.select("id_a", "id_b", "dist").localCheckpoint(eager=True)
-        )
-    return _FUZZY_PAIRS_MEMO[key]
+        return pairs.select("id_a", "id_b", "dist").localCheckpoint(eager=True)
+
+    return _memoized(_FUZZY_PAIRS_MEMO, spark, sf_dir, ["customer"], build)
 
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,3 +31,24 @@ def force_distributed(monkeypatch):
             yield
 
     return forced
+
+
+@pytest.fixture
+def tiny_driver_cap(monkeypatch):
+    """Context manager that shrinks the capped fit pull's driver cap
+    (``binning.MAX_DISTINCT``) and, when given, its micro-bin count
+    (``binning.PRE_BINS``), so every capped fit takes its over-cap path
+    on small data."""
+    import contextlib
+
+    from didtool_spark.operators import binning
+
+    @contextlib.contextmanager
+    def tiny(cap, pre_bins=None):
+        with monkeypatch.context() as m:
+            m.setattr(binning, "MAX_DISTINCT", cap)
+            if pre_bins is not None:
+                m.setattr(binning, "PRE_BINS", pre_bins)
+            yield
+
+    return tiny

@@ -43,8 +43,7 @@ def _leaks(spark, names) -> list[str]:
     leaked = []
     for name in names:
         # the memos would skip the pair-table builds on a second call
-        pipeline_queries._NEAR_PAIRS_MEMO.clear()
-        pipeline_queries._FUZZY_PAIRS_MEMO.clear()
+        pipeline_queries.clear_memos()
         spark.catalog.clearCache()
         queries[name](spark, SF_DIR).toPandas()
         if not _cache_empty(spark):
@@ -59,6 +58,36 @@ def test_registry_queries_leave_no_cache(spark, force_distributed):
     with force_distributed():
         leaked += _leaks(spark, FORCED_QUERIES)
     assert not leaked, f"queries leaving a CacheManager entry: {leaked}"
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata missing")
+def test_memo_sees_rewritten_table(spark, tmp_path):
+    """A table rewritten under the same path between two calls gets a
+    fresh pair table, not the memoized one of the old file."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for f in os.listdir(SF_DIR):
+        shutil.copyfile(os.path.join(SF_DIR, f), tmp_path / f)
+    query = entrymod.queries()["fuzzy_pairs"]
+
+    def pairs():
+        return sorted(tuple(r) for r in query(spark, str(tmp_path)).collect())
+
+    before = pairs()
+    path = tmp_path / "customer.parquet"
+    t = pq.read_table(path)
+    names = t.column("c_name").to_pylist()
+    names[1] = names[0]  # an exact duplicate name: a new dist-0 pair
+    i = t.schema.get_field_index("c_name")
+    t = t.set_column(i, t.schema.field(i), pa.array(names, t.schema.field(i).type))
+    pq.write_table(t, path)
+    after = pairs()
+    assert after != before
+    pipeline_queries.clear_memos()
+    assert after == pairs()
 
 
 def test_distributed_classifier_fit_leaves_no_cache(spark, monkeypatch):

@@ -1,9 +1,13 @@
 """Driver-memory caps and vocabulary-size plan switching.
 
-Two scale contracts, tested by forcing tiny caps on small data:
-1. every fit that collects grouped state goes through limit(cap+1) and
-   falls back to a bounded plan (percentile micro-bins for continuous,
-   top-k-by-frequency for categorical) above the cap;
+Two scale contracts, tested on small data:
+1. every fit that collects grouped state goes through the one capped
+   fit pull (``binning.collect_capped``, limit(cap+1)) and falls back to
+   a bounded plan above the cap: ``binning.micro_bin_rows`` (percentile
+   micro-bins) for continuous values, ``binning.top_k_rows`` (top-k by
+   frequency) for categorical ones. The ``tiny_driver_cap`` fixture
+   patches ``binning.MAX_DISTINCT``/``PRE_BINS``, and that one patch
+   reaches every fit; the default call is the exact reference;
 2. transforms switch from a literal map expression to a broadcast-hash
    join above MAP_EXPR_MAX, so a 10^5-entry vocabulary never inlines
    into codegen.
@@ -16,14 +20,26 @@ import pytest
 from pyspark.sql import functions as F
 
 from didtool_spark.functions.exprs import with_lookup
+from didtool_spark.operators import binning, metrics
 from didtool_spark.operators.binning import (
+    chi_edges,
     dt_edges,
+    lgb_edges,
     quantile_edges,
     _value_class_counts,
 )
-from didtool_spark.operators.category import CategoryTransformer, ListTransformer
-from didtool_spark.operators.metrics import _iv_discrete, psi
-from didtool_spark.operators.woe import LabelEncoder, SingleWOETransformer, WOEEncoder
+from didtool_spark.operators.category import (
+    CategoryTransformer,
+    ListTransformer,
+    OneHotTransformer,
+)
+from didtool_spark.operators.metrics import _iv_discrete, iv_all, psi, psi_all
+from didtool_spark.operators.woe import (
+    LabelEncoder,
+    SingleWOETransformer,
+    WOEEncoder,
+    WOETransformer,
+)
 
 
 def plan_str(df) -> str:
@@ -47,11 +63,10 @@ def wide_df(spark):
     return spark.createDataFrame(rows, ["id", "x", "y"]).repartition(4)
 
 
-def test_value_class_counts_capped_matches_shape(wide_df):
-    v, c0, c1 = _value_class_counts(wide_df, "x", "y", max_distinct=None)
-    vq, c0q, c1q = _value_class_counts(
-        wide_df, "x", "y", max_distinct=200, pre_bins=64
-    )
+def test_value_class_counts_capped_matches_shape(wide_df, tiny_driver_cap):
+    v, c0, c1 = _value_class_counts(wide_df, "x", "y")
+    with tiny_driver_cap(200, pre_bins=64):
+        vq, c0q, c1q = _value_class_counts(wide_df, "x", "y")
     # bounded driver state, exact mass, representatives from the data
     assert len(vq) <= 64
     assert (c0q.sum(), c1q.sum()) == (c0.sum(), c1.sum())
@@ -59,27 +74,30 @@ def test_value_class_counts_capped_matches_shape(wide_df):
     assert list(vq) == sorted(vq)
 
 
-def test_dt_edges_capped_close_to_exact(wide_df):
-    exact = dt_edges(wide_df, "x", "y", n_bins=4, max_distinct=None)
-    capped = dt_edges(wide_df, "x", "y", n_bins=4, max_distinct=100, pre_bins=256)
+def test_dt_edges_capped_close_to_exact(wide_df, tiny_driver_cap):
+    exact = dt_edges(wide_df, "x", "y", n_bins=4)
+    with tiny_driver_cap(100, pre_bins=256):
+        capped = dt_edges(wide_df, "x", "y", n_bins=4)
     assert len(capped) == len(exact)
     # the dominant split (label flips at x ~= 1.2) survives quantization
     assert any(abs(e - 1.2) < 0.05 for e in capped[1:-1])
 
 
-def test_quantile_edges_capped_close_to_exact(wide_df):
-    exact = quantile_edges(wide_df, "x", n_bins=5, max_distinct=None)
-    capped = quantile_edges(wide_df, "x", n_bins=5, max_distinct=100, pre_bins=500)
+def test_quantile_edges_capped_close_to_exact(wide_df, tiny_driver_cap):
+    exact = quantile_edges(wide_df, "x", n_bins=5)
+    with tiny_driver_cap(100, pre_bins=500):
+        capped = quantile_edges(wide_df, "x", n_bins=5)
     assert len(capped) == len(exact)
     for a, b in zip(exact[1:-1], capped[1:-1]):
         assert abs(a - b) < 0.02
 
 
-def test_single_woe_continuous_capped(wide_df):
+def test_single_woe_continuous_capped(wide_df, tiny_driver_cap):
     t = SingleWOETransformer(cut_method="dt", n_bins=4)
     t.fit(wide_df, "x", "y")
-    tq = SingleWOETransformer(cut_method="dt", n_bins=4, max_distinct=100, pre_bins=256)
-    tq.fit(wide_df, "x", "y")
+    tq = SingleWOETransformer(cut_method="dt", n_bins=4)
+    with tiny_driver_cap(100, pre_bins=256):
+        tq.fit(wide_df, "x", "y")
     # quantized edges land within one micro-bin of the exact ones; IV is
     # edge-sensitive around the sharp label flip, so compare edges
     for a, b in zip(t.bins[1:-1], tq.bins[1:-1]):
@@ -89,7 +107,7 @@ def test_single_woe_continuous_capped(wide_df):
     assert all(math.isfinite(r[0]) for r in out)
 
 
-def test_single_woe_categorical_top_k(spark):
+def test_single_woe_categorical_top_k(spark, tiny_driver_cap):
     # 10 categories; force top-5 keep — tail hits the unknown path
     rows = []
     random.seed(3)
@@ -97,19 +115,20 @@ def test_single_woe_categorical_top_k(spark):
         cat = f"c{i % 10}" if i % 10 < 5 or i < 900 else f"rare{i % 10}"
         rows.append((cat, 1 if (i % 10) >= 5 and random.random() < 0.7 else 0))
     df = spark.createDataFrame(rows, ["x", "y"])
-    t = SingleWOETransformer(is_continuous=False, cut_method="quantile", n_bins=4,
-                             max_distinct=5)
-    t.fit(df, "x", "y")
+    t = SingleWOETransformer(is_continuous=False, cut_method="quantile", n_bins=4)
+    with tiny_driver_cap(5):
+        t.fit(df, "x", "y")
     assert len(t.value2code) <= 5
     out = t.transform(df, "x", default=99.0)
     assert out.where(F.col("x_woe").isNull()).count() == 0
 
 
-def test_woe_encoder_capped_totals_exact(spark):
+def test_woe_encoder_capped_totals_exact(spark, tiny_driver_cap):
     rows = [(f"v{i % 20}", i % 3 == 0) for i in range(600)] + [(None, True)] * 30
     df = spark.createDataFrame(rows, ["x", "y"])
     full = WOEEncoder().fit(df, "x", "y")
-    capped = WOEEncoder().fit(df, "x", "y", max_distinct=10)
+    with tiny_driver_cap(10):
+        capped = WOEEncoder().fit(df, "x", "y")
     # kept keys carry identical woe (totals exact, not truncated)
     for k, wv in capped.woe_map.items():
         assert k in full.woe_map
@@ -117,10 +136,10 @@ def test_woe_encoder_capped_totals_exact(spark):
     assert WOEEncoder.NA in capped.woe_map
 
 
-def test_label_encoder_cap_raises(spark):
+def test_label_encoder_cap_raises(spark, tiny_driver_cap):
     df = spark.range(500).select(F.concat(F.lit("k"), F.col("id")).alias("x"))
-    with pytest.raises(ValueError, match="distinct"):
-        LabelEncoder().fit(df, "x", max_distinct=100)
+    with tiny_driver_cap(100), pytest.raises(ValueError, match="distinct"):
+        LabelEncoder().fit(df, "x")
 
 
 def test_label_encoder_big_vocab_join_path(spark):
@@ -163,43 +182,127 @@ def test_with_lookup_huge_vocab_runs(spark):
     assert s == sum((i * 7) % 100_000 for i in range(2000))
 
 
-def test_category_transformer_capped_top_k(spark):
+def test_category_transformer_capped_top_k(spark, tiny_driver_cap):
     rows = [(f"c{i % 50}",) for i in range(2000)]
     df = spark.createDataFrame(rows, ["x"])
     full = CategoryTransformer().fit(df, ["x"], max_bins=5)
-    capped = CategoryTransformer().fit(df, ["x"], max_bins=5, max_distinct=20)
+    with tiny_driver_cap(20):
+        capped = CategoryTransformer().fit(df, ["x"], max_bins=5)
     assert full.map_encoder == capped.map_encoder
-    with pytest.raises(ValueError, match="max_bins"):
-        CategoryTransformer().fit(df, ["x"], max_distinct=20)
+    with tiny_driver_cap(20), pytest.raises(ValueError, match="max_bins"):
+        CategoryTransformer().fit(df, ["x"])
 
 
-def test_list_transformer_capped(spark):
+def test_list_transformer_capped(spark, tiny_driver_cap):
     rows = [(",".join(f"t{(i + j) % 40}" for j in range(3)),) for i in range(400)]
     df = spark.createDataFrame(rows, ["x"])
     full = ListTransformer().fit(df, ["x"], max_bins=8)
-    capped = ListTransformer().fit(df, ["x"], max_bins=8, max_distinct=10)
+    with tiny_driver_cap(10):
+        capped = ListTransformer().fit(df, ["x"], max_bins=8)
     assert full.map_encoder == capped.map_encoder
 
 
-def test_iv_discrete_distributed_matches_driver(spark):
+def test_iv_discrete_distributed_matches_driver(spark, tiny_driver_cap):
     rows = [(f"g{i % 30}", i % 4 == 0) for i in range(3000)]
     df = spark.createDataFrame(rows, ["x", "y"])
-    exact = _iv_discrete(df, F.col("x"), "y", max_distinct=None)
-    dist = _iv_discrete(df, F.col("x"), "y", max_distinct=10)
+    exact = _iv_discrete(df, F.col("x"), "y")
+    with tiny_driver_cap(10):
+        dist = _iv_discrete(df, F.col("x"), "y")
     assert abs(exact - dist) < 1e-9
 
 
-def test_psi_categorical_distributed(spark, monkeypatch):
-    import didtool_spark.operators.metrics as m
-
+def test_psi_categorical_distributed(spark, tiny_driver_cap):
     rows_e = [(f"g{i % 30}",) for i in range(3000)]
     rows_a = [(f"g{(i * 3) % 35}",) for i in range(2500)]
     e = spark.createDataFrame(rows_e, ["x"])
     a = spark.createDataFrame(rows_a, ["x"])
     exact = psi(e, a, "x", is_continuous=False)
-    monkeypatch.setattr(m, "MAX_DISTINCT", 10)
-    dist = psi(e, a, "x", is_continuous=False)
+    with tiny_driver_cap(10):
+        dist = psi(e, a, "x", is_continuous=False)
     assert abs(exact - dist) < 1e-9
+
+
+# ------------------------------------------- one patch reaches every fit
+
+K = 5  # patched driver cap: every column of reach_df has more distinct values
+
+
+@pytest.fixture(scope="module")
+def reach_df(spark):
+    rows = [
+        (i / 7.0, f"c{i % 20}", f"t{i % 20},t{(i + 1) % 20}", i % 2, int(i % 3 == 0))
+        for i in range(200)
+    ]
+    return spark.createDataFrame(rows, "x double, c string, t string, month int, y int")
+
+
+def _called(monkeypatch, mod, name, fit) -> bool:
+    """True when ``fit()`` calls ``mod.<name>``."""
+    calls = []
+    real = getattr(mod, name)
+    monkeypatch.setattr(mod, name, lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    fit()
+    return bool(calls)
+
+
+def _raises(fit) -> bool:
+    try:
+        fit()
+    except ValueError:
+        return True
+    return False
+
+
+# each fit -> True when it took its over-cap path: the per-feature
+# fallback of a melted fit, the micro-bin pass of a continuous fit, <= K
+# kept values of a categorical fit, or the raise of a fit that must keep
+# every value
+_REACH = {
+    "iv_all": lambda df, mp: _called(
+        mp, metrics, "_iv_all_per_feature",
+        lambda: iv_all(df, ["x", "c"], "y", categorical_cols=["c"]),
+    ),
+    "psi_all": lambda df, mp: _called(
+        mp, metrics, "_psi_all_per_pair",
+        lambda: psi_all(df, ["x", "c"], "month", categorical_cols=["c"]),
+    ),
+    "SingleWOETransformer": lambda df, mp: len(
+        SingleWOETransformer(is_continuous=False).fit(df, "c", "y").value2code
+    ) <= K,
+    "WOETransformer.fit": lambda df, mp: all(
+        len(t.value2code) <= K
+        for t in WOETransformer(features=["c"]).fit(df, "y").transformers.values()
+    ),
+    "WOEEncoder.fit": lambda df, mp: len(WOEEncoder().fit(df, "c", "y").woe_map) <= K,
+    "LabelEncoder.fit": lambda df, mp: _raises(lambda: LabelEncoder().fit(df, "c")),
+    "quantile_edges": lambda df, mp: _called(
+        mp, binning, "micro_bin_expr", lambda: quantile_edges(df, "x")
+    ),
+    "dt_edges": lambda df, mp: _called(
+        mp, binning, "micro_bin_expr", lambda: dt_edges(df, "x", "y")
+    ),
+    "lgb_edges": lambda df, mp: _called(
+        mp, binning, "micro_bin_expr", lambda: lgb_edges(df, "x", "y")
+    ),
+    "chi_edges": lambda df, mp: _called(
+        mp, binning, "micro_bin_expr", lambda: chi_edges(df, "x", "y")
+    ),
+    "CategoryTransformer.fit": lambda df, mp: _raises(
+        lambda: CategoryTransformer().fit(df, ["c"])
+    ),
+    "OneHotTransformer.fit": lambda df, mp: _raises(
+        lambda: OneHotTransformer().fit(df, ["c"])
+    ),
+    "ListTransformer.fit": lambda df, mp: _raises(
+        lambda: ListTransformer().fit(df, ["t"])
+    ),
+}
+
+
+@pytest.mark.parametrize("fit", list(_REACH))
+def test_one_cap_patch_reaches_every_fit(reach_df, tiny_driver_cap, monkeypatch, fit):
+    with tiny_driver_cap(K, pre_bins=4):
+        assert _REACH[fit](reach_df, monkeypatch), f"{fit} kept its exact path"
 
 
 # --------------------------------------------------- single-pass melts
