@@ -3035,7 +3035,7 @@ def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked record linkage (operators/linkage.py fuzzy_pairs):
     near-duplicate customer names at levenshtein <= 2, compared only
     inside (prefix, length-bucket) blocks with the map-side hot-block
-    bound — never the O(n^2) cross join.  Pure JVM levenshtein.
+    bound — never the O(n^2) cross join; banded Arrow levenshtein.
     Candidate table shared with q_entity_resolution via
     _fuzzy_pair_table (one blocked join per session, not two)."""
     return _fuzzy_pair_table(spark, sf_dir).select("id_a", "id_b", "dist")

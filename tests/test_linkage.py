@@ -5,6 +5,7 @@ block_exprs override."""
 from __future__ import annotations
 
 import pandas as pd
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from didtool_spark.operators.linkage import fuzzy_pairs, normalize_name
@@ -131,14 +132,33 @@ def test_fuzzy_pairs_rejects_narrow_length_bucket(spark):
         )
 
 
-def test_levenshtein_arrow_matches_jvm(spark):
-    # r6 Arrow kernel vs F.levenshtein on adversarial strings:
-    # unicode, empty, equal, insert/delete-heavy, long-vs-short
-    import pandas as pd
-    from pyspark.sql import functions as F
-
+def _arrow_vs_jvm(spark, cases, ks):
+    """The Arrow kernel at each threshold k vs ``F.levenshtein(a, b, k)``
+    on (a, b) string pairs: the exact distance when it is <= k, else
+    -1, and NULL in -> NULL out."""
     from didtool_spark.operators.linkage import _levenshtein_arrow_udf
 
+    df = spark.createDataFrame(
+        pd.DataFrame(cases, columns=["a", "b"]).astype(object),
+        "a string, b string",
+    )
+    got = df.select(
+        "a", "b",
+        *[_levenshtein_arrow_udf(k)("a", "b").alias(f"k{k}") for k in ks],
+        *[F.levenshtein("a", "b", k).alias(f"j{k}") for k in ks],
+    ).toPandas()
+    for _, r in got.iterrows():
+        for k in ks:
+            arrow, jvm = r[f"k{k}"], r[f"j{k}"]
+            assert (pd.isna(arrow) and pd.isna(jvm)) or arrow == jvm, (
+                r["a"], r["b"], k, arrow, jvm)
+
+
+def test_levenshtein_arrow_matches_jvm(spark):
+    # adversarial strings: unicode, empty, equal, insert/delete-heavy,
+    # and long-vs-short pairs more than 2k+1 code points apart in both
+    # orders (outside the band); k = 64 is the exact distance, since
+    # no case is longer than 64 code points
     cases = [
         ("", ""), ("", "abc"), ("abc", ""), ("abc", "abc"),
         ("kitten", "sitting"), ("flaw", "lawn"),
@@ -149,18 +169,29 @@ def test_levenshtein_arrow_matches_jvm(spark):
         ("customer#000000001", "customer#000000101"),
         ("x" * 40, "x" * 39 + "y"), (None, "abc"), ("abc", None),
         (None, None),
+        ("abcdefghijklmnop", "ab"), ("ab", "abcdefghijklmnop"),
+        ("x" * 16, "xy"), ("yx", "x" * 16), ("😀" * 16, "😀😃"),
+        ("", "x" * 16), ("x" * 64, "y"),
     ]
-    df = spark.createDataFrame(
-        pd.DataFrame(cases, columns=["a", "b"]).astype(object)
-    )
-    got = df.select(
-        "a", "b",
-        _levenshtein_arrow_udf()(F.col("a"), F.col("b")).alias("k"),
-        F.levenshtein("a", "b").alias("j"),
-    ).toPandas()
-    for _, r in got.iterrows():
-        assert (pd.isna(r["k"]) and pd.isna(r["j"])) or r["k"] == r["j"], (
-            r["a"], r["b"], r["k"], r["j"])
+    _arrow_vs_jvm(spark, cases, [0, 1, 2, 3, 64])
+
+
+_UNI = st.one_of(
+    st.none(),
+    # a small alphabet (ASCII, Latin-1, CJK, astral) so many pairs
+    # fall inside the band, and arbitrary unicode
+    st.text(alphabet="ab é日😀𝔸", max_size=12),
+    st.text(max_size=8),
+)
+
+
+@settings(max_examples=20, deadline=None)
+@given(
+    cases=st.lists(st.tuples(_UNI, _UNI), min_size=1, max_size=40),
+    k=st.sampled_from([0, 1, 2, 3, 64]),
+)
+def test_levenshtein_arrow_matches_jvm_fuzz(spark, cases, k):
+    _arrow_vs_jvm(spark, cases, [k])
 
 
 def test_fuzzy_pairs_arrow_matches_expr(spark):

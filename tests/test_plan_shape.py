@@ -398,3 +398,20 @@ def test_session8_plan_shapes(spark, force_distributed):
         )
         p = plan_str(ranked)
     assert "hashpartitioning(__bk" in p, p[:2500]
+
+
+def test_fuzzy_pairs_scores_each_pair_once(spark):
+    """The Arrow Levenshtein kernel runs in ONE ArrowEvalPython node:
+    the dist filter stays above the projection that computes dist
+    instead of being pushed below it, which would score every blocked
+    pair a second time."""
+    import re
+
+    from didtool_spark.operators.linkage import fuzzy_pairs
+
+    cust = spark.read.parquet(f"{SF}/customer.parquet")
+    p = plan_str(
+        fuzzy_pairs(cust, "c_custkey", "c_name", max_dist=2, prefix_len=16)
+    )
+    n_udf = len(re.findall(r"\(\d+\) ArrowEvalPython", p))
+    assert n_udf == 1, f"expected 1 ArrowEvalPython, got {n_udf}\n{p}"

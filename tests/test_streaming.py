@@ -19,6 +19,17 @@ from didtool_spark.streaming.stream import (
 GAP = 1800
 
 
+def _each_window(check, table):
+    """Run ``check(row)`` on every emitted window row from a pool of 4
+    threads: each check is a few short Spark jobs whose latency, not
+    the executors, bounds a serial loop.  Every window is checked and
+    the first failure is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        list(pool.map(check, table.itertuples(index=False)))
+
+
 @pytest.fixture(scope="module")
 def stream_dirs(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("stream")
@@ -197,7 +208,7 @@ def test_streaming_psi_monitor_matches_batch(spark, tmp_path_factory):
     table = mon.psi_table(spark.read.parquet(out))
     assert len(table) >= 2  # several windows closed and emitted
 
-    for row in table.itertuples(index=False):
+    def check(row):
         sl = ref.where(
             (F.col("ts") >= F.lit(row.window_start))
             & (F.col("ts") < F.lit(row.window_end))
@@ -206,6 +217,8 @@ def test_streaming_psi_monitor_matches_batch(spark, tmp_path_factory):
         # one-shot monitor fold == streaming fold == batch psi()
         assert abs(mon.psi_now(sl) - row.psi) < 1e-12
         assert abs(batch_psi(ref, sl, "text_len", n_bins=5) - row.psi) < 1e-12
+
+    _each_window(check, table)
 
 
 def test_streaming_near_dup_matches(spark, tmp_path_factory):
@@ -306,7 +319,8 @@ def test_streaming_psi_monitor_categorical(spark, tmp_path_factory):
     )
     table = mon.psi_table(spark.read.parquet(out))
     assert len(table) >= 2
-    for row in table.itertuples(index=False):
+
+    def check(row):
         sl = ref.where(
             (F.col("ts") >= F.lit(row.window_start))
             & (F.col("ts") < F.lit(row.window_end))
@@ -315,6 +329,8 @@ def test_streaming_psi_monitor_categorical(spark, tmp_path_factory):
         assert abs(
             batch_psi(ref, sl, "role", is_continuous=False) - row.psi
         ) < 1e-12
+
+    _each_window(check, table)
 
     # unseen category folds into OTHER (bounded state), no crash
     unseen = spark.createDataFrame(
@@ -431,7 +447,7 @@ def test_streaming_calibration_monitor_matches_batch(spark, tmp_path_factory):
     table = mon.calibration_table(spark.read.parquet(out))
     assert len(table) >= 2
 
-    for row in table.itertuples(index=False):
+    def check(row):
         sl = ref.where(
             (F.col("ts") >= F.lit(row.window_start))
             & (F.col("ts") < F.lit(row.window_end))
@@ -443,6 +459,8 @@ def test_streaming_calibration_monitor_matches_batch(spark, tmp_path_factory):
         one = mon.now(sl)
         for m in ("brier", "ece", "mce"):
             assert abs(one[m] - getattr(row, m)) < 1e-12, m
+
+    _each_window(check, table)
 
 
 def test_streaming_transitions_match_batch(spark, stream_dirs, tmp_path_factory):
