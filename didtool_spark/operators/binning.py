@@ -13,6 +13,11 @@ Methods and exact semantics (reference file:line):
 NaN/NULL -> bin -1 in every method (cut.py:60-61 etc.); supervised fits
 use non-null x only (cut.py:146-147, 197, 275-276).
 
+``fit_thresholds`` is the one method -> edges dispatch over aggregated
+(value, count y=0, count y=1) arrays and the only caller of the
+driver_fit cut functions: the dt/lgb/chi/quantile fits here, every WOE
+fit and ``metrics.iv_all`` all reach their edges through it.
+
 Scale notes: every fit collects a grouped state table through one
 capped pull, ``collect_capped``: ``limit(MAX_DISTINCT + 1)`` so the
 driver never materializes more than the cap, exact below it. Above it
@@ -33,7 +38,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.binexpr import bin_expr
-from ..functions.driver_fit import cart_thresholds, chimerge_edges, lgb_thresholds
+from ..functions.driver_fit import (
+    cart_thresholds,
+    chimerge_edges,
+    lgb_thresholds,
+    quantile_edges_weighted,
+    step_edges_weighted,
+)
 
 DEFAULT_BINS = 10
 
@@ -77,6 +88,42 @@ def collect_capped(agg_df: DataFrame, cap: int | None = None) -> list | None:
         raise ValueError(f"driver cap must be positive, got {cap}")
     rows = agg_df.limit(cap + 1).collect()
     return None if len(rows) > cap else rows
+
+
+def melted_class_counts(
+    df: DataFrame, features: Sequence[str], target: str, values
+) -> dict[str, list] | None:
+    """The single-pass melted fit behind ``metrics.iv_all`` and
+    ``woe.WOETransformer.fit``: every row explodes into one struct per
+    feature (``__f`` plus ``values(f)``, a name -> Column dict with the
+    same names for every feature), and ONE groupBy over ONE source scan
+    aggregates their ``class_counts`` (the map-side combine bounds the
+    shuffle at partitions x Σ distinct). Returns the grouped rows per
+    feature through ``collect_capped``, or None above the cap (the
+    caller falls back to one fit per feature)."""
+    names: list[str] = []
+    structs = []
+    for f_ in features:
+        cols = values(f_)
+        names = list(cols)
+        structs.append(
+            F.struct(F.lit(f_).alias("__f"), *(c.alias(n) for n, c in cols.items()))
+        )
+    agg = (
+        df.select(
+            F.explode(F.array(*structs)).alias("__p"),
+            F.col(target).cast("double").alias("__y"),
+        )
+        .groupBy(*(F.col(f"__p.{n}").alias(n) for n in ["__f", *names]))
+        .agg(*class_counts())
+    )
+    rows = collect_capped(agg)
+    if rows is None:
+        return None
+    by_feat: dict[str, list] = {f_: [] for f_ in features}
+    for r in rows:
+        by_feat[r["__f"]].append(r)
+    return by_feat
 
 
 def micro_bin_expr(df: DataFrame, xc: Column) -> Column:
@@ -211,23 +258,24 @@ def quantile_edges(
     rows.sort(key=lambda r: r["__xq"])
     values = np.array([r["__xq"] for r in rows], dtype=float)
     counts = np.array([r["count"] for r in rows], dtype=float)
-    from ..functions.driver_fit import quantile_edges_weighted
-
-    interior = quantile_edges_weighted(values, counts, n_bins)
+    interior = fit_thresholds(values, counts, np.zeros_like(counts), "quantile", n_bins)
     return [-math.inf, *interior, math.inf]
+
+
+def _supervised_edges(
+    df: DataFrame, col: str, target: str, method: str, n_bins: int, **kw
+) -> list[float]:
+    v, c0, c1 = _value_class_counts(df, col, target)
+    if len(v) == 0:
+        return [-math.inf, math.inf]
+    return [-math.inf, *fit_thresholds(v, c0, c1, method, n_bins, **kw), math.inf]
 
 
 def dt_edges(
     df: DataFrame, col: str, target: str, n_bins: int = DEFAULT_BINS,
     min_bin: float = 0.01,
 ) -> list[float]:
-    v, c0, c1 = _value_class_counts(df, col, target)
-    if len(v) == 0:
-        return [-math.inf, math.inf]
-    n = int((c0 + c1).sum())
-    msl = max(1, math.ceil(min_bin * n))
-    thr = cart_thresholds(v, c0, c1, max_leaf_nodes=n_bins, min_samples_leaf=msl)
-    return [-math.inf, *thr, math.inf]
+    return _supervised_edges(df, col, target, "dt", n_bins, min_bin=min_bin)
 
 
 def lgb_edges(
@@ -236,23 +284,43 @@ def lgb_edges(
 ) -> list[float]:
     # reference computes min_child_samples from len(x) INCLUDING NaN
     # (cut.py:198), then fits on non-null values (cut.py:206)
-    n_total = df.count()
-    v, c0, c1 = _value_class_counts(df, col, target)
-    if len(v) == 0:
-        return [-math.inf, math.inf]
-    mcs = max(1, math.ceil(min_bin * n_total))
-    thr = lgb_thresholds(v, c0, c1, num_leaves=n_bins, min_child_samples=mcs)
-    return [-math.inf, *thr, math.inf]
+    return _supervised_edges(
+        df, col, target, "lgb", n_bins, n_total=df.count(), min_bin=min_bin
+    )
 
 
 def chi_edges(
     df: DataFrame, col: str, target: str, n_bins: int = DEFAULT_BINS, cf: float = 0.1
 ) -> list[float]:
-    v, c0, c1 = _value_class_counts(df, col, target)
-    if len(v) == 0:
-        return [-math.inf, math.inf]
-    edges = chimerge_edges(v, c0, c1, n_bins=n_bins, cf=cf)
-    return [-math.inf, *edges[1:-1], math.inf]
+    return _supervised_edges(df, col, target, "chi", n_bins, cf=cf)
+
+
+def fit_thresholds(
+    v: np.ndarray, c0: np.ndarray, c1: np.ndarray, method: str, n_bins: int,
+    n_total: int | None = None, min_bin: float = 0.01, cf: float = 0.1,
+) -> list[float]:
+    """Interior cut edges from aggregated (value, class-count) arrays
+    sorted by value — the one method -> edges dispatch (cut.py:357-407 on
+    driver-side data) and the only caller of the driver_fit cuts.
+    ``n_total`` is the null-INCLUSIVE row count: the reference's lgb_cut
+    derives min_child_samples from len(x) including NaN (cut.py:198)
+    while dt_cut uses the non-null count (cut.py:146-147); it defaults
+    to the non-null count. ``min_bin`` (dt, lgb) and ``cf`` (chi) are
+    the fits' own options, passed through."""
+    n = int((c0 + c1).sum())
+    if method == "dt":
+        msl = max(1, math.ceil(min_bin * n))
+        return cart_thresholds(v, c0, c1, max_leaf_nodes=n_bins, min_samples_leaf=msl)
+    if method == "lgb":
+        mcs = max(1, math.ceil(min_bin * (n_total if n_total is not None else n)))
+        return lgb_thresholds(v, c0, c1, num_leaves=n_bins, min_child_samples=mcs)
+    if method == "chi":
+        return chimerge_edges(v, c0, c1, n_bins=n_bins, cf=cf)[1:-1]
+    if method == "step":
+        return step_edges_weighted(v, c0 + c1, n_bins)
+    if method == "quantile":
+        return quantile_edges_weighted(v, c0 + c1, n_bins)
+    raise ValueError(f"unsupported method `{method}`")
 
 
 class Binner:

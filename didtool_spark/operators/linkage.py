@@ -142,37 +142,34 @@ def fuzzy_pairs(
             "length_bucket must be >= max_dist (buckets could otherwise "
             f"differ by more than one): {length_bucket} < {max_dist}"
         )
-    # the key is computed BEFORE the narrowing select so custom
-    # block_exprs may reference any input column (or "__norm")
+    # two projections: __norm first, so custom block_exprs may read it
+    # (or any input column); then key, length bucket and the double
+    # emission in the narrowing select (each projection re-analyses the
+    # plan, so they are not split further)
     base = df.withColumn("__norm", normalize_name(text_col))
     use_lb = block_exprs is None and bool(length_bucket)
+    lb_exprs: list[Column] = []
     if block_exprs is not None:
-        base = base.withColumn("__bk", F.struct(*block_exprs))
+        bk = F.struct(*block_exprs)
+    elif use_lb:
+        pfx = F.substring("__norm", 1, prefix_len).alias("__pfx")
+        lb = F.floor(F.length("__norm") / F.lit(length_bucket)).cast("int")
+        lb_exprs = [lb.alias("__lb")]
+        # emit under own bucket and the next: the boundary-straddling
+        # pair meets at the greater bucket
+        bk = F.explode(F.array(
+            F.struct(pfx, lb.alias("__jk")), F.struct(pfx, (lb + 1).alias("__jk"))
+        ))
     else:
-        base = base.withColumn(
-            "__pfx", F.substring("__norm", 1, prefix_len)
-        )
-        if use_lb:
-            base = base.withColumn(
-                "__lb",
-                F.floor(F.length("__norm") / F.lit(length_bucket)).cast("int"),
-            ).withColumn(
-                # emit under own bucket and the next: the boundary-
-                # straddling pair meets at the greater bucket
-                "__jk",
-                F.explode(F.array(F.col("__lb"), F.col("__lb") + 1)),
-            )
-            base = base.withColumn("__bk", F.struct("__pfx", "__jk"))
-        else:
-            base = base.withColumn("__bk", F.struct("__pfx"))
-    lb_cols = ["__lb"] if use_lb else []
+        bk = F.struct(F.substring("__norm", 1, prefix_len).alias("__pfx"))
     blocked = base.select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("text"),
         "__norm",
-        "__bk",
-        *lb_cols,
+        bk.alias("__bk"),
+        *lb_exprs,
     )
+    lb_cols = ["__lb"] if use_lb else []
 
     # map-side hot-block bound: count once, drop degenerate blocks
     sizes = blocked.groupBy("__bk").agg(F.count(F.lit(1)).alias("__bn"))

@@ -17,8 +17,8 @@ from pyspark.sql.window import Window
 from ..functions.binexpr import bin_expr
 from ..functions.exprs import is_missing
 from ..functions.utils import persisted
-from .binning import Binner, class_counts, collect_capped, step_edges
-from .woe import _floors, _over_cap_totals, woe_value
+from .binning import Binner, class_counts, collect_capped, melted_class_counts, step_edges
+from .woe import SingleWOETransformer, _floors, _over_cap_totals, _row_stats, woe_value
 
 DEFAULT_BINS = 10
 
@@ -57,13 +57,7 @@ def _iv_discrete(df: DataFrame, col: Column, target: str) -> float:
         p0 = F.greatest(F.col("c0"), F.lit(0.5)) / F.lit(t0)
         out = agg.select(F.sum((p1 - p0) * F.log(p1 / p0)).alias("iv")).first()
         return float(out["iv"] or 0.0)
-    total0 = sum(r["c0"] for r in rows)
-    total1 = sum(r["c1"] for r in rows)
-    iv_value = 0.0
-    for r in rows:
-        prob1, prob0 = _floors(r["c1"], r["c0"], total1, total0)
-        iv_value += (prob1 - prob0) * woe_value(prob1, prob0)
-    return iv_value
+    return _iv_from_groups([(r["c0"], r["c1"]) for r in rows])
 
 
 def iv(
@@ -89,41 +83,6 @@ def iv(
     return _iv_discrete(df, handle_categorical_expr(col, dtype), target)
 
 
-def _driver_thresholds(
-    v, c0, c1, method: str, n_bins: int, n_total_incl_null: float
-) -> list[float]:
-    """Interior cut edges from aggregated (value, class-count) arrays —
-    the driver-side mirror of every Binner method, reusing the exact
-    functions.driver_fit fits so edges are identical to the per-feature
-    Spark path."""
-    import numpy as np
-
-    from ..functions.driver_fit import (
-        cart_thresholds, chimerge_edges, lgb_thresholds, quantile_edges_weighted,
-    )
-
-    n = float((c0 + c1).sum())
-    if method == "dt":
-        msl = max(1, math.ceil(0.01 * n))
-        return cart_thresholds(v, c0, c1, max_leaf_nodes=n_bins, min_samples_leaf=msl)
-    if method == "lgb":
-        mcs = max(1, math.ceil(0.01 * n_total_incl_null))
-        return lgb_thresholds(v, c0, c1, num_leaves=n_bins, min_child_samples=mcs)
-    if method == "chi":
-        edges = chimerge_edges(v, c0, c1, n_bins=n_bins)
-        return edges[1:-1]
-    if method == "quantile":
-        return quantile_edges_weighted(v, c0 + c1, n_bins)
-    if method == "step":
-        mn, mx = float(v.min()), float(v.max())
-        edges = np.linspace(mn, mx, n_bins + 1)
-        interior = edges[1:-1]
-        bin_ids = np.searchsorted(interior, v, side="left")
-        present = set(int(b) for b in bin_ids)
-        return [float(interior[i - 1]) for i in range(1, n_bins) if i in present]
-    raise ValueError(f"unsupported method `{method}`")
-
-
 def _iv_from_groups(groups: list[tuple[float, float]]) -> float:
     """Floored-probability IV over (c0, c1) groups (metric.py:66-83)."""
     total0 = sum(g[0] for g in groups)
@@ -145,49 +104,34 @@ def iv_all(
     """stats.py:32-67: per-feature IV, sorted desc.
     ``categorical_cols`` replaces pandas category dtype.
 
-    Single-pass plan (SURVEY §3.1): melt every feature into
-    (feature, value) structs, ONE groupBy over ONE source scan
-    (map-side combine bounds the shuffle at partitions x Σ distinct),
-    then per-feature IV is pure driver math over the aggregated table —
-    identical cut edges (same driver_fit functions) and identical
-    0.5-floor formula as the per-feature path. At F features on 100 TB
+    Single-pass plan (SURVEY §3.1): ``binning.melted_class_counts``
+    aggregates every (feature, value) cell with ONE groupBy over ONE
+    source scan; per-feature IV is then driver math over that table. A
+    continuous feature's IV is the ``var_iv`` of
+    ``SingleWOETransformer._fit_from_stats``, whose edges come from the
+    one dispatch ``binning.fit_thresholds`` — the same edges and
+    0.5-floor formula as the per-feature path. A categorical feature's
+    IV is ``_iv_from_groups`` over its values. At F features on 100 TB
     this replaces F full scans. Falls back to one Spark job per feature
     (the reference's Pool shape) above the combined distinct cap."""
-    import numpy as np
-
     cut_method = kwargs.get("cut_method", "dt")
     n_bins = kwargs.get("n_bins", DEFAULT_BINS)
     cat = set(categorical_cols or [])
     dtypes = dict(df.dtypes)
-    y = F.col(target).cast("double")
 
-    structs = []
-    for f_ in features:
+    def values(f_: str) -> dict[str, Column]:
         xd = F.col(f_).try_cast("double")
         xd = F.when(F.isnan(xd), F.lit(None)).otherwise(xd)
         if f_ in cat:
             xs = handle_categorical_expr(f_, dtypes.get(f_, "double"))
             xr = F.col(f_).cast("string")
         else:
-            xs = F.lit(None).cast("string")
-            xr = F.lit(None).cast("string")
-        structs.append(
-            F.struct(
-                F.lit(f_).alias("f"), xd.alias("xd"), xs.alias("xs"), xr.alias("xr")
-            )
-        )
-    agg = (
-        df.select(F.explode(F.array(*structs)).alias("p"), y.alias("__y"))
-        .groupBy("p.f", "p.xd", "p.xs", "p.xr")
-        .agg(*class_counts())
-    )
-    rows = collect_capped(agg)
-    if rows is None:
-        return _iv_all_per_feature(df, features, target, cat, **kwargs)
+            xs = xr = F.lit(None).cast("string")
+        return {"xd": xd, "xs": xs, "xr": xr}
 
-    by_feat: dict[str, list] = {f_: [] for f_ in features}
-    for r in rows:
-        by_feat[r["f"]].append(r)
+    by_feat = melted_class_counts(df, features, target, values)
+    if by_feat is None:
+        return _iv_all_per_feature(df, features, target, cat, **kwargs)
 
     out_rows = []
     for f_ in features:
@@ -198,47 +142,20 @@ def iv_all(
             # metric.py:120 gate: distinct/total > 0.5 -> continuous
             distinct_raw = sum(1 for r in fr if r["xr"] is not None)
             continuous = distinct_raw / total_n > 0.5
+        key = "xd" if continuous else "xs"
+        groups: dict = {}
+        for r in fr:
+            g = groups.setdefault(r[key], [0.0, 0.0])
+            g[0] += r["c0"]
+            g[1] += r["c1"]
         if continuous:
-            # merge melt groups by numeric value
-            num: dict[float, list[float]] = {}
-            null_c0 = null_c1 = 0.0
-            for r in fr:
-                if r["xd"] is None:
-                    null_c0 += r["c0"]
-                    null_c1 += r["c1"]
-                else:
-                    g = num.setdefault(float(r["xd"]), [0.0, 0.0])
-                    g[0] += r["c0"]
-                    g[1] += r["c1"]
-            if not num:
-                out_rows.append((f_, 0.0))
-                continue
-            v = np.array(sorted(num), dtype=float)
-            c0 = np.array([num[x][0] for x in v], dtype=float)
-            c1 = np.array([num[x][1] for x in v], dtype=float)
-            thr = np.array(
-                _driver_thresholds(v, c0, c1, cut_method, n_bins, total_n),
-                dtype=float,
-            )
-            bin_ids = (
-                np.searchsorted(thr, v, side="left") if len(thr)
-                else np.zeros(len(v), dtype=int)
-            )
-            per_bin: dict[int, list[float]] = {}
-            if null_c0 + null_c1 > 0:
-                per_bin[-1] = [null_c0, null_c1]
-            for b, a0, a1 in zip(bin_ids, c0, c1):
-                g = per_bin.setdefault(int(b), [0.0, 0.0])
-                g[0] += a0
-                g[1] += a1
-            out_rows.append((f_, _iv_from_groups(list(per_bin.values()))))
+            # melt groups merged by numeric value, NULL included
+            rows = [{"__x": x, "c0": g0, "c1": g1} for x, (g0, g1) in groups.items()]
+            t = SingleWOETransformer(cut_method, n_bins)
+            value = t._fit_from_stats(*_row_stats(rows)).var_iv
         else:
-            per_val: dict[str, list[float]] = {}
-            for r in fr:
-                g = per_val.setdefault(r["xs"], [0.0, 0.0])
-                g[0] += r["c0"]
-                g[1] += r["c1"]
-            out_rows.append((f_, _iv_from_groups(list(per_val.values()))))
+            value = _iv_from_groups(list(groups.values()))
+        out_rows.append((f_, value))
     out = pd.DataFrame(out_rows, columns=["feature", "iv"])
     return out.sort_values("iv", ascending=False).set_index("feature")
 

@@ -314,10 +314,6 @@ def _sq_dists_expr(vec: Column, centroids: list[list[float]]) -> Column:
     return F.transform(cmat, dist)
 
 
-def _sq_dist(vec: Column, centroid: list[float]) -> Column:
-    return _sq_dists_expr(vec, [centroid])[0]
-
-
 def _cluster_expr(vec: Column, centroids: list[list[float]]) -> Column:
     dists = _sq_dists_expr(vec, centroids)
     # first minimal index (1-based array_position) -> 0-based cluster id

@@ -31,16 +31,16 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.binexpr import bin_expr
-from ..functions.driver_fit import (
-    cart_thresholds,
-    chimerge_edges,
-    lgb_thresholds,
-    step_edges_weighted,
-    quantile_edges_weighted,
-)
 from ..functions.exprs import MAP_EXPR_MAX, map_expr, with_lookup
 from . import binning
-from .binning import class_counts, collect_capped, micro_bin_rows, top_k_rows
+from .binning import (
+    class_counts,
+    collect_capped,
+    fit_thresholds,
+    melted_class_counts,
+    micro_bin_rows,
+    top_k_rows,
+)
 
 DEFAULT_BINS = 10
 
@@ -86,30 +86,17 @@ def _top_k_values(base: DataFrame) -> list:
     )
 
 
-def _fit_thresholds(
-    codes: np.ndarray, c0: np.ndarray, c1: np.ndarray, method: str, n_bins: int,
-    n_total: int | None = None,
-) -> list[float]:
-    """Supervised/unsupervised cut over aggregated (value, class-count)
-    rows — mirrors cut.py:357-407 dispatch on driver-side data.
-    ``n_total`` is the null-INCLUSIVE row count: the reference's lgb_cut
-    derives min_child_samples from len(x) including NaN (cut.py:198)
-    while dt_cut uses the non-null count (cut.py:146-147)."""
-    n = int((c0 + c1).sum())
-    if method == "dt":
-        msl = max(1, math.ceil(0.01 * n))
-        return cart_thresholds(codes, c0, c1, max_leaf_nodes=n_bins, min_samples_leaf=msl)
-    if method == "lgb":
-        mcs = max(1, math.ceil(0.01 * (n_total if n_total is not None else n)))
-        return lgb_thresholds(codes, c0, c1, num_leaves=n_bins, min_child_samples=mcs)
-    if method == "chi":
-        edges = chimerge_edges(codes, c0, c1, n_bins=n_bins)
-        return edges[1:-1]
-    if method == "step":
-        return step_edges_weighted(codes, c0 + c1, n_bins)
-    if method == "quantile":
-        return quantile_edges_weighted(codes, c0 + c1, n_bins)
-    raise ValueError(f"unsupported method `{method}`")
+def _row_stats(rows: list) -> tuple[list, float, float, float, float]:
+    """Arguments of ``SingleWOETransformer._fit_from_stats`` from grouped
+    (__x, c0, c1) rows that hold every value, NULL included: the
+    non-null rows sorted by __x, the NULL group's (c0, c1) and the
+    class totals."""
+    vals = sorted([r for r in rows if r["__x"] is not None], key=lambda r: r["__x"])
+    null_c0 = sum(r["c0"] for r in rows if r["__x"] is None)
+    null_c1 = sum(r["c1"] for r in rows if r["__x"] is None)
+    total0 = sum(r["c0"] for r in rows)
+    total1 = sum(r["c1"] for r in rows)
+    return vals, null_c0, null_c1, total0, total1
 
 
 @dataclass
@@ -142,21 +129,14 @@ class SingleWOETransformer:
             xc = _normalize_str(F.col(col))
         base = df.select(xc.alias("__x"), y.alias("__y"))
         rows = collect_capped(base.groupBy("__x").agg(*class_counts()))
-        if rows is None:
-            total0, total1, null_c0, null_c1 = _over_cap_totals(base)
-            if self.is_continuous:
-                rows = micro_bin_rows(base, "__x", *class_counts())
-            else:
-                rows = _top_k_values(base)
-            vals = sorted(rows, key=lambda r: r["__x"])
+        if rows is not None:
+            return self._fit_from_stats(*_row_stats(rows))
+        total0, total1, null_c0, null_c1 = _over_cap_totals(base)
+        if self.is_continuous:
+            rows = micro_bin_rows(base, "__x", *class_counts())
         else:
-            null_c0 = sum(r["c0"] for r in rows if r["__x"] is None)
-            null_c1 = sum(r["c1"] for r in rows if r["__x"] is None)
-            vals = sorted(
-                [r for r in rows if r["__x"] is not None], key=lambda r: r["__x"]
-            )
-            total0 = sum(r["c0"] for r in rows)
-            total1 = sum(r["c1"] for r in rows)
+            rows = _top_k_values(base)
+        vals = sorted(rows, key=lambda r: r["__x"])
         return self._fit_from_stats(vals, null_c0, null_c1, total0, total1)
 
     def _fit_from_stats(
@@ -164,8 +144,10 @@ class SingleWOETransformer:
         total0: float, total1: float,
     ) -> "SingleWOETransformer":
         """Driver math over aggregated (__x, c0, c1) rows (sorted by
-        __x, nulls removed) — shared by the per-feature fit and
-        WOETransformer's single-pass melted fit."""
+        __x, nulls removed): edges from ``binning.fit_thresholds``, then
+        per-bin counts, WOE and IV. Shared by the per-feature fit,
+        WOETransformer's single-pass melted fit and ``metrics.iv_all``'s
+        continuous IV."""
         total = total0 + total1
 
         if not vals:
@@ -190,7 +172,7 @@ class SingleWOETransformer:
         c0 = np.array([float(r["c0"]) for r in vals])
         c1 = np.array([float(r["c1"]) for r in vals])
 
-        thr = _fit_thresholds(
+        thr = fit_thresholds(
             codes, c0, c1, self.cut_method, self.n_bins,
             n_total=int(round(total)),
         )
@@ -294,12 +276,10 @@ class WOETransformer:
         self.woe_df: pd.DataFrame | None = None
 
     def fit(self, df: DataFrame, target: str):
-        """Single-pass melted fit: explode every feature into
-        (feature, value) structs and aggregate class counts with ONE
+        """Single-pass melted fit (``binning.melted_class_counts``): ONE
         groupBy(feature, value) over ONE source scan — at F features on
         100 TB this replaces F full scans (the reference's Pool per
-        feature, transformer.py:268; SURVEY §3.1 names this plan). The
-        map-side combine bounds the shuffle at partitions x Σ distinct.
+        feature, transformer.py:268; SURVEY §3.1 names this plan).
         Falls back to per-feature fits (concurrent Spark jobs, each
         with its own driver cap) if the combined distinct count exceeds
         the driver cap."""
@@ -309,41 +289,16 @@ class WOETransformer:
                 raise ValueError(f"{f_} not in df")
         self.features = feats
 
-        y = F.col(target).cast("double")
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(f_).alias("f"), _normalize_str(F.col(f_)).alias("x")
-                )
-                for f_ in feats
-            ]
+        by_feat = melted_class_counts(
+            df, feats, target, lambda f_: {"__x": _normalize_str(F.col(f_))}
         )
-        agg = (
-            df.select(F.explode(pairs).alias("p"), y.alias("__y"))
-            .groupBy(F.col("p.f").alias("__f"), F.col("p.x").alias("__x"))
-            .agg(*class_counts())
-        )
-        rows = collect_capped(agg)
-        if rows is None:
+        if by_feat is None:
             return self._fit_per_feature(df, target, feats)
-
-        by_feat: dict[str, list] = {f_: [] for f_ in feats}
-        for r in rows:
-            by_feat[r["__f"]].append(r)
         for f_ in feats:
-            fr = by_feat[f_]
-            null_c0 = sum(r["c0"] for r in fr if r["__x"] is None)
-            null_c1 = sum(r["c1"] for r in fr if r["__x"] is None)
-            vals = sorted(
-                [r for r in fr if r["__x"] is not None], key=lambda r: r["__x"]
+            t = SingleWOETransformer(
+                self.cut_method, self.n_bins, is_continuous=False, var_name=f_
             )
-            t = SingleWOETransformer(self.cut_method, self.n_bins, is_continuous=False)
-            t.var_name = f_
-            t._fit_from_stats(
-                vals, null_c0, null_c1,
-                sum(r["c0"] for r in fr), sum(r["c1"] for r in fr),
-            )
-            self.transformers[f_] = t
+            self.transformers[f_] = t._fit_from_stats(*_row_stats(by_feat[f_]))
         self.woe_df = pd.concat([self.transformers[f_].woe_df for f_ in feats])
         return self
 

@@ -1,7 +1,9 @@
 """Cache lifecycle: no registry query leaves a Dataset in Spark's
 CacheManager, ``functions.utils.persisted`` releases what it kept even
 when its body raises, and no module outside ``functions/utils.py``
-calls ``.persist(`` or ``.cache()`` itself.
+calls ``.persist(`` or ``.cache()`` itself. A second lint pins the
+binning family's one cut dispatch, ``binning.fit_thresholds``, as the
+only caller of the driver_fit cut functions.
 
 Tables only a function reads go through ``persisted()``; tables a
 returned lazy plan still reads are eager local checkpoints, which make
@@ -10,6 +12,7 @@ leaked per call grows a long-lived session without bound."""
 
 from __future__ import annotations
 
+import ast
 import io
 import os
 import tokenize
@@ -146,4 +149,51 @@ def test_no_cache_call_outside_persisted():
                 ]
     assert not found, (
         "persist/cache outside functions.utils.persisted: " + ", ".join(found)
+    )
+
+
+DRIVER_CUTS = {
+    "cart_thresholds", "lgb_thresholds", "chimerge_edges",
+    "quantile_edges_weighted", "step_edges_weighted",
+}
+
+
+def _cut_refs(path: str) -> list[tuple[int, str | None]]:
+    """(line, enclosing top-level function, or "import", or None) of
+    every code reference to a driver_fit cut function in ``path``."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    refs = []
+    for top in tree.body:
+        owner = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+        for node in ast.walk(top):
+            name = (
+                node.id if isinstance(node, ast.Name)
+                else node.attr if isinstance(node, ast.Attribute) else None
+            )
+            if name in DRIVER_CUTS:
+                refs.append((node.lineno, owner))
+            elif isinstance(node, ast.ImportFrom) and DRIVER_CUTS & {
+                a.name for a in node.names
+            }:
+                refs.append((node.lineno, "import"))
+    return refs
+
+
+def test_driver_cuts_called_only_by_fit_thresholds():
+    dispatch = os.path.join(PKG, "operators", "binning.py")
+    skip = os.path.join(PKG, "functions", "driver_fit.py")
+    found = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            path = os.path.join(root, f)
+            if not f.endswith(".py") or path == skip:
+                continue
+            found += [
+                f"{os.path.relpath(path, PKG)}:{n}"
+                for n, owner in _cut_refs(path)
+                if not (path == dispatch and owner in ("fit_thresholds", "import"))
+            ]
+    assert not found, (
+        "driver_fit cut called outside binning.fit_thresholds: " + ", ".join(found)
     )

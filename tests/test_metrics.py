@@ -58,6 +58,39 @@ def test_iv_all_golden(spark, iv_df):
     assert abs(got2.loc["x2", "iv"] - 1.398188) < 1e-6
 
 
+@pytest.fixture(scope="module")
+def nulls_df(spark):
+    """Two continuous features with NULLs and repeated values."""
+    rng = np.random.RandomState(11)
+    rows = []
+    for _ in range(400):
+        x = float(np.round(rng.normal(), 1))
+        z = float(np.round(rng.exponential(2.0), 2))
+        y = int(rng.rand() < 1.0 / (1.0 + np.exp(-x)))
+        rows.append((None if rng.rand() < 0.1 else x, None if rng.rand() < 0.05 else z, y))
+    return spark.createDataFrame(rows, "x double, z double, target int")
+
+
+@pytest.mark.parametrize("cap", [None, 5], ids=["inside_cap", "above_cap"])
+@pytest.mark.parametrize("method", ["dt", "lgb", "chi", "step", "quantile"])
+def test_iv_all_continuous_matches_iv_and_woe(nulls_df, tiny_driver_cap, method, cap):
+    """iv_all's continuous IV, per-feature iv() and the WOE fit's var_iv
+    bin the same way; only summation order may differ."""
+    import contextlib
+
+    from didtool_spark.operators.woe import SingleWOETransformer
+
+    scope = tiny_driver_cap(cap) if cap else contextlib.nullcontext()
+    with scope:
+        got = iv_all(nulls_df, ["x", "z"], "target", cut_method=method, n_bins=6)
+        for f_ in ["x", "z"]:
+            one = iv(nulls_df, f_, "target", cut_method=method, n_bins=6)
+            woe = SingleWOETransformer(method, 6).fit(nulls_df, f_, "target").var_iv
+            assert one > 0
+            assert abs(got.loc[f_, "iv"] - one) < 1e-12, (f_, got.loc[f_, "iv"], one)
+            assert abs(woe - one) < 1e-12, (f_, woe, one)
+
+
 @needs_samples
 def test_psi_all_goldens(spark):
     pdf = pd.read_csv(SAMPLES)
