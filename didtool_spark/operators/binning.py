@@ -66,10 +66,12 @@ def _clean(df: DataFrame, col: str) -> Column:
 
 
 def class_counts() -> list[Column]:
-    """Per-group (count y=0, count y=1) over the 0/1 label ``__y``."""
+    """Per-group (count y=0, count y=1) over the 0/1 label ``__y``.
+    NULL labels count in neither, so a group whose labels are all NULL
+    gets (0, 0), as its NULL rows would in a mixed group."""
     return [
-        F.sum(F.lit(1.0) - F.col("__y")).alias("c0"),
-        F.sum("__y").alias("c1"),
+        F.coalesce(F.sum(F.lit(1.0) - F.col("__y")), F.lit(0.0)).alias("c0"),
+        F.coalesce(F.sum("__y"), F.lit(0.0)).alias("c1"),
     ]
 
 

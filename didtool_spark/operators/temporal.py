@@ -521,13 +521,17 @@ def with_rolling(
 def _rolling_step(df: DataFrame, specs: list[tuple[str, str, int]], upper: int) -> _Step:
     """with_rolling's bucketed rows-mode step: the in-bucket window
     aggregate, combined on each bucket's first k rows with the same
-    aggregate over the last k - rn + 1 rows of ``__prefix``."""
+    aggregate over the last k - rn + 1 rows of ``__prefix``. Rows past
+    the first k see an empty slice, so the prefix array functions are
+    evaluated only where ``__rn <= k`` and read as 0 (or, for
+    ``least``/``greatest``, as a skipped NULL) elsewhere."""
 
     def out(wb: WindowSpec) -> dict[str, Column]:
         res = {}
         for col, agg, k in specs:
             # the prefix rows inside this row's frame: the last
             # m = k - rn + 1 (none once rn > k)
+            near = F.col("__rn") <= F.lit(k)
             m = F.lit(k) - F.col("__rn") + 1
             sl = F.slice(
                 F.col("__prefix"),
@@ -536,32 +540,38 @@ def _rolling_step(df: DataFrame, specs: list[tuple[str, str, int]], upper: int) 
             )
             w = wb.rowsBetween(-k, upper)
             nn = F.filter(F.transform(sl, _prefix_vals(col)), _notnull())
-            total_cnt = F.count(col).over(w) + F.size(nn).cast("long")
+            total_cnt = F.count(col).over(w) + F.when(
+                near, F.size(nn).cast("long")
+            ).otherwise(F.lit(0).cast("long"))
             name = f"{col}_{agg}_last{k}"
             if agg == "count":
                 res[name] = total_cnt
             elif agg in ("min", "max"):
                 res[name] = (
-                    F.least(F.min(col).over(w), F.array_min(nn)) if agg == "min"
-                    else F.greatest(F.max(col).over(w), F.array_max(nn))
+                    F.least(F.min(col).over(w), F.when(near, F.array_min(nn))) if agg == "min"
+                    else F.greatest(F.max(col).over(w), F.when(near, F.array_max(nn)))
                 )
             elif agg in ("sum", "avg"):
                 cast_t = "long" if _is_integral(df, col) else "double"
                 zero = F.lit(0).cast(cast_t)
                 total_sum = F.coalesce(
                     F.sum(F.col(col).cast(cast_t)).over(w), zero
-                ) + F.aggregate(nn, zero, _sum_merge(cast_t))
+                ) + F.when(near, F.aggregate(nn, zero, _sum_merge(cast_t))).otherwise(zero)
                 if agg == "avg":
                     total_sum = total_sum.cast("double") / total_cnt.cast("double")
                 res[name] = F.when(total_cnt > 0, total_sum)
             elif agg == "stddev":
                 s1 = F.coalesce(
                     F.sum(F.col(col).cast("double")).over(w), F.lit(0.0)
-                ) + F.aggregate(nn, F.lit(0.0), _sum_merge("double"))
+                ) + F.when(
+                    near, F.aggregate(nn, F.lit(0.0), _sum_merge("double"))
+                ).otherwise(F.lit(0.0))
                 s2 = F.coalesce(
                     F.sum(F.col(col).cast("double") * F.col(col).cast("double")).over(w),
                     F.lit(0.0),
-                ) + F.aggregate(nn, F.lit(0.0), _sumsq_merge())
+                ) + F.when(
+                    near, F.aggregate(nn, F.lit(0.0), _sumsq_merge())
+                ).otherwise(F.lit(0.0))
                 n_d = total_cnt.cast("double")
                 var = (s2 - s1 * s1 / n_d) / (n_d - F.lit(1.0))
                 res[name] = F.when(total_cnt >= 2, F.sqrt(F.greatest(var, F.lit(0.0))))

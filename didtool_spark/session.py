@@ -14,6 +14,30 @@ given we *attempt* to register an Iceberg catalog (works unmodified on
 a cluster whose runtime has iceberg-spark-runtime on the classpath);
 otherwise the engine's checkpoint layer (didtool_spark.plans.checkpoint)
 provides equivalent snapshot/manifest semantics over parquet.
+
+Codegen class cache (``spark.sql.codegen.cache.maxEntries``, static,
+one LRU per JVM): Spark's default of 100 generated classes is smaller
+than one pass of the engine's plans, so a repeated pass (each
+``CheckpointedRun`` bucket, each registry run) compiled its classes
+again instead of reusing them. The cap is sized from the classes that
+one pass compiles with an unbounded cache (the count of
+``CodegenMetrics.METRIC_COMPILATION_TIME``), on a 4-core host at
+``local[2]``:
+
+- one perfbench ``registry_mix`` pass: 99, and 112 over three passes,
+  with origin capture (below) on; 103, and 103 over three, with it off;
+- one bucketed ``skewed_backfill`` pass plus its window reference:
+  132 + 54 = 186;
+- one 140-query ``scripts/check_oracle.py`` run at sf0.001: 2007.
+
+``CODEGEN_CACHE_ENTRIES`` covers the largest with about 2x headroom.
+
+PySpark's per-call origin capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off: with it on,
+every ``F.*``/``Column`` call made about three extra py4j round trips
+to record its Python call site. The cost of turning it off: an
+analysis error no longer names the Python line that built the failing
+expression.
 """
 
 from __future__ import annotations
@@ -23,6 +47,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_LOCAL_CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 4000
 
 
 def get_spark(
@@ -53,6 +78,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if not SparkSession.getActiveSession():
         builder = builder.master(f"local[{cores}]")

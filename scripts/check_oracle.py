@@ -108,6 +108,8 @@ def main() -> int:
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     cache = spark._jsparkSession.sharedState().cacheManager()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled0 = codegen.METRIC_COMPILATION_TIME().getCount()
     failures = 0
     leaks: list[str] = []
     for name, fn in qs.items():
@@ -153,6 +155,10 @@ def main() -> int:
                 print(f"   spark cols: {list(g.columns)}\n   duck  cols: {list(e.columns)}")
         else:
             print(f"{name:28s} {status} rows={len(g)}")
+    # the run's codegen working set: the classes compiled is a lower
+    # bound on the spark.sql.codegen.cache.maxEntries it needs
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled0
+    print(f"{compiled} generated classes compiled")
     print(f"{len(leaks)} queries leave a cache behind"
           + (f": {', '.join(leaks)}" if leaks else ""))
     return 1 if failures or leaks else 0

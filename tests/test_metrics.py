@@ -91,6 +91,26 @@ def test_iv_all_continuous_matches_iv_and_woe(nulls_df, tiny_driver_cap, method,
             assert abs(woe - one) < 1e-12, (f_, woe, one)
 
 
+def test_all_null_label_value_counts_in_neither_class(spark):
+    """x=3's only label is NULL: it counts as (0, 0), as a NULL label in
+    a mixed group does, instead of making the fits raise TypeError."""
+    from didtool_spark.operators.woe import SingleWOETransformer
+
+    df = spark.createDataFrame(
+        list(zip([1.0, 1.0, 2.0, 2.0, 3.0, 4.0, 5.0], [0, 1, 1, 0, None, 1, 0])),
+        "x double, target int",
+    )
+    no_null = df.where("target IS NOT NULL")
+    for cont in (True, False):
+        assert iv(df, "x", "target", cont, n_bins=3) == pytest.approx(
+            iv(no_null, "x", "target", cont, n_bins=3), abs=1e-12
+        )
+    got = iv_all(df, ["x"], "target", n_bins=3)
+    assert np.isfinite(got.loc["x", "iv"])
+    woe = SingleWOETransformer("dt", 3).fit(df, "x", "target")
+    assert np.isfinite(woe.var_iv)
+
+
 @needs_samples
 def test_psi_all_goldens(spark):
     pdf = pd.read_csv(SAMPLES)
